@@ -16,6 +16,7 @@ tiny maps) or as a broadcast-join DataFrame (lookup datasource).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 from typing import Any
@@ -95,11 +96,15 @@ class Catalog:
         # (the segment-timeline interval pruning analog — Catalyst cannot
         # infer __dt from __time on its own)
         self._partitioning: dict[str, tuple[str, str]] = {}
-        # table -> registration serial (bumped per register_table call):
-        # the snapshot identity of DataFrame-registered tables for the
-        # per-interval result cache (path-backed tables fingerprint
-        # their files instead)
+        # table -> registration serial (bumped per register_table and
+        # drop_table call): the whole-table snapshot identity that
+        # result-cache keys name
         self._reg_serial: dict[str, int] = {}
+        # path-backed table -> the files its registered DataFrame reads
+        # (inputFiles(), recorded once when the DataFrame is built): lets
+        # fingerprint() narrow a partitioned table to the partitions a
+        # query touches
+        self._files: dict[str, tuple[str, ...]] = {}
         # dropped-but-restorable datasources: name -> (path,
         # time_column, partitioning) — the metadata-store "unused
         # segments" analog behind restore_table()
@@ -111,11 +116,28 @@ class Catalog:
     def partitioning(self, name: str) -> tuple[str, str] | None:
         return self._partitioning.get(name)
 
-    def reg_serial(self, name: str) -> int:
-        return self._reg_serial.get(name, 0)
-
     def source_path(self, name: str) -> str | None:
         return self._paths.get(name)
+
+    def fingerprint(self, name: str,
+                    part_ranges: list[tuple[str, str]] | None = None) -> str:
+        """Identity of the data a query over `name` reads: the
+        registration serial (a registered DataFrame is a fixed file
+        snapshot), or, for a partitioned path-backed table, a hash of
+        its registered files within the inclusive `part_ranges`."""
+        part = self._partitioning.get(name)
+        if part and part_ranges is not None:
+            self.table(name)  # a pending table records its files here
+            files = self._files.get(name)
+            if files is not None:
+                marker = f"/{part[0]}="
+                touched = [
+                    f for f in files if marker in f and any(
+                        lo <= f.split(marker, 1)[1].split("/", 1)[0] <= hi
+                        for lo, hi in part_ranges)]
+                return hashlib.blake2b("\n".join(touched).encode(),
+                                       digest_size=16).hexdigest()
+        return f"reg:{self._reg_serial.get(name, 0)}"
 
     def register_dir(self, data_dir: str,
                      time_columns: dict[str, str] | None = None) -> None:
@@ -137,6 +159,9 @@ class Catalog:
         # the Druid-visible type (InformationSchema.java DATA_TYPE).
         # A dict maps column -> DATA_TYPE ('COMPLEX<json>' or 'ARRAY'
         # for variant-element arrays); a list means COMPLEX<json>.
+        # the file snapshot is set AFTER _tables below: a reader whose
+        # cache key names the new files also reads the new DataFrame
+        self._files.pop(name, None)
         if json_columns is not None:
             self._json_cols[name] = (
                 dict(json_columns) if isinstance(json_columns, dict)
@@ -161,6 +186,8 @@ class Catalog:
                 df = df.withColumn("__time", F.col(time_column))
             self._pending.pop(name, None)
             self._tables[name] = df
+            if source_path:
+                self._files[name] = tuple(sorted(df.inputFiles()))
         self._reg_serial[name] = self._reg_serial.get(name, 0) + 1
         self.version += 1
 
@@ -197,8 +224,9 @@ class Catalog:
         if (time_column and time_column in df.columns
                 and "__time" not in df.columns):
             df = df.withColumn("__time", F.col(time_column))
-        self._pending.pop(name, None)
         self._tables[name] = df
+        self._files[name] = tuple(sorted(df.inputFiles()))
+        self._pending.pop(name, None)
         return df
 
     def schema(self, name: str):
@@ -265,7 +293,9 @@ class Catalog:
         self._pending.pop(name, None)
         self._paths.pop(name, None)
         self._partitioning.pop(name, None)
+        self._files.pop(name, None)
         if known:
+            self._reg_serial[name] = self._reg_serial.get(name, 0) + 1
             self.version += 1
             # Also drop the SQL temp views engine.sql created for this
             # name (both the direct view and the mangled alias for

@@ -18,6 +18,9 @@ All stages are built-in Column expressions; no Python in the data path.
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -165,7 +168,7 @@ def _shingles_sql(toks_sql: str, k: int) -> str:
     filters empties), so concat's NULL propagation can't differ from
     array_join's NULL-skipping; the produced strings are byte-identical
     (proven exceptAll = 0 at 50k docs) and the shingle stage measured
-    1.15 -> 0.59 s at 50k docs (tools/exp_shingle_ab.py). The
+    1.15 -> 0.59 s at 50k docs (OPTIMIZATION_r14.md). The
     greatest(.., 0) guard was redundant under the size >= k branch."""
     gram = ", ' ', ".join(
         f"element_at({toks_sql}, i + {j + 1})" for j in range(k))
@@ -232,7 +235,7 @@ def _ordered_pairs(df: DataFrame, *cols: str) -> DataFrame:
     executing the join chain twice — the double-execution the r13 form
     was built to avoid), and the sort is distributed. Both branches
     yield the same total order (sort keys are unique per row; proven
-    ordered-collect-equal at sf1, tools/exp_sort_tail_r14.py, where
+    ordered-collect-equal at sf1, OPTIMIZATION_r14.md, where
     the two also time within noise of each other: best 4.03 vs
     4.42 s). At bench scales the input sits far below the threshold —
     plan and timing byte-identical to r13."""
@@ -259,7 +262,10 @@ def _nonblank(text_col: str) -> Column:
     return F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
 
 
-_SIG_CACHE_REGISTRY: "object" = None
+# session -> {key: pinned frame}; the lock makes _persist_scoped's
+# read-modify-write atomic against the prewarm thread and server threads
+_SIG_CACHE_REGISTRY = weakref.WeakKeyDictionary()
+_SIG_CACHE_LOCK = threading.Lock()
 
 
 def _persist_scoped(df: DataFrame, key: str) -> DataFrame:
@@ -273,29 +279,22 @@ def _persist_scoped(df: DataFrame, key: str) -> DataFrame:
     (session, operator): when a new call's plan differs from the
     previous one, the previous cache is dropped. Same-plan calls keep
     the shared cache entry, so bench/oracle behavior is unchanged."""
-    global _SIG_CACHE_REGISTRY
-    if _SIG_CACHE_REGISTRY is None:
-        import weakref
-        _SIG_CACHE_REGISTRY = weakref.WeakKeyDictionary()
-    spark = df.sparkSession
-    reg = _SIG_CACHE_REGISTRY.get(spark)
-    if reg is None:
-        reg = {}
-        _SIG_CACHE_REGISTRY[spark] = reg
-    prev = reg.get(key)
-    out = df.persist()
-    if prev is not None:
-        try:
-            same = prev._jdf.queryExecution().analyzed().sameResult(
-                out._jdf.queryExecution().analyzed())
-        except Exception:
-            same = False
-        if not same:
+    with _SIG_CACHE_LOCK:
+        reg = _SIG_CACHE_REGISTRY.setdefault(df.sparkSession, {})
+        prev = reg.get(key)
+        out = df.persist()
+        if prev is not None:
             try:
-                prev.unpersist()
+                same = prev._jdf.queryExecution().analyzed().sameResult(
+                    out._jdf.queryExecution().analyzed())
             except Exception:
-                pass
-    reg[key] = out
+                same = False
+            if not same:
+                try:
+                    prev.unpersist()
+                except Exception:
+                    pass
+        reg[key] = out
     return out
 
 
@@ -480,7 +479,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # candidate set is IDENTICAL by construction (proven exceptAll = 0
     # at 50k docs) while skipping num_hashes long->string casts plus
     # `bands` array_joins and xxhash64 calls per document — candidate
-    # stage 1.63 -> 1.52 s at 50k docs (tools/exp_slice_band.py). The
+    # stage 1.63 -> 1.52 s at 50k docs (OPTIMIZATION_r14.md). The
     # wider shuffle key (8*rows_per_band vs 8 bytes) is bounded by
     # bands*rows = num_hashes longs per doc, the same as the signature
     # itself.

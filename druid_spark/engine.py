@@ -57,6 +57,54 @@ _SQL_VIEWS_STAMP: "_weakref.WeakKeyDictionary[SparkSession, tuple[int, int]]" \
 _SQL_LOOKUPS_STAMP: \
     "_weakref.WeakKeyDictionary[SparkSession, tuple[int, int]]" \
     = _weakref.WeakKeyDictionary()
+# serializes sql()'s temp-view refresh: concurrent refreshes could
+# leave an older refresh's views under a newer stamp
+_SQL_VIEWS_LOCK = _threading.Lock()
+
+# Cache capacities in entries. A result over RESULT_CACHE_MAX_ROWS rows
+# is served uncached, as with Druid's resultLevelCacheLimit, so the
+# driver stays bounded.
+PLAN_CACHE_ENTRIES = 64
+RESULT_CACHE_ENTRIES = 32
+RESULT_CACHE_MAX_ROWS = 10_000
+
+
+class LockedLRU:
+    """A fixed-capacity LRU map behind one lock, with hit and miss
+    counts; server threads share it. A value is built outside the lock,
+    so two threads missing on one key may both build it."""
+
+    def __init__(self, capacity: int):
+        self.capacity = capacity
+        self.hits = self.misses = 0
+        self._entries: "OrderedDict[str, Any]" = OrderedDict()
+        self._lock = _threading.Lock()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def get_or_build(self, key: str,
+                     build: Callable[[], tuple[Any, bool]]) -> Any:
+        """The value under `key`; on a miss, build() returns
+        (value, keep) and the value is stored only when keep is true."""
+        with self._lock:
+            if key in self._entries:
+                self._entries.move_to_end(key)
+                self.hits += 1
+                return self._entries[key]
+            self.misses += 1
+        value, keep = build()
+        if keep:
+            with self._lock:
+                self._entries[key] = value
+                self._entries.move_to_end(key)
+                if len(self._entries) > self.capacity:
+                    self._entries.popitem(last=False)
+        return value
+
+    def clear(self) -> None:
+        with self._lock:
+            self._entries.clear()
 
 
 # TABLE(APPEND(...)) merges column types with Calcite's
@@ -183,25 +231,16 @@ class DruidSparkEngine:
         self.sketch_default_nominal_entries = (
             None if exact_approx else sketch_default_nominal_entries)
         self._serial = next(_ENGINE_SERIAL)
-        self._result_cache: dict[str, DataFrame] = {}
-        self._result_cache_order: list[str] = []
-        self.result_cache_size = 32
-        self.cache_misses = 0  # recompute counter (tests/observability)
-        # Prepared-plan cache: ANALYZED DataFrames keyed on the
-        # rewritten SQL / canonical native JSON plus per-table
-        # fingerprints. Always on — it pins no data (plans are lazy;
-        # every execution still reads current partitions of the SAME
-        # file set), it only skips Spark's parse/analyze (~65 of the
-        # ~95 ms per-query floor, SCALE.md r6 profiling) for repeated
-        # dashboard shapes. The reference amortizes the same work via
-        # Avatica prepared statements (sql/.../avatica/DruidMeta.java)
-        # and broker caches. Appends change the fingerprint, so stale
-        # plans (whose analysis snapshot the old file listing) miss.
-        self._plan_cache: "OrderedDict[str, DataFrame]" = OrderedDict()
-        self._plan_cache_lock = _threading.Lock()
-        self.plan_cache_size = 64
-        self.plan_cache_hits = 0
-        self.plan_cache_misses = 0  # recompute counter (tests)
+        # Prepared plans: ANALYZED DataFrames keyed on the statement plus
+        # the catalog version, which every registration bumps. A hit skips
+        # Spark's parse/analyze (~65 of ~95 ms per query, SCALE.md r6),
+        # like Avatica prepared statements (sql/.../avatica/DruidMeta.java).
+        self._plan_cache = LockedLRU(PLAN_CACHE_ENTRIES)
+        # Results (context.useResultCache / SET useResultCache) as local
+        # relations, so a hit runs no Spark job. Keyed on the tables'
+        # Catalog.fingerprint, not the catalog version, so an append to
+        # one interval leaves cached queries over others valid.
+        self._result_cache = LockedLRU(RESULT_CACHE_ENTRIES)
         # task log feeding the sys.tasks view (SystemSchema TASKS
         # signature, reduced): async SQL statements (server.py) and
         # SQL-ingest tasks record themselves here
@@ -224,16 +263,14 @@ class DruidSparkEngine:
     # -------------------------------------------------------- public API
     def query(self, q: dict[str, Any]) -> DataFrame:
         """Compile one native-JSON query. context.useResultCache caches
-        the materialized result DataFrame keyed by the canonical query
-        JSON plus a PER-INTERVAL table fingerprint — the analog of the
-        reference's segment-level result cache
-        (server/.../client/CachingClusteredClient.java:281 caches per
-        segment so an append invalidates only the new intervals; the
-        whole-result layer is ResultLevelCachingQueryRunner.java:51).
-        For time-partitioned warehouse tables the fingerprint covers
-        only the partitions the query's intervals touch, so a streaming
-        append to one day leaves cached queries over other days valid;
-        any change to a touched partition invalidates. LRU-bounded."""
+        the collected result keyed by the canonical query JSON plus a
+        PER-INTERVAL table fingerprint — the analog of the reference's
+        segment-level result cache (server/.../client/
+        CachingClusteredClient.java:281 caches per segment so an append
+        invalidates only the new intervals; the whole-result layer is
+        ResultLevelCachingQueryRunner.java:51). For time-partitioned
+        tables it covers only the registered files in the partitions the
+        query's intervals touch: an append to another day keeps it."""
         # useCache/populateCache are the reference's segment-cache keys
         # (QueryContexts) — this engine's per-interval fingerprint cache
         # plays that role, so they alias useResultCache
@@ -243,50 +280,36 @@ class DruidSparkEngine:
                              and _ctx.get("populateCache", True)))
         import json as _json
         canon = _json.dumps(q, sort_keys=True, default=str)
-        if use_cache:
-            key = canon + "||" + self._tables_fingerprint(q)
-            if key in self._result_cache:
-                return self._result_cache[key]
-            self.cache_misses += 1
-        out = self._plan_cached(
-            lambda: self._dispatch(q),
-            lambda: (f"native||cv={self.catalog.version}||" + canon
-                     + "||" + self._tables_fingerprint(q)))
-        if use_cache:
-            out = self._cache_put(key, out)
-        return out
+        plan_key = f"native||cv={self.catalog.version}||{canon}"
 
-    def _plan_cached(self, compile_fn: Callable[[], DataFrame],
-                     key_fn: Callable[[], str]) -> DataFrame:
-        """Prepared-plan lookup (see __init__): return the cached
-        analyzed DataFrame for this statement + table state, else
-        compile and remember it. LRU-bounded; plans hold no data."""
+        def plan() -> DataFrame:
+            return self._plan_cache.get_or_build(
+                plan_key, lambda: (self._dispatch(q), True))
+
+        if not use_cache:
+            return plan()
         try:
-            key = key_fn()
+            fp = self._tables_fingerprint(q)
         except Exception:
-            return compile_fn()  # unfingerprintable → compile fresh
-        with self._plan_cache_lock:  # threaded server shares the cache
-            hit = self._plan_cache.get(key)
-            if hit is not None:
-                self._plan_cache.move_to_end(key)
-                self.plan_cache_hits += 1
-                return hit
-            self.plan_cache_misses += 1
-        out = compile_fn()  # analyze OUTSIDE the lock (can take ~65 ms)
-        with self._plan_cache_lock:
-            self._plan_cache[key] = out
-            if len(self._plan_cache) > self.plan_cache_size:
-                self._plan_cache.popitem(last=False)
-        return out
+            return plan()  # unfingerprintable → serve uncached
+        return self._result_cache.get_or_build(
+            f"{canon}||{fp}", lambda: self._local_result(plan()))
 
-    def _cache_put(self, key: str, df: DataFrame) -> DataFrame:
-        df = df.persist()
-        self._result_cache[key] = df
-        self._result_cache_order.append(key)
-        if len(self._result_cache_order) > self.result_cache_size:
-            old = self._result_cache_order.pop(0)
-            self._result_cache.pop(old).unpersist()
-        return df
+    def _local_result(self, df: DataFrame) -> tuple[DataFrame, bool]:
+        """(result, cacheable): df's rows collected JVM-side into a local
+        relation, which serves without a Spark job (PySpark's
+        createDataFrame(list) would parallelize); over the row cap, df."""
+        jdf = df._jdf
+        rows = jdf.limit(RESULT_CACHE_MAX_ROWS + 1).collectAsList()
+        if rows.size() > RESULT_CACHE_MAX_ROWS:
+            return df, False
+        return DataFrame(self.spark._jsparkSession.createDataFrame(
+            rows, jdf.schema()), self.spark), True
+
+    # the four cache lookups (native/SQL x plan/result) count here
+    plan_cache_hits = property(lambda self: self._plan_cache.hits)
+    plan_cache_misses = property(lambda self: self._plan_cache.misses)
+    cache_misses = property(lambda self: self._result_cache.misses)
 
     def _tables_fingerprint(self, q: dict) -> str:
         """One fingerprint per table the query touches, interval-aware
@@ -344,9 +367,13 @@ class DruidSparkEngine:
                 per[n] = ivs
             elif per[n] != ivs:
                 per[n] = None  # conflicting scopes → whole table
-        return ";".join(
-            f"{n}={self._table_fingerprint(n, per.get(n))}"
-            for n in sorted(set(names)))
+        out = []
+        for n in sorted(set(names)):
+            part, ivs = self.catalog.partitioning(n), per.get(n)
+            ranges = (self._interval_part_ranges(ivs, part[1])
+                      if part and ivs else None)
+            out.append(f"{n}={self.catalog.fingerprint(n, ranges)}")
+        return ";".join(out)
 
     @staticmethod
     def _filter_time_intervals(f) -> list | None:
@@ -365,48 +392,6 @@ class DruidSparkEngine:
                 if ivs:
                     return ivs
         return None
-
-    def _table_fingerprint(self, name: str, intervals) -> str:
-        """Fingerprint of the table state observable to a query over
-        `intervals`: path-backed partitioned tables hash only the
-        overlapping partition directories' file stats (append to
-        another interval → unchanged); non-partitioned paths hash the
-        whole file set; DataFrame-registered tables key on their
-        registration serial (snapshots never mutate)."""
-        import os as _os
-        cat = self.catalog
-        path = cat.source_path(name)
-        if not path or not _os.path.exists(path):
-            return f"reg:{cat.reg_serial(name)}"
-        if _os.path.isfile(path):
-            st = _os.stat(path)
-            return f"file:{st.st_mtime_ns}:{st.st_size}"
-
-        def dirstat(d: str) -> tuple[int, int, int]:
-            n = sz = mt = 0
-            for root, _, fns in _os.walk(d):
-                for f in fns:
-                    if f.startswith(("_", ".")):
-                        continue
-                    st = _os.stat(_os.path.join(root, f))
-                    n += 1
-                    sz += st.st_size
-                    mt = max(mt, st.st_mtime_ns)
-            return n, sz, mt
-
-        part = cat.partitioning(name)
-        if part and intervals:
-            col, fmt = part
-            ranges = self._interval_part_ranges(intervals, fmt)
-            ents = []
-            for d in sorted(_os.listdir(path)):
-                if not d.startswith(col + "="):
-                    continue
-                val = d.split("=", 1)[1]
-                if any(lo <= val <= hi for lo, hi in ranges):
-                    ents.append((d, dirstat(_os.path.join(path, d))))
-            return f"parts:{ranges}:{ents}"
-        return f"dir:{dirstat(path)}"
 
     @staticmethod
     def _interval_part_ranges(intervals, fmt: str) \
@@ -429,24 +414,11 @@ class DruidSparkEngine:
             out.append((lo, hi))
         return out
 
-    def clear_cache(self) -> None:
-        """Unpersist and drop every cached result (context.useResultCache)."""
-        for key in list(self._result_cache):
-            df = self._result_cache.pop(key, None)
-            if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        self._result_cache_order.clear()
-
     def close(self) -> None:
-        """Release engine-held session resources. The engine does not own
-        the SparkSession (it may be the caller's) and never stops it —
-        but discarding an engine with a warm result cache would otherwise
-        strand up to result_cache_size persisted DataFrames in the
-        session until it dies."""
-        self.clear_cache()
+        """Drop the cached plans and results. The engine does not own
+        the SparkSession (it may be the caller's) and never stops it."""
+        self._plan_cache.clear()
+        self._result_cache.clear()
 
     def __enter__(self) -> "DruidSparkEngine":
         return self
@@ -569,33 +541,39 @@ class DruidSparkEngine:
             register_druid_functions(self.spark)
             self._fns_registered = True
         self._register_sql_lookups()
+        # Key on table state read BEFORE the views refresh: a racing
+        # registration then gives an older key newer data, never reverse.
+        cache_result = set_ctx.get("useResultCache", "").lower() == "true"
+        fps = ({n: self.catalog.fingerprint(n) for n in self.catalog.tables()}
+               if cache_result else None)
         # Re-create temp views only when the catalog changed OR another
         # engine on the same session registered views last (several
         # engines — e.g. one per sf_dir — share the view namespace).
         stamp = (self._serial, self.catalog.version)
-        if _SQL_VIEWS_STAMP.get(self.spark) != stamp:
-            for name in self.catalog.tables():
-                try:
-                    df = self.catalog.table(name)
-                except Exception:
-                    # a bad registration (missing/corrupt path) must
-                    # not take down SQL over every OTHER datasource;
-                    # querying the bad table itself still surfaces the
-                    # real error via catalog.table()
-                    continue
-                if _IDENT_RE.fullmatch(name):
-                    df.createOrReplaceTempView(name)
-                else:
-                    # Druid datasource names are arbitrary strings
-                    # ('web-events'); createOrReplaceTempView rejects
-                    # non-identifiers, but backticked DDL over a mangled
-                    # alias makes them addressable as `name` in SQL
-                    mangled = "__ds_" + _re.sub(r"\W", "_", name)
-                    df.createOrReplaceTempView(mangled)
-                    self.spark.sql(
-                        f"CREATE OR REPLACE TEMPORARY VIEW "
-                        f"`{name}` AS SELECT * FROM {mangled}")
-            _SQL_VIEWS_STAMP[self.spark] = stamp
+        with _SQL_VIEWS_LOCK:
+            if _SQL_VIEWS_STAMP.get(self.spark) != stamp:
+                for name in self.catalog.tables():
+                    try:
+                        df = self.catalog.table(name)
+                    except Exception:
+                        # a bad registration (missing/corrupt path) must
+                        # not take down SQL over every OTHER datasource;
+                        # querying the bad table itself still surfaces the
+                        # real error via catalog.table()
+                        continue
+                    if _IDENT_RE.fullmatch(name):
+                        df.createOrReplaceTempView(name)
+                    else:
+                        # Druid datasource names are arbitrary strings
+                        # ('web-events'); createOrReplaceTempView rejects
+                        # non-identifiers, but backticked DDL over a mangled
+                        # alias makes them addressable as `name` in SQL
+                        mangled = "__ds_" + _re.sub(r"\W", "_", name)
+                        df.createOrReplaceTempView(mangled)
+                        self.spark.sql(
+                            f"CREATE OR REPLACE TEMPORARY VIEW "
+                            f"`{name}` AS SELECT * FROM {mangled}")
+                _SQL_VIEWS_STAMP[self.spark] = stamp
         exact = self.exact_approx
         if "useApproximateCountDistinct" in set_ctx:
             exact = set_ctx["useApproximateCountDistinct"].lower() != "true"
@@ -690,37 +668,27 @@ class DruidSparkEngine:
                 c for cols in _jc_by_table.values()
                 for c, ty in cols.items() if ty == "COMPLEX<json>"})
         # `SET useResultCache = true;` — the SQL spelling of the
-        # result-level cache (reference: ResultLevelCachingQueryRunner
-        # applies to SQL through the same query stack). Keyed on the
-        # rewritten statement + whole-table fingerprints of every
-        # referenced datasource (no interval structure to narrow by at
-        # the SQL layer), so any table change invalidates.
-        def tables_fp() -> str:
-            from druid_spark.security import sql_resources
-            tables = sorted({n for rt, n, _a in sql_resources(
-                self.catalog.tables(), text) if rt == "DATASOURCE"})
-            return ";".join(f"{n}={self._table_fingerprint(n, None)}"
-                            for n in tables)
-
-        if set_ctx.get("useResultCache", "").lower() == "true":
-            key = ("sql||" + final + f"||exact={exact}||"
-                   + f"dne={self.sketch_default_nominal_entries}||"
-                   + tables_fp())
-            if key in self._result_cache:
-                return self._result_cache[key]
-            self.cache_misses += 1
-            return self._cache_put(key, self.spark.sql(final))
+        # result-level cache (ResultLevelCachingQueryRunner serves SQL
+        # too), keyed on the rewritten statement + whole-table
+        # fingerprints, so any referenced table's change invalidates.
+        if fps is not None:
+            if ref_tables - fps.keys():  # registered mid-statement
+                return self.spark.sql(final)
+            key = (f"sql||{final}||exact={exact}||"
+                   f"dne={self.sketch_default_nominal_entries}||"
+                   + ";".join(f"{n}={fps[n]}" for n in sorted(ref_tables)))
+            return self._result_cache.get_or_build(
+                key, lambda: self._local_result(self.spark.sql(final)))
         # System-schema views (sys.tasks, sys.supervisors, ...) mutate
         # without a catalog bump — their statements always re-analyze.
         if _re.search(r"\b(?:sys|information_schema)_\w+", final):
             return self.spark.sql(final)
-        # catalog.version covers lookup re-registration (the LOOKUP SQL
-        # UDF body inlines lookup content) and table registrations;
-        # tables_fp covers file-level appends to path-backed tables.
-        return self._plan_cached(
-            lambda: self.spark.sql(final),
-            lambda: (f"plansql||{final}||exact={exact}||"
-                     f"cv={self.catalog.version}||" + tables_fp()))
+        # catalog.version (read before the view refresh) covers lookup
+        # re-registration (LOOKUP's SQL UDF body inlines its content) and
+        # every table registration, appends included.
+        return self._plan_cache.get_or_build(
+            f"plansql||{final}||exact={exact}||cv={stamp[1]}",
+            lambda: (self.spark.sql(final), True))
 
     def _scalar_array_cols(self, tables: set | None = None
                            ) -> tuple[set, set, dict, dict]:

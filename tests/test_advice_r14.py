@@ -121,3 +121,33 @@ def test_persist_scoped_drops_previous_different_plan(spark):
     assert not pa.storageLevel.useMemory
     assert pb.storageLevel.useMemory
     pb.unpersist()
+
+
+def test_persist_scoped_threads_pin_at_most_one_frame(spark):
+    """Racing callers (server threads, the datapipe prewarm) each
+    replace the key's frame: whatever the interleaving, at most one of
+    their frames stays pinned."""
+    import threading
+    n = 8
+    for rnd in range(3):
+        frames = [spark.range(rnd * 100 + i + 1).select(
+            F.col("id").alias("y")) for i in range(n)]
+        outs = [None] * n
+        barrier = threading.Barrier(n, timeout=120)
+
+        def call(i):
+            barrier.wait()
+            outs[i] = dedup._persist_scoped(frames[i], "t_r14_race")
+
+        threads = [threading.Thread(target=call, args=(i,))
+                   for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        pinned = [o for o in outs
+                  if o.storageLevel.useMemory or o.storageLevel.useDisk]
+        assert len(pinned) <= 1, (rnd, len(pinned))
+    for o in outs:
+        o.unpersist()

@@ -54,7 +54,7 @@ def test_result_cache_returns_same_df(eng):
     df1 = eng.query(q)
     n1 = df1.collect()[0]["n"]
     df2 = eng.query(dict(q))  # equal-but-not-identical dict
-    assert df2 is df1  # cache hit returns the persisted DataFrame
+    assert df2 is df1  # cache hit returns the cached result DataFrame
     assert df2.collect()[0]["n"] == n1
     # different query → different entry
     q3 = {**q, "dataSource": "nation"}
@@ -62,19 +62,17 @@ def test_result_cache_returns_same_df(eng):
 
 
 def test_result_cache_off_by_default(eng):
-    """The RESULT cache (persisted data) stays opt-in. Round 7: the
+    """The RESULT cache (collected rows) stays opt-in. Round 7: the
     prepared-PLAN cache may hand back the same analyzed DataFrame —
-    that pins no data (plans are lazy; every action re-executes), so
-    the contract to pin is storage level, not object identity."""
+    that holds no data (plans are lazy; every action re-executes), so
+    the contract to pin is the result cache's size, not object
+    identity."""
     q = {"queryType": "timeseries", "dataSource": "orders",
          "granularity": "all",
          "aggregations": [{"type": "count", "name": "n_uncached"}]}
     before = len(eng._result_cache)
     eng.query(q)
-    # no entry added — the engine persisted nothing. (df.storageLevel
-    # is NOT asserted: Spark's CacheManager matches canonicalized
-    # plans, so an opt-in persist from another test of the same shape
-    # legitimately shows through on an identical plan.)
+    # no entry added — the engine cached no result
     assert len(eng._result_cache) == before
 
 
@@ -594,3 +592,159 @@ def test_strict_window_frames_flag(engine):
           "UNBOUNDED PRECEDING AND CURRENT ROW) AS a "
           "FROM orders LIMIT 5")
     assert len(engine.sql(on + ok).collect()) == 5
+
+
+def test_result_cache_fresh_during_appends(spark, tmp_path_factory):
+    """Two readers loop a cached timeseries over an open interval while
+    hour-partitioned days are appended: once an INSERT returns, the
+    cached count equals the uncached one. The cache keys on the file
+    snapshot the catalog registered, so a key never names files the
+    served rows were not read from (a key taken from the directory
+    mid-append used to pin the previous batch's count)."""
+    import threading
+
+    e = DruidSparkEngine(spark)
+    e.catalog.register_dir("/root/testdata/sf0.001")
+    e.warehouse_dir = str(tmp_path_factory.mktemp("fresh_wh"))
+
+    def day(d: int) -> str:
+        return ("SELECT ts AS __time, event_type, value FROM events "
+                f"WHERE ts >= TIMESTAMP '2024-01-{d:02d}' "
+                f"AND ts < TIMESTAMP '2024-01-{d + 1:02d}' "
+                "PARTITIONED BY HOUR")
+
+    e.sql("REPLACE INTO evfresh OVERWRITE ALL " + day(1))
+    q = {"queryType": "timeseries", "dataSource": "evfresh",
+         "granularity": "all", "intervals": ["2024-01-01/2030-01-01"],
+         "aggregations": [{"type": "count", "name": "n"}]}
+    cached = {**q, "context": {"useResultCache": True}}
+    stop, errors = threading.Event(), []
+
+    def reader():
+        while not stop.is_set():
+            try:
+                e.query(dict(cached)).collect()
+            except Exception as ex:  # noqa: BLE001 - asserted below
+                errors.append(ex)
+                return
+
+    threads = [threading.Thread(target=reader) for _ in range(2)]
+    for t in threads:
+        t.start()
+    stale = []
+    try:
+        for d in range(2, 10):
+            e.sql("INSERT INTO evfresh " + day(d))
+            got = e.query(dict(cached)).collect()[0]["n"]
+            want = e.query(q).collect()[0]["n"]
+            if got != want:
+                stale.append((d, got, want))
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    assert not stale
+    e.close()
+
+
+def test_result_cache_threaded_hammer(spark):
+    """4 threads issue the same 40 distinct cached queries, meeting at a
+    barrier before each: no call raises, the cache stays within its
+    capacity, and every lookup counts as exactly one hit or miss."""
+    import sys
+    import threading
+
+    e = DruidSparkEngine(spark)
+    e.catalog.register_dir("/root/testdata/sf0.001")
+    qs = [{"queryType": "timeseries", "dataSource": "nation",
+           "granularity": "all",
+           "aggregations": [{"type": "count", "name": f"n{i}"}],
+           "context": {"useResultCache": True}} for i in range(40)]
+    barrier, errors, rows = threading.Barrier(4, timeout=120), [], []
+
+    def client():
+        for q in qs:
+            barrier.wait()
+            try:
+                rows.append(e.query(q).collect()[0][0])
+            except Exception as ex:  # noqa: BLE001 - asserted below
+                errors.append(ex)
+
+    threads = [threading.Thread(target=client) for _ in range(4)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # preempt often between bytecodes
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert rows == [25] * 160
+    from druid_spark.engine import RESULT_CACHE_ENTRIES
+    assert len(e._result_cache) <= RESULT_CACHE_ENTRIES
+    assert e._result_cache.hits + e._result_cache.misses == 160
+    e.close()
+
+
+def test_result_cache_row_cap_and_jobless_hit(eng, monkeypatch):
+    """A result over the row cap is returned whole and not cached; a
+    cached result is a local relation, so serving it runs no job."""
+    import time
+    from druid_spark import engine as engine_mod
+
+    q = {"queryType": "scan", "dataSource": "nation",
+         "columns": ["n_nationkey"], "context": {"useResultCache": True}}
+    monkeypatch.setattr(engine_mod, "RESULT_CACHE_MAX_ROWS", 10)
+    before = len(eng._result_cache)
+    assert len(eng.query(q).collect()) == 25       # every row
+    assert len(eng._result_cache) == before        # no entry
+    monkeypatch.undo()
+
+    small = {"queryType": "timeseries", "dataSource": "nation",
+             "granularity": "all",
+             "aggregations": [{"type": "count", "name": "n_hit"}],
+             "context": {"useResultCache": True}}
+    assert eng.query(small).collect()[0]["n_hit"] == 25   # populate
+    sc = eng.spark.sparkContext
+    sc.setJobGroup("result-cache-hit", "cached result served")
+    try:
+        hits0 = eng._result_cache.hits
+        assert eng.query(dict(small)).collect()[0]["n_hit"] == 25
+        assert eng._result_cache.hits == hits0 + 1
+        # a marker job in a later group: once the status store shows it,
+        # it has recorded every earlier job too
+        sc.setJobGroup("result-cache-marker", "status store barrier")
+        eng.spark.range(1).count()
+        tracker = sc.statusTracker()
+        deadline = time.time() + 30
+        while (not tracker.getJobIdsForGroup("result-cache-marker")
+               and time.time() < deadline):
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup("result-cache-marker")
+        assert tracker.getJobIdsForGroup("result-cache-hit") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_result_cache_misses_after_drop(spark, tmp_path):
+    """Dropping a datasource invalidates its cached results: the query
+    fails as for any unknown datasource instead of serving old rows."""
+    e = DruidSparkEngine(spark)
+    p = str(tmp_path / "dropme")
+    spark.range(5).selectExpr(
+        "id", "timestamp_millis(id * 1000) AS __time").write.parquet(p)
+    e.catalog.register_table("dropme", p)
+    q = {"queryType": "timeseries", "dataSource": "dropme",
+         "granularity": "all",
+         "aggregations": [{"type": "count", "name": "n"}],
+         "context": {"useResultCache": True}}
+    assert e.query(q).collect()[0]["n"] == 5
+    assert e.catalog.drop_table("dropme")
+    with pytest.raises(KeyError, match="unknown datasource"):
+        e.query(dict(q)).collect()
+    e.close()
