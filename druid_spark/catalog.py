@@ -159,9 +159,8 @@ class Catalog:
         # the Druid-visible type (InformationSchema.java DATA_TYPE).
         # A dict maps column -> DATA_TYPE ('COMPLEX<json>' or 'ARRAY'
         # for variant-element arrays); a list means COMPLEX<json>.
-        # the file snapshot is set AFTER _tables below: a reader whose
-        # cache key names the new files also reads the new DataFrame
         self._files.pop(name, None)
+        files = None
         if json_columns is not None:
             self._json_cols[name] = (
                 dict(json_columns) if isinstance(json_columns, dict)
@@ -187,9 +186,15 @@ class Catalog:
             self._pending.pop(name, None)
             self._tables[name] = df
             if source_path:
-                self._files[name] = tuple(sorted(df.inputFiles()))
-        self._reg_serial[name] = self._reg_serial.get(name, 0) + 1
+                files = tuple(sorted(df.inputFiles()))
+        # Publish the data and the version plan keys name BEFORE the
+        # snapshot identity result keys name (files, serial), which
+        # readers take first: a reader that sees the new identity also
+        # gets the new data.
         self.version += 1
+        if files is not None:
+            self._files[name] = files
+        self._reg_serial[name] = self._reg_serial.get(name, 0) + 1
 
     def register_lookup(self, name: str, mapping: dict[str, Any],
                         tier: str = "__default") -> None:
@@ -295,8 +300,8 @@ class Catalog:
         self._partitioning.pop(name, None)
         self._files.pop(name, None)
         if known:
-            self._reg_serial[name] = self._reg_serial.get(name, 0) + 1
             self.version += 1
+            self._reg_serial[name] = self._reg_serial.get(name, 0) + 1
             # Also drop the SQL temp views engine.sql created for this
             # name (both the direct view and the mangled alias for
             # non-identifier names) — the view-refresh path only

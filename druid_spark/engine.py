@@ -12,6 +12,7 @@ from __future__ import annotations
 from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -61,12 +62,14 @@ _SQL_LOOKUPS_STAMP: \
 # leave an older refresh's views under a newer stamp
 _SQL_VIEWS_LOCK = _threading.Lock()
 
-# Cache capacities in entries. A result over RESULT_CACHE_MAX_ROWS rows
-# is served uncached, as with Druid's resultLevelCacheLimit, so the
+# Cache capacities in entries, and this engine's own cap on the rows a
+# cached result may hold (a larger one is served uncached), so the
 # driver stays bounded.
 PLAN_CACHE_ENTRIES = 64
 RESULT_CACHE_ENTRIES = 32
 RESULT_CACHE_MAX_ROWS = 10_000
+# result-cache marker: this key's result is over the row cap
+_OVER_CAP = object()
 
 
 class LockedLRU:
@@ -83,28 +86,66 @@ class LockedLRU:
     def __len__(self) -> int:
         return len(self._entries)
 
-    def get_or_build(self, key: str,
-                     build: Callable[[], tuple[Any, bool]]) -> Any:
-        """The value under `key`; on a miss, build() returns
-        (value, keep) and the value is stored only when keep is true."""
+    def get_or_build(self, key: str, build: Callable[[], Any]) -> Any:
+        """The value under `key`; on a miss, build() and store it."""
         with self._lock:
             if key in self._entries:
                 self._entries.move_to_end(key)
                 self.hits += 1
                 return self._entries[key]
             self.misses += 1
-        value, keep = build()
-        if keep:
-            with self._lock:
-                self._entries[key] = value
-                self._entries.move_to_end(key)
-                if len(self._entries) > self.capacity:
-                    self._entries.popitem(last=False)
+        value = build()
+        self.put(key, value)
         return value
+
+    def put(self, key: str, value: Any) -> None:
+        with self._lock:
+            self._entries[key] = value
+            self._entries.move_to_end(key)
+            if len(self._entries) > self.capacity:
+                self._entries.popitem(last=False)
 
     def clear(self) -> None:
         with self._lock:
             self._entries.clear()
+
+
+class _CachedResult(_ClassicDataFrame):
+    """A result-cache entry: the lazy plan until its first collect or
+    toLocalIterator. That runs in the caller's thread, so under the
+    server's scheduler (lane, timeout, cancel), and swaps in the rows as
+    a JVM-built local relation; later reads run no Spark job (PySpark's
+    createDataFrame(list) would parallelize). A result over
+    RESULT_CACHE_MAX_ROWS stays the plan, and its key is marked
+    _OVER_CAP so a repeat goes straight to the plan."""
+
+    def __new__(cls, *_args):  # the base __new__ calls __init__ itself
+        return object.__new__(cls)
+
+    def __init__(self, plan: DataFrame, cache: LockedLRU, key: str):
+        super().__init__(plan._jdf, plan.sparkSession)
+        self._cache, self._key, self._local = cache, key, False
+
+    def _fill(self) -> bool:
+        if not self._local:
+            jdf = self._jdf
+            rows = jdf.limit(RESULT_CACHE_MAX_ROWS + 1).collectAsList()
+            if rows.size() > RESULT_CACHE_MAX_ROWS:
+                self._cache.put(self._key, _OVER_CAP)
+                return False
+            self._jdf = self.sparkSession._jsparkSession.createDataFrame(
+                rows, jdf.schema())
+            self._local = True
+        return True
+
+    def collect(self):
+        self._fill()
+        return super().collect()
+
+    def toLocalIterator(self, prefetchPartitions: bool = False):
+        if self._fill():  # at most the row cap, and no job
+            return iter(super().collect())
+        return super().toLocalIterator(prefetchPartitions)
 
 
 # TABLE(APPEND(...)) merges column types with Calcite's
@@ -236,10 +277,10 @@ class DruidSparkEngine:
         # Spark's parse/analyze (~65 of ~95 ms per query, SCALE.md r6),
         # like Avatica prepared statements (sql/.../avatica/DruidMeta.java).
         self._plan_cache = LockedLRU(PLAN_CACHE_ENTRIES)
-        # Results (context.useResultCache / SET useResultCache) as local
-        # relations, so a hit runs no Spark job. Keyed on the tables'
-        # Catalog.fingerprint, not the catalog version, so an append to
-        # one interval leaves cached queries over others valid.
+        # Results (context.useResultCache / SET useResultCache), filled
+        # by their first collect (see _CachedResult). Keyed on the
+        # tables' Catalog.fingerprint, not the catalog version, so an
+        # append to one interval leaves cached queries over others valid.
         self._result_cache = LockedLRU(RESULT_CACHE_ENTRIES)
         # task log feeding the sys.tasks view (SystemSchema TASKS
         # signature, reduced): async SQL statements (server.py) and
@@ -280,31 +321,32 @@ class DruidSparkEngine:
                              and _ctx.get("populateCache", True)))
         import json as _json
         canon = _json.dumps(q, sort_keys=True, default=str)
+        fp = None
+        if use_cache:
+            try:
+                fp = self._tables_fingerprint(q)
+            except Exception:
+                use_cache = False  # unfingerprintable → serve uncached
+        # the version is read AFTER the fingerprint (and a registration
+        # bumps it before the fingerprint changes): a result key never
+        # names newer files than the plan reads
         plan_key = f"native||cv={self.catalog.version}||{canon}"
 
         def plan() -> DataFrame:
             return self._plan_cache.get_or_build(
-                plan_key, lambda: (self._dispatch(q), True))
+                plan_key, lambda: self._dispatch(q))
 
         if not use_cache:
             return plan()
-        try:
-            fp = self._tables_fingerprint(q)
-        except Exception:
-            return plan()  # unfingerprintable → serve uncached
-        return self._result_cache.get_or_build(
-            f"{canon}||{fp}", lambda: self._local_result(plan()))
+        return self._cached_result(f"{canon}||{fp}", plan)
 
-    def _local_result(self, df: DataFrame) -> tuple[DataFrame, bool]:
-        """(result, cacheable): df's rows collected JVM-side into a local
-        relation, which serves without a Spark job (PySpark's
-        createDataFrame(list) would parallelize); over the row cap, df."""
-        jdf = df._jdf
-        rows = jdf.limit(RESULT_CACHE_MAX_ROWS + 1).collectAsList()
-        if rows.size() > RESULT_CACHE_MAX_ROWS:
-            return df, False
-        return DataFrame(self.spark._jsparkSession.createDataFrame(
-            rows, jdf.schema()), self.spark), True
+    def _cached_result(self, key: str,
+                       plan: Callable[[], DataFrame]) -> DataFrame:
+        """The result-cache entry for `key` (filled by its first
+        collect), or plan() when that result is over the row cap."""
+        out = self._result_cache.get_or_build(
+            key, lambda: _CachedResult(plan(), self._result_cache, key))
+        return plan() if out is _OVER_CAP else out
 
     # the four cache lookups (native/SQL x plan/result) count here
     plan_cache_hits = property(lambda self: self._plan_cache.hits)
@@ -541,11 +583,12 @@ class DruidSparkEngine:
             register_druid_functions(self.spark)
             self._fns_registered = True
         self._register_sql_lookups()
-        # Key on table state read BEFORE the views refresh: a racing
-        # registration then gives an older key newer data, never reverse.
-        cache_result = set_ctx.get("useResultCache", "").lower() == "true"
-        fps = ({n: self.catalog.fingerprint(n) for n in self.catalog.tables()}
-               if cache_result else None)
+        # Key on registration serials read BEFORE the views refresh (a
+        # registration bumps the version first): a racing registration
+        # then gives an older key newer data, never the reverse.
+        serials = (dict(self.catalog._reg_serial)
+                   if set_ctx.get("useResultCache", "").lower() == "true"
+                   else None)
         # Re-create temp views only when the catalog changed OR another
         # engine on the same session registered views last (several
         # engines — e.g. one per sf_dir — share the view namespace).
@@ -671,14 +714,13 @@ class DruidSparkEngine:
         # result-level cache (ResultLevelCachingQueryRunner serves SQL
         # too), keyed on the rewritten statement + whole-table
         # fingerprints, so any referenced table's change invalidates.
-        if fps is not None:
-            if ref_tables - fps.keys():  # registered mid-statement
-                return self.spark.sql(final)
-            key = (f"sql||{final}||exact={exact}||"
-                   f"dne={self.sketch_default_nominal_entries}||"
-                   + ";".join(f"{n}={fps[n]}" for n in sorted(ref_tables)))
-            return self._result_cache.get_or_build(
-                key, lambda: self._local_result(self.spark.sql(final)))
+        if serials is not None:
+            return self._cached_result(
+                f"sql||{final}||exact={exact}||"
+                f"dne={self.sketch_default_nominal_entries}||"
+                + ";".join(f"{n}={serials.get(n, 0)}"
+                           for n in sorted(ref_tables)),
+                lambda: self.spark.sql(final))
         # System-schema views (sys.tasks, sys.supervisors, ...) mutate
         # without a catalog bump — their statements always re-analyze.
         if _re.search(r"\b(?:sys|information_schema)_\w+", final):
@@ -688,7 +730,7 @@ class DruidSparkEngine:
         # every table registration, appends included.
         return self._plan_cache.get_or_build(
             f"plansql||{final}||exact={exact}||cv={stamp[1]}",
-            lambda: (self.spark.sql(final), True))
+            lambda: self.spark.sql(final))
 
     def _scalar_array_cols(self, tables: set | None = None
                            ) -> tuple[set, set, dict, dict]:

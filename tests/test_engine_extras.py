@@ -649,6 +649,44 @@ def test_result_cache_fresh_during_appends(spark, tmp_path_factory):
     e.close()
 
 
+def test_result_cache_key_never_newer_than_plan(spark, tmp_path_factory,
+                                                monkeypatch):
+    """An INSERT landing between a cached query's fingerprint read and
+    its plan lookup cannot pin the old plan's rows under the new
+    snapshot's key: the plan is keyed on the catalog version read after
+    the fingerprint."""
+    e = DruidSparkEngine(spark)
+    e.catalog.register_dir("/root/testdata/sf0.001")
+    e.warehouse_dir = str(tmp_path_factory.mktemp("order_wh"))
+
+    def day(d: int) -> str:
+        return ("SELECT ts AS __time, event_type, value FROM events "
+                f"WHERE ts >= TIMESTAMP '2024-01-{d:02d}' "
+                f"AND ts < TIMESTAMP '2024-01-{d + 1:02d}' "
+                "PARTITIONED BY HOUR")
+
+    e.sql("REPLACE INTO evorder OVERWRITE ALL " + day(1))
+    q = {"queryType": "timeseries", "dataSource": "evorder",
+         "granularity": "all", "intervals": ["2024-01-01/2030-01-01"],
+         "aggregations": [{"type": "count", "name": "n"}]}
+    cached = {**q, "context": {"useResultCache": True}}
+    n1 = e.query(dict(cached)).collect()[0]["n"]  # warms the plan cache
+    real = e.catalog.fingerprint
+
+    def append_first(*args):
+        monkeypatch.setattr(e.catalog, "fingerprint", real)
+        e.sql("INSERT INTO evorder " + day(2))
+        return real(*args)
+
+    monkeypatch.setattr(e.catalog, "fingerprint", append_first)
+    got = e.query(dict(cached)).collect()[0]["n"]
+    want = e.query(q).collect()[0]["n"]
+    assert want > n1
+    assert got == want
+    assert e.query(dict(cached)).collect()[0]["n"] == want
+    e.close()
+
+
 def test_result_cache_threaded_hammer(spark):
     """4 threads issue the same 40 distinct cached queries, meeting at a
     barrier before each: no call raises, the cache stays within its
@@ -692,17 +730,25 @@ def test_result_cache_threaded_hammer(spark):
 
 
 def test_result_cache_row_cap_and_jobless_hit(eng, monkeypatch):
-    """A result over the row cap is returned whole and not cached; a
-    cached result is a local relation, so serving it runs no job."""
+    """A result over the row cap is returned whole and its rows are not
+    cached; a cached result is a local relation, so serving it (by
+    collect or toLocalIterator) runs no job."""
     import time
     from druid_spark import engine as engine_mod
 
     q = {"queryType": "scan", "dataSource": "nation",
          "columns": ["n_nationkey"], "context": {"useResultCache": True}}
     monkeypatch.setattr(engine_mod, "RESULT_CACHE_MAX_ROWS", 10)
-    before = len(eng._result_cache)
+    keys = set(eng._result_cache._entries)
     assert len(eng.query(q).collect()) == 25       # every row
-    assert len(eng._result_cache) == before        # no entry
+    # the key holds only the over-cap marker, so a repeat runs the plan
+    # without probing the cap again
+    added = [v for k, v in eng._result_cache._entries.items()
+             if k not in keys]
+    assert added == [engine_mod._OVER_CAP]
+    again = eng.query(dict(q))
+    assert not isinstance(again, engine_mod._CachedResult)
+    assert len(again.collect()) == 25
     monkeypatch.undo()
 
     small = {"queryType": "timeseries", "dataSource": "nation",
@@ -715,7 +761,9 @@ def test_result_cache_row_cap_and_jobless_hit(eng, monkeypatch):
     try:
         hits0 = eng._result_cache.hits
         assert eng.query(dict(small)).collect()[0]["n_hit"] == 25
-        assert eng._result_cache.hits == hits0 + 1
+        it = eng.query(dict(small)).toLocalIterator()
+        assert [r["n_hit"] for r in it] == [25]
+        assert eng._result_cache.hits == hits0 + 2
         # a marker job in a later group: once the status store shows it,
         # it has recorded every earlier job too
         sc.setJobGroup("result-cache-marker", "status store barrier")

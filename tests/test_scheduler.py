@@ -117,6 +117,56 @@ def test_http_timeout_504(engine):
         srv.stop()
 
 
+def test_http_cached_query_times_out(engine):
+    """A result-cached statement runs only under the scheduler:
+    compiling it (as the Avatica prepare probe does) runs no job, and
+    over HTTP it times out with 504 and its job group cancelled."""
+    from druid_spark.server import DruidHttpServer
+    sc = engine.spark.sparkContext
+    tracker = sc.statusTracker()
+    cached = "SET useResultCache = true; " + SLOW_SQL
+    engine.sql(SLOW_SQL)  # first-statement set-up may run jobs
+    sc.setJobGroup("cached-compile", "compile only")
+    try:
+        assert engine.sql(cached).limit(0).columns == ["n"]
+        # a marker job in a later group: once the status store shows
+        # it, it has recorded every earlier job too
+        sc.setJobGroup("cached-compile-marker", "status store barrier")
+        engine.spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 30
+    while (not tracker.getJobIdsForGroup("cached-compile-marker")
+           and time.time() < deadline):
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup("cached-compile-marker")
+    assert tracker.getJobIdsForGroup("cached-compile") == []
+
+    srv = DruidHttpServer(engine).start()
+    try:
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{srv.port}/druid/v2/sql",
+            data=json.dumps({"query": cached, "context": {
+                "timeout": 500, "sqlQueryId": "cached-slow"}}).encode(),
+            headers={"Content-Type": "application/json"}, method="POST")
+        t0 = time.time()
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            urllib.request.urlopen(req)
+        assert ei.value.code == 504
+        assert time.time() - t0 < 60
+    finally:
+        srv.stop()
+
+    def statuses():
+        return [tracker.getJobInfo(j).status
+                for j in tracker.getJobIdsForGroup("cached-slow")]
+
+    deadline = time.time() + 30
+    while "RUNNING" in statuses() and time.time() < deadline:
+        time.sleep(0.1)
+    assert "FAILED" in statuses() and "RUNNING" not in statuses()
+
+
 def test_http_lane_capacity_429_and_cancel(engine):
     """Low-priority lane at capacity → 429; DELETE /druid/v2/{id}
     cancels a running native query (202) and unknown ids 404."""
