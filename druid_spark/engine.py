@@ -127,6 +127,7 @@ class _CachedResult(_ClassicDataFrame):
         self._cache, self._key, self._local = cache, key, False
 
     def _fill(self) -> bool:
+        # racing first reads may both compute; they swap in equal rows
         if not self._local:
             jdf = self._jdf
             rows = jdf.limit(RESULT_CACHE_MAX_ROWS + 1).collectAsList()
