@@ -16,13 +16,22 @@ tiny maps) or as a broadcast-join DataFrame (lookup datasource).
 
 from __future__ import annotations
 
+import contextlib
+import datetime as _dt
 import hashlib
+import itertools
+import json
 import os
 import re
-from typing import Any
+import threading
+from collections import deque
+from typing import Any, Callable, NamedTuple
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from druid_spark.cache import LockedLRU
 
 # default time-column mapping for the driver's tables
 DEFAULT_TIME_COLUMNS = {
@@ -33,6 +42,155 @@ DEFAULT_TIME_COLUMNS = {
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+# Pruned scans kept per (table, registration, file set or partition
+# range); re-registering a table drops its entries.
+SCAN_CACHE_ENTRIES = 64
+
+_EPOCH = _dt.datetime(1970, 1, 1)
+_US = _dt.timedelta(microseconds=1)
+# time ranges are half-open [start, end) pairs of epoch microseconds;
+# these stand for an unbounded side
+MIN_US, MAX_US = -(1 << 62), 1 << 62
+_UNIT_US = {"milliseconds": 1000, "microseconds": 1, "nanoseconds": 0.001}
+
+
+def to_us(t: _dt.datetime) -> int:
+    """Epoch microseconds of a naive-UTC or aware datetime."""
+    if t.tzinfo is not None:
+        t = t.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    return (t - _EPOCH) // _US
+
+
+def interval_ranges(intervals) -> list[tuple[int, int]]:
+    """Druid ISO intervals (a list or {"intervals": [...]}) as
+    [start, end) epoch-microsecond pairs."""
+    from druid_spark.granularity import parse_iso_interval
+    if isinstance(intervals, dict):
+        intervals = intervals["intervals"]
+    out = []
+    for iv in intervals:
+        a, b = parse_iso_interval(iv)
+        out.append((to_us(_dt.datetime.fromisoformat(a)),
+                    to_us(_dt.datetime.fromisoformat(b))))
+    return out
+
+
+def _part_ranges(fmt: str, ranges) -> list[tuple[str | None, str | None]]:
+    """Time ranges as inclusive [lo, hi] partition-value ranges (None:
+    unbounded). Values are zero-padded date_format strings, so
+    chronological order is lexicographic order."""
+    py_fmt = fmt.replace("yyyy", "%Y").replace("MM", "%m") \
+        .replace("dd", "%d").replace("HH", "%H")
+    lo_ok, hi_ok = to_us(_dt.datetime.min), to_us(_dt.datetime.max)
+
+    def fmt_us(us: int) -> str | None:
+        if not lo_ok <= us <= hi_ok:
+            return None
+        return (_EPOCH + us * _US).strftime(py_fmt)
+
+    return [(fmt_us(a), fmt_us(b - 1)) for a, b in ranges]
+
+
+def _parquet_time_bounds(path: str, column: str) -> tuple[int, int] | None:
+    """Min and max epoch microseconds of a top-level INT64 timestamp
+    column over one local Parquet file's row-group statistics; None if
+    the column is missing, not a timestamp (INT96 included) or lacks
+    statistics. A file with no rows gets an empty range."""
+    import pyarrow.parquet as pq
+    try:
+        md = pq.read_metadata(path)
+    except Exception:
+        return None
+    idx = next((i for i in range(md.num_columns)
+                if md.schema.column(i).path == column), None)
+    if idx is None:
+        return None
+    col = md.schema.column(idx)
+    unit = json.loads(col.logical_type.to_json()).get("timeUnit")
+    if col.physical_type != "INT64" or unit not in _UNIT_US:
+        return None
+    lo, hi = MAX_US, MIN_US
+    for rg in range(md.num_row_groups):
+        meta = md.row_group(rg)
+        if meta.num_rows == 0:
+            continue
+        st = meta.column(idx).statistics
+        if st is None or not st.has_min_max:
+            return None
+        lo, hi = min(lo, st.min_raw), max(hi, st.max_raw)
+    if lo > hi:
+        return lo, hi
+    # nanos reach the engine through a double division (_fix_nanos):
+    # widen by a microsecond either side
+    if unit == "nanoseconds":
+        return lo // 1000 - 1, hi // 1000 + 1
+    return lo * _UNIT_US[unit], hi * _UNIT_US[unit]
+
+
+def _footer_bounds(files, column, known) -> tuple | None:
+    """Per file (stamp, min, max) of `column` from the Parquet footers,
+    reusing `known` entries whose file stamp (size, mtime) is unchanged
+    so each footer is read once. None (the timeline is unknown) unless
+    every file is a local (`file:`) file in one flat directory with
+    usable statistics."""
+    if not column or not files:
+        return None
+    parents = {f.rsplit("/", 1)[0] for f in files}
+    if len(parents) != 1 or "=" in parents.pop().rsplit("/", 1)[-1]:
+        return None  # partition directories: rebuilt reads lose them
+    out = []
+    for f in files:
+        if not f.startswith("file:"):
+            return None
+        local = unquote(urlparse(f).path)
+        try:
+            st = os.stat(local)
+        except OSError:
+            return None
+        stamp = (st.st_size, st.st_mtime_ns)
+        entry = known.get(f)
+        if entry is None or entry[0] != stamp:
+            b = _parquet_time_bounds(local, column)
+            if b is None:
+                return None
+            entry = (stamp, *b)
+        out.append(entry)
+    return tuple(out)
+
+
+class _Timeline(NamedTuple):
+    """What a path-backed table's registered DataFrame reads: its
+    files, each file's (stamp, min, max) time bounds when known, and a
+    reader giving the table's DataFrame over a subset of the files."""
+    serial: int
+    files: tuple[str, ...]
+    bounds: tuple | None
+    read: Callable[[list[str]], DataFrame]
+
+
+class _Scan:
+    """A scan-cache entry: a pruned scan and, once a SQL statement has
+    bound it, the temp view over it."""
+
+    def __init__(self, df: DataFrame):
+        self.df, self.view, self.evicted = df, None, False
+
+
+_SCAN_VIEWS = itertools.count(1)
+
+
+def _normalize(df: DataFrame, time_column: str | None,
+               nanos_path: str | None = None) -> DataFrame:
+    """A registered table's DataFrame from its raw read: nanos and NTZ
+    timestamps normalized, the time column aliased as `__time`."""
+    if nanos_path:
+        df = _fix_nanos(df, nanos_path)
+    df = _normalize_ntz(df)
+    if (time_column and time_column in df.columns
+            and "__time" not in df.columns):
+        df = df.withColumn("__time", F.col(time_column))
+    return df
 
 
 def _fix_nanos(df: DataFrame, path: str) -> DataFrame:
@@ -70,6 +228,45 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
     return df
 
 
+def _time_source(columns: list[str], time_column: str | None) -> str | None:
+    """The stored column the registered `__time` reads."""
+    if "__time" in columns:
+        return "__time"
+    return time_column if time_column in columns else None
+
+
+def _overlapping(tl: _Timeline | None, part, ranges) -> tuple | None:
+    """The timeline's files whose time span meets the half-open
+    epoch-microsecond `ranges`: by partition value when the table is
+    partitioned (`part`), else by footer bounds. None when there is no
+    timeline (every file may hold any time)."""
+    if tl is None:
+        return None
+    if part:
+        marker = f"/{part[0]}="
+        pr = _part_ranges(part[1], ranges)
+        return tuple(
+            f for f in tl.files if marker in f and any(
+                (lo is None or lo <= v) and (hi is None or v <= hi)
+                for v in [f.split(marker, 1)[1].split("/", 1)[0]]
+                for lo, hi in pr))
+    if tl.bounds is None:
+        return None
+    return tuple(f for f, (_st, lo, hi) in zip(tl.files, tl.bounds)
+                 if any(lo < b and hi >= a for a, b in ranges))
+
+
+def _part_predicate(column: str, pr) -> str:
+    """SQL text: `column` within one of the inclusive ranges `pr` (one
+    parsed string costs a py4j call where Column arithmetic costs one
+    per operator). The values are strftime output, digits and dashes."""
+    col = "`" + column.replace("`", "``") + "`"
+    arms = [" AND ".join([f"{col} >= '{lo}'"] * (lo is not None)
+                         + [f"{col} <= '{hi}'"] * (hi is not None))
+            for lo, hi in pr]
+    return " OR ".join(f"({a})" for a in arms) or "false"
+
+
 class Catalog:
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -92,19 +289,24 @@ class Catalog:
         self.version = 0
         self._paths: dict[str, str] = {}  # table -> source path (sys.segments)
         # table -> (partition column, strftime-style date_format pattern):
-        # lets the engine derive partition predicates from __time intervals
-        # (the segment-timeline interval pruning analog — Catalyst cannot
-        # infer __dt from __time on its own)
+        # lets scan() derive partition predicates from __time intervals
+        # (Catalyst cannot infer __dt from __time on its own)
         self._partitioning: dict[str, tuple[str, str]] = {}
         # table -> registration serial (bumped per register_table and
         # drop_table call): the whole-table snapshot identity that
         # result-cache keys name
         self._reg_serial: dict[str, int] = {}
-        # path-backed table -> the files its registered DataFrame reads
-        # (inputFiles(), recorded once when the DataFrame is built): lets
-        # fingerprint() narrow a partitioned table to the partitions a
-        # query touches
-        self._files: dict[str, tuple[str, ...]] = {}
+        # path-backed table -> its time timeline (_Timeline: files read
+        # by the registered DataFrame, recorded once with inputFiles()
+        # when it is built, and their footer time bounds), the segment
+        # timeline analog scan() and fingerprint() prune by
+        self._timelines: dict[str, _Timeline] = {}
+        self._scans = LockedLRU(SCAN_CACHE_ENTRIES, on_evict=self._retire)
+        # SQL views over cached scans (scan_views): statements binding
+        # now, and views of scans that left the cache, dropped when none is
+        self._view_lock = threading.Lock()
+        self._binding = 0
+        self._retired: deque[str] = deque()
         # dropped-but-restorable datasources: name -> (path,
         # time_column, partitioning) — the metadata-store "unused
         # segments" analog behind restore_table()
@@ -119,25 +321,116 @@ class Catalog:
     def source_path(self, name: str) -> str | None:
         return self._paths.get(name)
 
-    def fingerprint(self, name: str,
-                    part_ranges: list[tuple[str, str]] | None = None) -> str:
+    def fingerprint(self, name: str, ranges=None) -> str:
         """Identity of the data a query over `name` reads: the
         registration serial (a registered DataFrame is a fixed file
         snapshot), or, for a partitioned path-backed table, a hash of
-        its registered files within the inclusive `part_ranges`."""
+        its registered files within the time `ranges`."""
         part = self._partitioning.get(name)
-        if part and part_ranges is not None:
-            self.table(name)  # a pending table records its files here
-            files = self._files.get(name)
+        if ranges and part:
+            self.table(name)  # a pending table records its timeline here
+            files = _overlapping(self._timelines.get(name), part, ranges)
             if files is not None:
-                marker = f"/{part[0]}="
-                touched = [
-                    f for f in files if marker in f and any(
-                        lo <= f.split(marker, 1)[1].split("/", 1)[0] <= hi
-                        for lo, hi in part_ranges)]
-                return hashlib.blake2b("\n".join(touched).encode(),
+                return hashlib.blake2b("\n".join(files).encode(),
                                        digest_size=16).hexdigest()
         return f"reg:{self._reg_serial.get(name, 0)}"
+
+    def scan(self, name: str, ranges=None) -> DataFrame:
+        """`name`'s DataFrame cut down to the data that can meet the
+        half-open epoch-microsecond time `ranges` — the segment-timeline
+        lookup (CachingClusteredClient.computeSegmentsToQuery). The
+        caller still applies its exact time predicate. A partitioned
+        table gets a partition-column range predicate, which Spark's
+        partition pruning applies; a footer-bounded table is re-read
+        over the overlapping files only, with the registered schema; a
+        table without a timeline, or whose files all overlap, is the
+        registered DataFrame itself."""
+        entry = self._pruned(name, ranges)
+        return self.table(name) if entry is None else entry.df
+
+    def _pruned(self, name: str, ranges) -> _Scan | None:
+        """The scan-cache entry of scan(name, ranges); None when that is
+        the registered DataFrame."""
+        serial = self._reg_serial.get(name, 0)
+        df = self.table(name)
+        if ranges is None:
+            return None
+        ranges = [(a, b) for a, b in ranges if a < b]
+        part = self._partitioning.get(name)
+        if part and part[0] in df.columns:
+            pr = _part_ranges(part[1], ranges)
+            if (None, None) in pr:
+                return None  # an unbounded range covers every partition
+            return self._scans.get_or_build(
+                (name, serial, tuple(pr)),
+                lambda: _Scan(df.where(_part_predicate(part[0], pr))))
+        tl = self._timelines.get(name)
+        files = _overlapping(tl, None, ranges)
+        if files is None or len(files) == len(tl.files):
+            return None
+        return self._scans.get_or_build(
+            (name, tl.serial, files),
+            lambda: _Scan(self._read_files(df, tl, files)))
+
+    @staticmethod
+    def _read_files(df: DataFrame, tl: _Timeline, files) -> DataFrame:
+        if not files:
+            return df.where(F.lit(False))
+        out = tl.read(list(files))
+        # the registered DataFrame if the re-read differs in any way
+        return out if out.schema == df.schema else df
+
+    @contextlib.contextmanager
+    def scan_views(self):
+        """For one SQL statement: yields bind(name, ranges), the name of
+        a temp view over scan(name, ranges) (made once per scan-cache
+        entry) or None when that scan is the whole table. The views of
+        scans that left the cache are dropped only once no statement
+        is binding or being analyzed, so none vanishes under one."""
+        with self._view_lock:
+            self._binding += 1
+        try:
+            yield self._bind
+        finally:
+            with self._view_lock:
+                self._binding -= 1
+            self._drop_retired()
+
+    def _bind(self, name: str, ranges) -> str | None:
+        entry = self._pruned(name, ranges)
+        if entry is None:
+            return None
+        with self._view_lock:
+            if entry.view is None:
+                view = f"__scan_{next(_SCAN_VIEWS)}"
+                entry.df.createOrReplaceTempView(view)
+                entry.view = view
+                if entry.evicted:  # it left the cache meanwhile
+                    self._retired.append(view)
+        return entry.view
+
+    def _retire(self, entry: _Scan) -> None:
+        # runs under the scan cache's lock; the deque needs no other
+        # (_bind retires a view it made after this ran)
+        entry.evicted = True
+        if entry.view is not None:
+            self._retired.append(entry.view)
+
+    def _drop_retired(self) -> None:
+        with self._view_lock:
+            while self._binding == 0 and self._retired:
+                self.spark.catalog.dropTempView(self._retired.popleft())
+
+    def _publish_timeline(self, name: str, files, column: str | None,
+                          read: Callable[[list[str]], DataFrame]) -> None:
+        # the table's previous timeline (kept until now) lends the
+        # footer bounds of files it already read
+        old = self._timelines.get(name)
+        known = (dict(zip(old.files, old.bounds))
+                 if old is not None and old.bounds else {})
+        self._timelines[name] = _Timeline(
+            self._reg_serial.get(name, 0), files,
+            _footer_bounds(files, column, known), read)
 
     def register_dir(self, data_dir: str,
                      time_columns: dict[str, str] | None = None) -> None:
@@ -159,7 +452,6 @@ class Catalog:
         # the Druid-visible type (InformationSchema.java DATA_TYPE).
         # A dict maps column -> DATA_TYPE ('COMPLEX<json>' or 'ARRAY'
         # for variant-element arrays); a list means COMPLEX<json>.
-        self._files.pop(name, None)
         files = None
         if json_columns is not None:
             self._json_cols[name] = (
@@ -176,25 +468,35 @@ class Catalog:
             self._paths[name] = source
             self._tables.pop(name, None)
         else:
-            df = source
             if source_path:
                 self._paths[name] = source_path
-            df = _normalize_ntz(df)
-            if (time_column and time_column in df.columns
-                    and "__time" not in df.columns):
-                df = df.withColumn("__time", F.col(time_column))
+            df = _normalize(source, time_column)
             self._pending.pop(name, None)
             self._tables[name] = df
             if source_path:
                 files = tuple(sorted(df.inputFiles()))
         # Publish the data and the version plan keys name BEFORE the
-        # snapshot identity result keys name (files, serial), which
+        # snapshot identity result keys name (timeline, serial), which
         # readers take first: a reader that sees the new identity also
         # gets the new data.
         self.version += 1
-        if files is not None:
-            self._files[name] = files
         self._reg_serial[name] = self._reg_serial.get(name, 0) + 1
+        self._scans.discard(lambda k: k[0] == name)
+        self._drop_retired()
+        if files is not None:
+            # only a bare Parquet read can be re-read file by file
+            bare = source._jdf.queryExecution().analyzed() \
+                .getClass().getSimpleName() == "LogicalRelation"
+            schema = source.schema
+            self._publish_timeline(
+                name, files,
+                _time_source(source.columns, time_column) if bare else None,
+                lambda fs: _normalize(
+                    self.spark.read.schema(schema).parquet(*fs), time_column))
+        elif not isinstance(source, str):
+            self._timelines.pop(name, None)
+        # (a path registration keeps the old timeline until it is read:
+        # _materialize reuses its footer bounds)
 
     def register_lookup(self, name: str, mapping: dict[str, Any],
                         tier: str = "__default") -> None:
@@ -224,13 +526,15 @@ class Catalog:
         # table() call re-raises the real error instead of a misleading
         # "unknown datasource".
         path, time_column = self._pending[name]
-        df = _fix_nanos(self.spark.read.parquet(path), path)
-        df = _normalize_ntz(df)
-        if (time_column and time_column in df.columns
-                and "__time" not in df.columns):
-            df = df.withColumn("__time", F.col(time_column))
+        raw = self.spark.read.parquet(path)
+        df = _normalize(raw, time_column, path)
         self._tables[name] = df
-        self._files[name] = tuple(sorted(df.inputFiles()))
+        self._publish_timeline(
+            name, tuple(sorted(df.inputFiles())),
+            _time_source(raw.columns, time_column),
+            lambda fs: _normalize(
+                self.spark.read.schema(raw.schema).parquet(*fs),
+                time_column, path))
         self._pending.pop(name, None)
         return df
 
@@ -298,7 +602,9 @@ class Catalog:
         self._pending.pop(name, None)
         self._paths.pop(name, None)
         self._partitioning.pop(name, None)
-        self._files.pop(name, None)
+        self._timelines.pop(name, None)
+        self._scans.discard(lambda k: k[0] == name)
+        self._drop_retired()
         if known:
             self.version += 1
             self._reg_serial[name] = self._reg_serial.get(name, 0) + 1

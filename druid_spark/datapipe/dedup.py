@@ -191,24 +191,24 @@ def _shingles_sql(toks_sql: str, k: int) -> str:
 _ORDERED_PAIRS_INPUT_MAX_BYTES = 256 << 20
 
 
-def _input_bytes(df: DataFrame) -> int:
-    """Total size of the local files feeding df's scan, or -1 when the
-    input is not local files (then the caller must assume small — the
-    r13 behavior)."""
+def _input_bytes(df: DataFrame) -> int | None:
+    """Total size of the local files feeding df's scan: 0 when no file
+    feeds it (in-memory data), None when some input is not a local file
+    or cannot be sized (then the caller must assume large)."""
     try:
         files = df.inputFiles()
     except Exception:
-        return -1
-    if not files or not all(f.startswith("file:") for f in files):
-        return -1
+        return None
     import os
     from urllib.parse import unquote, urlparse
     total = 0
     for f in files:
+        if not f.startswith("file:"):
+            return None
         try:
             total += os.path.getsize(unquote(urlparse(f).path))
         except OSError:
-            return -1
+            return None
     return total
 
 
@@ -228,7 +228,8 @@ def _ordered_pairs(df: DataFrame, *cols: str) -> DataFrame:
     r14 scale guard (VERDICT r13): pair lists are not guaranteed small
     at 100 TB (a boilerplate-heavy corpus emits billions), and the
     single-partition tail was a cliff. When the INPUT corpus exceeds
-    _ORDERED_PAIRS_INPUT_MAX_BYTES, fall back to a lazy
+    _ORDERED_PAIRS_INPUT_MAX_BYTES, or its size is unknown (files
+    that are not local, such as s3a://), fall back to a lazy
     localCheckpoint + range orderBy: the checkpoint materializes the
     heavy chain ONCE (the RangePartitioner's sampling job fills the
     checkpoint blocks and the real exchange re-reads them, instead of
@@ -239,7 +240,8 @@ def _ordered_pairs(df: DataFrame, *cols: str) -> DataFrame:
     the two also time within noise of each other: best 4.03 vs
     4.42 s). At bench scales the input sits far below the threshold —
     plan and timing byte-identical to r13."""
-    if _input_bytes(df) > _ORDERED_PAIRS_INPUT_MAX_BYTES:
+    size = _input_bytes(df)
+    if size is None or size > _ORDERED_PAIRS_INPUT_MAX_BYTES:
         return df.localCheckpoint(eager=False).orderBy(*cols)
     return df.repartition(1).sortWithinPartitions(*cols)
 

@@ -18,9 +18,11 @@ from pyspark.sql import types as T
 
 import re as _re
 
-from druid_spark.catalog import Catalog
+from druid_spark.cache import LockedLRU
+from druid_spark.catalog import Catalog, interval_ranges
 from druid_spark.expr import compile_expr, parse, Compiler, Bin, Ref
 from druid_spark.filters import FilterCompiler
+from druid_spark.time_filters import lift_time_bounds
 from druid_spark.dimensions import virtual_columns
 
 # Druid SQL: EXPLAIN PLAN [WITH ...] FOR <query>
@@ -38,7 +40,6 @@ _EXPLAIN_RE = _re.compile(
 import itertools as _it
 import threading as _threading
 import weakref as _weakref
-from collections import OrderedDict
 _ENGINE_SERIAL = _it.count(1)
 _SYS_DOT_RE = _re.compile(
     r"\bsys\.(tasks|segments|servers|server_segments|supervisors)\b",
@@ -70,44 +71,6 @@ RESULT_CACHE_ENTRIES = 32
 RESULT_CACHE_MAX_ROWS = 10_000
 # result-cache marker: this key's result is over the row cap
 _OVER_CAP = object()
-
-
-class LockedLRU:
-    """A fixed-capacity LRU map behind one lock, with hit and miss
-    counts; server threads share it. A value is built outside the lock,
-    so two threads missing on one key may both build it."""
-
-    def __init__(self, capacity: int):
-        self.capacity = capacity
-        self.hits = self.misses = 0
-        self._entries: "OrderedDict[str, Any]" = OrderedDict()
-        self._lock = _threading.Lock()
-
-    def __len__(self) -> int:
-        return len(self._entries)
-
-    def get_or_build(self, key: str, build: Callable[[], Any]) -> Any:
-        """The value under `key`; on a miss, build() and store it."""
-        with self._lock:
-            if key in self._entries:
-                self._entries.move_to_end(key)
-                self.hits += 1
-                return self._entries[key]
-            self.misses += 1
-        value = build()
-        self.put(key, value)
-        return value
-
-    def put(self, key: str, value: Any) -> None:
-        with self._lock:
-            self._entries[key] = value
-            self._entries.move_to_end(key)
-            if len(self._entries) > self.capacity:
-                self._entries.popitem(last=False)
-
-    def clear(self) -> None:
-        with self._lock:
-            self._entries.clear()
 
 
 class _CachedResult(_ClassicDataFrame):
@@ -412,9 +375,8 @@ class DruidSparkEngine:
                 per[n] = None  # conflicting scopes → whole table
         out = []
         for n in sorted(set(names)):
-            part, ivs = self.catalog.partitioning(n), per.get(n)
-            ranges = (self._interval_part_ranges(ivs, part[1])
-                      if part and ivs else None)
+            ivs = per.get(n)
+            ranges = interval_ranges(ivs) if ivs else None
             out.append(f"{n}={self.catalog.fingerprint(n, ranges)}")
         return ";".join(out)
 
@@ -435,27 +397,6 @@ class DruidSparkEngine:
                 if ivs:
                     return ivs
         return None
-
-    @staticmethod
-    def _interval_part_ranges(intervals, fmt: str) \
-            -> list[tuple[str, str]]:
-        """Intervals → inclusive [lo, hi] partition-value string ranges
-        (zero-padded date_format values: chronological == lexicographic,
-        same contract as _partition_predicate)."""
-        import datetime as _dt
-        py_fmt = fmt.replace("yyyy", "%Y").replace("MM", "%m") \
-            .replace("dd", "%d").replace("HH", "%H")
-        if isinstance(intervals, dict):
-            intervals = intervals["intervals"]
-        from druid_spark.granularity import parse_iso_interval
-        out = []
-        for iv in intervals:
-            a, b = parse_iso_interval(iv)
-            lo = _dt.datetime.fromisoformat(a).strftime(py_fmt)
-            hi = (_dt.datetime.fromisoformat(b)
-                  - _dt.timedelta(milliseconds=1)).strftime(py_fmt)
-            out.append((lo, hi))
-        return out
 
     def close(self) -> None:
         """Drop the cached plans and results. The engine does not own
@@ -721,17 +662,35 @@ class DruidSparkEngine:
                 f"dne={self.sketch_default_nominal_entries}||"
                 + ";".join(f"{n}={serials.get(n, 0)}"
                            for n in sorted(ref_tables)),
-                lambda: self.spark.sql(final))
+                lambda: self._run_sql(final))
         # System-schema views (sys.tasks, sys.supervisors, ...) mutate
         # without a catalog bump — their statements always re-analyze.
         if _re.search(r"\b(?:sys|information_schema)_\w+", final):
             return self.spark.sql(final)
         # catalog.version (read before the view refresh) covers lookup
         # re-registration (LOOKUP's SQL UDF body inlines its content) and
-        # every table registration, appends included.
+        # every table registration, appends included; the files a pruned
+        # scan reads follow from the statement and the registrations.
         return self._plan_cache.get_or_build(
             f"plansql||{final}||exact={exact}||cv={stamp[1]}",
-            lambda: self.spark.sql(final))
+            lambda: self._run_sql(final))
+
+    def _run_sql(self, text: str) -> DataFrame:
+        """spark.sql(text), reading each table whose `__time` the WHERE
+        clause bounds through Catalog.scan: the table's name gives way
+        to the catalog's view over the pruned scan."""
+        lifts = lift_time_bounds(text, self.catalog.tables())
+        if not lifts:
+            return self.spark.sql(text)
+        with self.catalog.scan_views() as bind:
+            for lift in sorted(lifts, key=lambda lift: -lift.span[0]):
+                view = bind(lift.table, [lift.range])
+                if view is not None:
+                    a, b = lift.span
+                    text = (text[:a] + view
+                            + ("" if lift.aliased else " AS " + text[a:b])
+                            + text[b:])
+            return self.spark.sql(text)
 
     def _scalar_array_cols(self, tables: set | None = None
                            ) -> tuple[set, set, dict, dict]:
@@ -1162,18 +1121,23 @@ class DruidSparkEngine:
             "error_msg": error_msg})
 
     # ---------------------------------------------------- datasources
-    def resolve(self, ds: Any, ctx: dict | None = None) -> DataFrame:
+    def resolve(self, ds: Any, ctx: dict | None = None,
+                ranges=None) -> DataFrame:
         """Datasource composition — processing/.../query/DataSource.java:41-53
         (table | union | query | join | lookup | inline | unnest | filter |
         restrict | globalTable). `ctx` is the query context (skewHint
-        reaches the join compiler through it)."""
+        reaches the join compiler through it). `ranges` are the query's
+        intervals as Catalog.scan takes them: they prune every table
+        whose `__time` the result keeps — union branches and the bases
+        of a join's left side, filter, restrict and unnest — and the
+        caller must filter the result on them."""
         if isinstance(ds, str):
-            return self.catalog.table(ds)
+            return self.catalog.scan(ds, ranges)
         t = ds["type"]
         if t in ("table", "globalTable"):
-            return self.catalog.table(ds["name"])
+            return self.catalog.scan(ds["name"], ranges)
         if t == "union":
-            dfs = [self.resolve(d, ctx) for d in ds["dataSources"]]
+            dfs = [self.resolve(d, ctx, ranges) for d in ds["dataSources"]]
             out = dfs[0]
             for d in dfs[1:]:
                 out = out.unionByName(d, allowMissingColumns=True)
@@ -1187,21 +1151,21 @@ class DruidSparkEngine:
             rows = [tuple(r) for r in ds["rows"]]
             return self.spark.createDataFrame(rows, names)
         if t == "filter":
-            base = self.resolve(ds["base"], ctx)
+            base = self.resolve(ds["base"], ctx, ranges)
             fc = FilterCompiler(base, qcol, self.catalog.lookups)
             return base.where(fc.compile(ds["filter"]))
         if t == "restrict":
             # RestrictedDataSource + Policy (policy/Policy.java:36-37):
             # "row" applies a row-filter (RowFilterPolicy.java:62 ANDs it
             # into the cursor spec); "noRestriction" is a passthrough.
-            base = self.resolve(ds["base"], ctx)
+            base = self.resolve(ds["base"], ctx, ranges)
             pol = ds.get("policy") or {}
             if pol.get("type") == "row":
                 fc = FilterCompiler(base, qcol, self.catalog.lookups)
                 return base.where(fc.compile(pol["rowFilter"]))
             return base
         if t == "unnest":
-            base = self.resolve(ds["base"], ctx)
+            base = self.resolve(ds["base"], ctx, ranges)
             vc = ds["virtualColumn"]
             src = compile_expr(vc["expression"], qcol, self.catalog.lookups)
             out = base.withColumn(vc["name"], F.explode(src))
@@ -1210,10 +1174,11 @@ class DruidSparkEngine:
                 out = out.where(fc.compile(ds["unnestFilter"]))
             return out
         if t == "join":
-            return self._join(ds, ctx)
+            return self._join(ds, ctx, ranges)
         raise NotImplementedError(f"datasource type {t}")
 
-    def _join(self, ds: dict, ctx: dict | None = None) -> DataFrame:
+    def _join(self, ds: dict, ctx: dict | None = None,
+              ranges=None) -> DataFrame:
         """Join datasource (processing/.../query/JoinDataSource.java:91).
         The right side is broadcast in the reference (lookup/inline/
         subquery); we hint broadcast() for those shapes and let AQE
@@ -1234,7 +1199,7 @@ class DruidSparkEngine:
         side's join key with a one-pass freqItems summary and takes
         the salt arm only when some key exceeds the threshold share
         (default 0.2). skewHint wins when both are set."""
-        left = self.resolve(ds["left"], ctx)
+        left = self.resolve(ds["left"], ctx, ranges)
         right = self.resolve(ds["right"], ctx)
         prefix = ds.get("rightPrefix", "j0.")
         for c in right.columns:
@@ -1311,18 +1276,17 @@ class DruidSparkEngine:
     # ---------------------------------------------------- shared compile steps
     def prepare(self, q: dict) -> QueryContext:
         """Resolve datasource, compile virtual columns, apply intervals +
-        filter. Interval predicates on `__time` reach the Parquet scan as
-        PushedFilters — the Spark analog of Druid's segment interval
-        pruning (CachingClusteredClient.computeSegmentsToQuery:430)."""
-        df = self.resolve(q["dataSource"], q.get("context"))
+        filter. The intervals pick the files each table scan reads
+        (Catalog.scan, the analog of Druid's segment interval pruning in
+        CachingClusteredClient.computeSegmentsToQuery:430), then filter
+        the rows on `__time`."""
+        ivs = q.get("intervals")
+        pred = self.intervals_predicate(ivs)
+        df = self.resolve(q["dataSource"], q.get("context"),
+                          interval_ranges(ivs) if pred is not None else None)
         vcols = virtual_columns(q.get("virtualColumns"), qcol, self.catalog.lookups)
         ctx = QueryContext(df, vcols, self.catalog.lookups)
-        pred = self.intervals_predicate(q.get("intervals"))
         if pred is not None:
-            ppred = self._partition_predicate(q["dataSource"],
-                                              q.get("intervals"), df)
-            if ppred is not None:
-                df = df.where(ppred)  # prunes __dt partitions at the scan
             df = df.where(pred)
         if q.get("filter"):
             fc = FilterCompiler(df, ctx.resolver(), self.catalog.lookups)
@@ -1336,27 +1300,6 @@ class DruidSparkEngine:
                 df = df.drop(part[0])
         ctx.df = df
         return ctx
-
-    def _partition_predicate(self, ds, intervals, df) -> Column | None:
-        """Derive a partition-column predicate from the query intervals
-        for time-partitioned warehouse tables — the Spark analog of
-        Druid's segment interval pruning
-        (CachingClusteredClient.computeSegmentsToQuery:430). Partition
-        values are zero-padded date_format strings, so chronological
-        range == lexicographic range."""
-        if not isinstance(ds, str) or not intervals:
-            return None
-        part = self.catalog.partitioning(ds)
-        if part is None:
-            return None
-        col, fmt = part
-        if col not in df.columns:
-            return None
-        out = None
-        for lo, hi in self._interval_part_ranges(intervals, fmt):
-            p = (qcol(col) >= F.lit(lo)) & (qcol(col) <= F.lit(hi))
-            out = p if out is None else (out | p)
-        return out
 
     @staticmethod
     def intervals_predicate(intervals) -> Column | None:

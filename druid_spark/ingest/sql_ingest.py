@@ -204,7 +204,7 @@ def _run_ingest_body(engine, stmt: IngestStatement):
     svc.write(df, stmt.table, stmt.granularity, mode=mode,
               cluster_by=stmt.cluster_by)
     # register WITH the __dt partition column so interval queries can
-    # prune time chunks (engine._partition_predicate); query compilers
+    # prune time chunks (Catalog.scan); query compilers
     # never surface __dt unless explicitly selected
     from druid_spark.ingest.batch import _PART_FMT
     tbl = engine.spark.read.parquet(svc.path(stmt.table))

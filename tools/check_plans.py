@@ -17,6 +17,36 @@ from druid_spark import DruidSparkEngine
 from druid_spark.session import get_spark
 
 
+def write_day_files(path: str, days: int = 4) -> list[int]:
+    """A directory table of `days` Parquet files, file i holding
+    100 * (i + 1) rows spread over day 2024-01-01 + i, the time column
+    `ts` a timezone-less timestamp('us'); returns the row counts."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    os.makedirs(path, exist_ok=True)
+    counts = []
+    for i in range(days):
+        n = 100 * (i + 1)
+        day = np.datetime64("2024-01-01", "us") + np.timedelta64(i, "D")
+        ts = day + (np.linspace(0, 86_399, n) * 1e6).astype("timedelta64[us]")
+        pq.write_table(pa.table({
+            "ts": pa.array(ts, type=pa.timestamp("us")),
+            "k": pa.array(np.arange(n) % 50, type=pa.int64()),
+            "v": np.random.default_rng(i).uniform(0, 1000, n)}),
+            os.path.join(path, f"part-{i}.parquet"))
+        counts.append(n)
+    return counts
+
+
+def file_pruning_failure(engine, query: dict, want: list[str]) -> str | None:
+    """None if the compiled native query reads exactly the files named
+    `want`, else what it reads."""
+    got = sorted(f.rsplit("/", 1)[-1]
+                 for f in engine.query(query).inputFiles())
+    return None if got == sorted(want) else f"reads {got}, want {sorted(want)}"
+
+
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -154,6 +184,30 @@ def main():
             print("FAIL partition_pruning")
     finally:
         shutil.rmtree(wh, ignore_errors=True)
+
+    # 8b. a footer-bounded directory table: an interval query reads only
+    # the files whose time bounds meet its intervals (the catalog's time
+    # timeline — Spark's PushedFilters skip nothing on timestamps stored
+    # without UTC adjustment)
+    fdir = tempfile.mkdtemp(prefix="planstl_")
+    try:
+        write_day_files(fdir)
+        engine.catalog.register_table("plans_tl", fdir, time_column="ts")
+        why = file_pruning_failure(engine, {
+            "queryType": "timeseries", "dataSource": "plans_tl",
+            "granularity": "all",
+            "intervals": ["2024-01-02T06:00:00Z/2024-01-02T18:00:00Z"],
+            "aggregations": [{"type": "count", "name": "n"}]},
+            ["part-1.parquet"])
+        if why is None:
+            print("PASS file_pruning (interval query on 4 day-files "
+                  "reads only the overlapping one)")
+        else:
+            failures.append("file_pruning")
+            print(f"FAIL file_pruning: {why}")
+        engine.catalog.drop_table("plans_tl")
+    finally:
+        shutil.rmtree(fdir, ignore_errors=True)
 
     # 9. embedding near-dup default path is banded LSH: equi-joins only
     from druid_spark.datapipe.dedup import embedding_neardup_pairs
