@@ -228,11 +228,16 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
     return df
 
 
-def _time_source(columns: list[str], time_column: str | None) -> str | None:
-    """The stored column the registered `__time` reads."""
-    if "__time" in columns:
-        return "__time"
-    return time_column if time_column in columns else None
+def _time_source(columns: list[str], df: DataFrame,
+                 time_column: str | None) -> str | None:
+    """The stored column (among the raw `columns`) that the registered
+    `df`'s `__time` reads, if that `__time` is a timestamp (a nanos
+    column read from a directory stays a long)."""
+    from pyspark.sql import types as T
+    if "__time" not in df.columns or not isinstance(
+            df.schema["__time"].dataType, T.TimestampType):
+        return None
+    return "__time" if "__time" in columns else time_column
 
 
 def _overlapping(tl: _Timeline | None, part, ranges) -> tuple | None:
@@ -490,7 +495,8 @@ class Catalog:
             schema = source.schema
             self._publish_timeline(
                 name, files,
-                _time_source(source.columns, time_column) if bare else None,
+                _time_source(source.columns, df, time_column) if bare
+                else None,
                 lambda fs: _normalize(
                     self.spark.read.schema(schema).parquet(*fs), time_column))
         elif not isinstance(source, str):
@@ -531,7 +537,7 @@ class Catalog:
         self._tables[name] = df
         self._publish_timeline(
             name, tuple(sorted(df.inputFiles())),
-            _time_source(raw.columns, time_column),
+            _time_source(raw.columns, df, time_column),
             lambda fs: _normalize(
                 self.spark.read.schema(raw.schema).parquet(*fs),
                 time_column, path))

@@ -201,16 +201,18 @@ def test_lifter_reads_only_plain_shapes():
         assert lift_time_bounds(text, tables) == [], text
 
 
-def _write_ts(path: str, **kw) -> None:
+def _write_ts(path: str, unit: str = "us", **kw) -> None:
     us = np.arange(4, dtype="int64") * 86_400_000_000 + to_us(
         dt.datetime(2024, 1, 1))
-    pq.write_table(pa.table({"ts": pa.array(us, type=pa.timestamp("us")),
-                             "v": np.arange(4.0)}), path, **kw)
+    ts = pa.array(us, type=pa.timestamp("us")).cast(pa.timestamp(unit))
+    pq.write_table(pa.table({"ts": ts, "v": np.arange(4.0)}), path, **kw)
 
 
 @pytest.mark.parametrize("kw", [{"write_statistics": False},
-                                {"use_deprecated_int96_timestamps": True}],
-                         ids=["no_statistics", "int96"])
+                                {"use_deprecated_int96_timestamps": True},
+                                # read from a directory, nanos stay longs
+                                {"unit": "ns"}],
+                         ids=["no_statistics", "int96", "nanos_as_long"])
 def test_unknown_timeline_scans_whole_table(spark, tmp_path, kw):
     for i in range(2):
         _write_ts(str(tmp_path / f"part-{i}.parquet"), **kw)
