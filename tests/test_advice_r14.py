@@ -10,7 +10,8 @@
 - minhash_lsh_pairs: tab/newline-only docs (which slip past the
   space-only trim) neither error nor change the pair list.
 - _ordered_pairs: the large-input range-sort branch returns the same
-  collected order as the single-partition branch.
+  collected order as the single-partition branch, and an input of
+  unknown size takes it.
 """
 
 from __future__ import annotations
@@ -107,6 +108,19 @@ def test_ordered_pairs_large_branch_same_order(spark, monkeypatch):
     monkeypatch.setattr(dedup, "_input_bytes", lambda _df: 1 << 40)
     big = dedup._ordered_pairs(df, "id_a", "id_b").collect()
     assert small == big
+
+
+def test_ordered_pairs_unknown_input_size_is_distributed(spark, monkeypatch):
+    """An input whose size cannot be read (here s3a://) must not be
+    taken for a small one and funneled into one partition."""
+    df = spark.createDataFrame([(3, 5), (1, 2)], "id_a long, id_b long")
+    monkeypatch.setattr(df, "inputFiles",
+                        lambda: ["s3a://bucket/docs/part-0.parquet"])
+    assert dedup._input_bytes(df) is None
+    out = dedup._ordered_pairs(df, "id_a", "id_b")
+    plan = out._jdf.queryExecution().executedPlan().toString().lower()
+    assert "rangepartitioning" in plan
+    assert [tuple(r) for r in out.collect()] == [(1, 2), (3, 5)]
 
 
 def test_persist_scoped_drops_previous_different_plan(spark):

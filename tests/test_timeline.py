@@ -16,7 +16,6 @@ import pytest
 from druid_spark import DruidSparkEngine
 from druid_spark.catalog import (SCAN_CACHE_ENTRIES, _footer_bounds,
                                  interval_ranges, to_us)
-from druid_spark.datapipe import dedup
 from druid_spark.time_filters import lift_time_bounds
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
@@ -230,19 +229,6 @@ def test_unknown_timeline_for_remote_and_untimed_files(tmp_path):
     assert _footer_bounds(("s3a://bucket/t/a.parquet",), "ts", {}) is None
     assert _footer_bounds((local,), "v", {}) is None  # not a timestamp
     assert _footer_bounds((local,), None, {}) is None
-
-
-def test_ordered_pairs_unknown_input_size_is_distributed(spark, monkeypatch):
-    """An input whose size cannot be read (here s3a://) must not be
-    taken for a small one and funneled into one partition."""
-    df = spark.createDataFrame([(3, 5), (1, 2)], "id_a long, id_b long")
-    monkeypatch.setattr(df, "inputFiles",
-                        lambda: ["s3a://bucket/docs/part-0.parquet"])
-    assert dedup._input_bytes(df) is None
-    out = dedup._ordered_pairs(df, "id_a", "id_b")
-    plan = out._jdf.queryExecution().executedPlan().toString().lower()
-    assert "rangepartitioning" in plan
-    assert [tuple(r) for r in out.collect()] == [(1, 2), (3, 5)]
 
 
 def test_file_pruning_check_fails_without_intervals(tl):
