@@ -53,6 +53,9 @@ _US = _dt.timedelta(microseconds=1)
 # these stand for an unbounded side
 MIN_US, MAX_US = -(1 << 62), 1 << 62
 _UNIT_US = {"milliseconds": 1000, "microseconds": 1, "nanoseconds": 0.001}
+_DAY_US = 86_400_000_000
+_UTC_ZONES = {"UTC", "Etc/UTC", "GMT", "Etc/GMT", "Z", "+00:00", "UCT",
+              "Etc/UCT", "Universal", "Etc/Universal", "Zulu", "Etc/Zulu"}
 
 
 def to_us(t: _dt.datetime) -> int:
@@ -76,10 +79,12 @@ def interval_ranges(intervals) -> list[tuple[int, int]]:
     return out
 
 
-def _part_ranges(fmt: str, ranges) -> list[tuple[str | None, str | None]]:
+def _part_ranges(part, ranges) -> list[tuple[str | None, str | None]]:
     """Time ranges as inclusive [lo, hi] partition-value ranges (None:
-    unbounded). Values are zero-padded date_format strings, so
-    chronological order is lexicographic order."""
+    unbounded) of a table partitioned as `part` (column, date_format
+    pattern, segment granularity). A value is its bucket's start,
+    zero-padded, so chronological order is lexicographic order."""
+    _col, fmt, grain = part
     py_fmt = fmt.replace("yyyy", "%Y").replace("MM", "%m") \
         .replace("dd", "%d").replace("HH", "%H")
     lo_ok, hi_ok = to_us(_dt.datetime.min), to_us(_dt.datetime.max)
@@ -89,14 +94,31 @@ def _part_ranges(fmt: str, ranges) -> list[tuple[str | None, str | None]]:
             return None
         return (_EPOCH + us * _US).strftime(py_fmt)
 
-    return [(fmt_us(a), fmt_us(b - 1)) for a, b in ranges]
+    def bucket_start(us: int) -> int:
+        # a week's value is its Monday's date (1970-01-01 was a Thursday);
+        # formatting floors every other grain to its bucket
+        if grain == "week":
+            return us - (us // _DAY_US + 3) % 7 * _DAY_US
+        return us
+
+    return [(fmt_us(bucket_start(a)), fmt_us(b - 1)) for a, b in ranges]
 
 
-def _parquet_time_bounds(path: str, column: str) -> tuple[int, int] | None:
+def _utc_session(spark: SparkSession) -> bool:
+    """Whether the session reads zone-less timestamps (SQL literals,
+    footers stored without UTC adjustment) as UTC, as the timeline
+    assumes."""
+    return spark.conf.get("spark.sql.session.timeZone") in _UTC_ZONES
+
+
+def _parquet_time_bounds(path: str, column: str
+                         ) -> tuple[int, int, bool] | None:
     """Min and max epoch microseconds of a top-level INT64 timestamp
-    column over one local Parquet file's row-group statistics; None if
-    the column is missing, not a timestamp (INT96 included) or lacks
-    statistics. A file with no rows gets an empty range."""
+    column over one local Parquet file's row-group statistics, and
+    whether the column is stored UTC-adjusted (else the bounds are
+    wall-clock values); None if the column is missing, not a timestamp
+    (INT96 included) or lacks statistics. A file with no rows gets an
+    empty range."""
     import pyarrow.parquet as pq
     try:
         md = pq.read_metadata(path)
@@ -107,7 +129,8 @@ def _parquet_time_bounds(path: str, column: str) -> tuple[int, int] | None:
     if idx is None:
         return None
     col = md.schema.column(idx)
-    unit = json.loads(col.logical_type.to_json()).get("timeUnit")
+    logical = json.loads(col.logical_type.to_json())
+    unit, utc = logical.get("timeUnit"), logical.get("isAdjustedToUTC")
     if col.physical_type != "INT64" or unit not in _UNIT_US:
         return None
     lo, hi = MAX_US, MIN_US
@@ -120,20 +143,22 @@ def _parquet_time_bounds(path: str, column: str) -> tuple[int, int] | None:
             return None
         lo, hi = min(lo, st.min_raw), max(hi, st.max_raw)
     if lo > hi:
-        return lo, hi
+        return lo, hi, utc
     # nanos reach the engine through a double division (_fix_nanos):
     # widen by a microsecond either side
     if unit == "nanoseconds":
-        return lo // 1000 - 1, hi // 1000 + 1
-    return lo * _UNIT_US[unit], hi * _UNIT_US[unit]
+        return lo // 1000 - 1, hi // 1000 + 1, utc
+    return lo * _UNIT_US[unit], hi * _UNIT_US[unit], utc
 
 
-def _footer_bounds(files, column, known) -> tuple | None:
-    """Per file (stamp, min, max) of `column` from the Parquet footers,
-    reusing `known` entries whose file stamp (size, mtime) is unchanged
-    so each footer is read once. None (the timeline is unknown) unless
-    every file is a local (`file:`) file in one flat directory with
-    usable statistics."""
+def _footer_bounds(files, column, known, utc_session) -> tuple | None:
+    """Per file (stamp, min, max, UTC-adjusted) of `column` from the
+    Parquet footers, reusing `known` entries whose file stamp (size,
+    mtime) is unchanged so each footer is read once. None (the timeline
+    is unknown) unless every file is a local (`file:`) file in one flat
+    directory with usable statistics. Outside a UTC session (see
+    _utc_session) wall-clock bounds are unusable too: Spark reads such
+    a column in the session's zone."""
     if not column or not files:
         return None
     parents = {f.rsplit("/", 1)[0] for f in files}
@@ -155,18 +180,30 @@ def _footer_bounds(files, column, known) -> tuple | None:
             if b is None:
                 return None
             entry = (stamp, *b)
+        if not (entry[3] or utc_session):
+            return None
         out.append(entry)
     return tuple(out)
 
 
-class _Timeline(NamedTuple):
-    """What a path-backed table's registered DataFrame reads: its
-    files, each file's (stamp, min, max) time bounds when known, and a
-    reader giving the table's DataFrame over a subset of the files."""
-    serial: int
-    files: tuple[str, ...]
-    bounds: tuple | None
-    read: Callable[[list[str]], DataFrame]
+class _Table(NamedTuple):
+    """A registered table: its DataFrame `df`, the serial `reg` of the
+    registration that made it and, for a path-backed table, its time
+    timeline — the files `df` reads (recorded once, with inputFiles(),
+    when it is built), each file's footer time bounds when known (see
+    _footer_bounds) and a reader giving `df` over a subset of the
+    files. Scans are cut from one _Table, so the files they pick, the
+    DataFrame they fall back to and the key they are cached under
+    always belong to the same registration."""
+    reg: int
+    df: DataFrame
+    files: tuple[str, ...] | None = None
+    bounds: tuple | None = None
+    read: Callable[[list[str]], DataFrame] | None = None
+
+
+# registration serials, unique across tables and catalogs
+_REG_SERIALS = itertools.count(1)
 
 
 class _Scan:
@@ -240,24 +277,24 @@ def _time_source(columns: list[str], df: DataFrame,
     return "__time" if "__time" in columns else time_column
 
 
-def _overlapping(tl: _Timeline | None, part, ranges) -> tuple | None:
-    """The timeline's files whose time span meets the half-open
+def _overlapping(t: _Table, part, ranges) -> tuple | None:
+    """The table's files whose time span meets the half-open
     epoch-microsecond `ranges`: by partition value when the table is
     partitioned (`part`), else by footer bounds. None when there is no
     timeline (every file may hold any time)."""
-    if tl is None:
+    if t.files is None:
         return None
     if part:
         marker = f"/{part[0]}="
-        pr = _part_ranges(part[1], ranges)
+        pr = _part_ranges(part, ranges)
         return tuple(
-            f for f in tl.files if marker in f and any(
+            f for f in t.files if marker in f and any(
                 (lo is None or lo <= v) and (hi is None or v <= hi)
                 for v in [f.split(marker, 1)[1].split("/", 1)[0]]
                 for lo, hi in pr))
-    if tl.bounds is None:
+    if t.bounds is None:
         return None
-    return tuple(f for f, (_st, lo, hi) in zip(tl.files, tl.bounds)
+    return tuple(f for f, (_st, lo, hi, _utc) in zip(t.files, t.bounds)
                  if any(lo < b and hi >= a for a, b in ranges))
 
 
@@ -275,9 +312,12 @@ def _part_predicate(column: str, pr) -> str:
 class Catalog:
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self._tables: dict[str, DataFrame] = {}
-        # name -> (path, time_column): registered but not yet read
-        self._pending: dict[str, tuple[str, str | None]] = {}
+        # name -> its _Table, published whole: the segment timeline
+        # analog scan() and fingerprint() prune by
+        self._tables: dict[str, _Table] = {}
+        # name -> (path, time_column, registration serial): registered
+        # but not yet read
+        self._pending: dict[str, tuple[str, str | None, int]] = {}
         # name -> column names stored as JSON text (COMPLEX<json>)
         self._json_cols: dict[str, set[str]] = {}
         # lookup registry by tier (LookupCoordinatorResource manages
@@ -293,19 +333,15 @@ class Catalog:
         # per sql() call otherwise)
         self.version = 0
         self._paths: dict[str, str] = {}  # table -> source path (sys.segments)
-        # table -> (partition column, strftime-style date_format pattern):
-        # lets scan() derive partition predicates from __time intervals
-        # (Catalyst cannot infer __dt from __time on its own)
-        self._partitioning: dict[str, tuple[str, str]] = {}
-        # table -> registration serial (bumped per register_table and
+        # table -> (partition column, date_format pattern, segment
+        # granularity): lets scan() derive partition predicates from
+        # __time intervals (Catalyst cannot infer __dt from __time on
+        # its own)
+        self._partitioning: dict[str, tuple[str, str, str | None]] = {}
+        # table -> registration serial (a new one per register_table and
         # drop_table call): the whole-table snapshot identity that
         # result-cache keys name
         self._reg_serial: dict[str, int] = {}
-        # path-backed table -> its time timeline (_Timeline: files read
-        # by the registered DataFrame, recorded once with inputFiles()
-        # when it is built, and their footer time bounds), the segment
-        # timeline analog scan() and fingerprint() prune by
-        self._timelines: dict[str, _Timeline] = {}
         self._scans = LockedLRU(SCAN_CACHE_ENTRIES, on_evict=self._retire)
         # SQL views over cached scans (scan_views): statements binding
         # now, and views of scans that left the cache, dropped when none is
@@ -317,10 +353,17 @@ class Catalog:
         # segments" analog behind restore_table()
         self._dropped: dict[str, tuple] = {}
 
-    def set_partitioning(self, name: str, column: str, fmt: str) -> None:
-        self._partitioning[name] = (column, fmt)
+    def set_partitioning(self, name: str, column: str, fmt: str,
+                         granularity: str | None = None) -> None:
+        """`name` is partitioned on `column`, whose values are the
+        date_format(`fmt`) of each row's segment-granularity bucket. A
+        day-format table without its granularity may be a week table
+        (WEEK shares the day format), so its ranges start a week early."""
+        if granularity is None and fmt == "yyyy-MM-dd":
+            granularity = "week"
+        self._partitioning[name] = (column, fmt, granularity)
 
-    def partitioning(self, name: str) -> tuple[str, str] | None:
+    def partitioning(self, name: str) -> tuple[str, str, str | None] | None:
         return self._partitioning.get(name)
 
     def source_path(self, name: str) -> str | None:
@@ -331,14 +374,18 @@ class Catalog:
         registration serial (a registered DataFrame is a fixed file
         snapshot), or, for a partitioned path-backed table, a hash of
         its registered files within the time `ranges`."""
+        # registrations publish the serial last (register_table): a
+        # table of a registration whose serial is not out yet is named
+        # by the older serial, never the reverse
+        reg = self._reg_serial.get(name, 0)
         part = self._partitioning.get(name)
-        if ranges and part:
-            self.table(name)  # a pending table records its timeline here
-            files = _overlapping(self._timelines.get(name), part, ranges)
+        if ranges and part and _utc_session(self.spark):
+            t = self._table(name)
+            files = _overlapping(t, part, ranges) if t.reg == reg else None
             if files is not None:
                 return hashlib.blake2b("\n".join(files).encode(),
                                        digest_size=16).hexdigest()
-        return f"reg:{self._reg_serial.get(name, 0)}"
+        return f"reg:{reg}"
 
     def scan(self, name: str, ranges=None) -> DataFrame:
         """`name`'s DataFrame cut down to the data that can meet the
@@ -349,41 +396,39 @@ class Catalog:
         partition pruning applies; a footer-bounded table is re-read
         over the overlapping files only, with the registered schema; a
         table without a timeline, or whose files all overlap, is the
-        registered DataFrame itself."""
+        registered DataFrame itself, as is every table outside a UTC
+        session (_utc_session)."""
         entry = self._pruned(name, ranges)
         return self.table(name) if entry is None else entry.df
 
     def _pruned(self, name: str, ranges) -> _Scan | None:
         """The scan-cache entry of scan(name, ranges); None when that is
         the registered DataFrame."""
-        serial = self._reg_serial.get(name, 0)
-        df = self.table(name)
-        if ranges is None:
+        t = self._table(name)
+        if ranges is None or not _utc_session(self.spark):
             return None
         ranges = [(a, b) for a, b in ranges if a < b]
         part = self._partitioning.get(name)
-        if part and part[0] in df.columns:
-            pr = _part_ranges(part[1], ranges)
+        if part and part[0] in t.df.columns:
+            pr = _part_ranges(part, ranges)
             if (None, None) in pr:
                 return None  # an unbounded range covers every partition
             return self._scans.get_or_build(
-                (name, serial, tuple(pr)),
-                lambda: _Scan(df.where(_part_predicate(part[0], pr))))
-        tl = self._timelines.get(name)
-        files = _overlapping(tl, None, ranges)
-        if files is None or len(files) == len(tl.files):
+                (name, t.reg, tuple(pr)),
+                lambda: _Scan(t.df.where(_part_predicate(part[0], pr))))
+        files = _overlapping(t, None, ranges)
+        if files is None or len(files) == len(t.files):
             return None
         return self._scans.get_or_build(
-            (name, tl.serial, files),
-            lambda: _Scan(self._read_files(df, tl, files)))
+            (name, t.reg, files), lambda: _Scan(self._read_files(t, files)))
 
     @staticmethod
-    def _read_files(df: DataFrame, tl: _Timeline, files) -> DataFrame:
+    def _read_files(t: _Table, files) -> DataFrame:
         if not files:
-            return df.where(F.lit(False))
-        out = tl.read(list(files))
+            return t.df.where(F.lit(False))
+        out = t.read(list(files))
         # the registered DataFrame if the re-read differs in any way
-        return out if out.schema == df.schema else df
+        return out if out.schema == t.df.schema else t.df
 
     @contextlib.contextmanager
     def scan_views(self):
@@ -426,16 +471,19 @@ class Catalog:
             while self._binding == 0 and self._retired:
                 self.spark.catalog.dropTempView(self._retired.popleft())
 
-    def _publish_timeline(self, name: str, files, column: str | None,
-                          read: Callable[[list[str]], DataFrame]) -> None:
-        # the table's previous timeline (kept until now) lends the
-        # footer bounds of files it already read
-        old = self._timelines.get(name)
+    def _with_timeline(self, name: str, reg: int, df: DataFrame,
+                       column: str | None,
+                       read: Callable[[list[str]], DataFrame]) -> _Table:
+        # the table's previous registration (kept until the new one is
+        # published) lends the footer bounds of files it already read
+        old = self._tables.get(name)
         known = (dict(zip(old.files, old.bounds))
                  if old is not None and old.bounds else {})
-        self._timelines[name] = _Timeline(
-            self._reg_serial.get(name, 0), files,
-            _footer_bounds(files, column, known), read)
+        files = tuple(sorted(df.inputFiles()))
+        return _Table(
+            reg, df, files,
+            _footer_bounds(files, column, known, _utc_session(self.spark)),
+            read)
 
     def register_dir(self, data_dir: str,
                      time_columns: dict[str, str] | None = None) -> None:
@@ -457,52 +505,50 @@ class Catalog:
         # the Druid-visible type (InformationSchema.java DATA_TYPE).
         # A dict maps column -> DATA_TYPE ('COMPLEX<json>' or 'ARRAY'
         # for variant-element arrays); a list means COMPLEX<json>.
-        files = None
         if json_columns is not None:
             self._json_cols[name] = (
                 dict(json_columns) if isinstance(json_columns, dict)
                 else {c: "COMPLEX<json>" for c in json_columns})
         else:
             self._json_cols.pop(name, None)
+        reg = next(_REG_SERIALS)
         if isinstance(source, str):
             # Lazy: defer the parquet read (schema/footer fetch + nanos/
             # NTZ normalization) until first access. Registering a whole
             # directory costs 10 py4j scan plans otherwise — ~3-4 s of
-            # engine init for tables a query may never touch.
-            self._pending[name] = (source, time_column)
+            # engine init for tables a query may never touch. (The old
+            # _Table stays until _materialize, which reuses its footer
+            # bounds; table() reads a pending registration first.)
+            self._pending[name] = (source, time_column, reg)
             self._paths[name] = source
-            self._tables.pop(name, None)
         else:
-            if source_path:
-                self._paths[name] = source_path
             df = _normalize(source, time_column)
-            self._pending.pop(name, None)
-            self._tables[name] = df
             if source_path:
-                files = tuple(sorted(df.inputFiles()))
-        # Publish the data and the version plan keys name BEFORE the
-        # snapshot identity result keys name (timeline, serial), which
-        # readers take first: a reader that sees the new identity also
-        # gets the new data.
+                # only a bare Parquet read can be re-read file by file
+                bare = source._jdf.queryExecution().analyzed() \
+                    .getClass().getSimpleName() == "LogicalRelation"
+                schema = source.schema
+                t = self._with_timeline(
+                    name, reg, df,
+                    _time_source(source.columns, df, time_column) if bare
+                    else None,
+                    lambda fs: _normalize(
+                        self.spark.read.schema(schema).parquet(*fs),
+                        time_column))
+                self._paths[name] = source_path
+            else:
+                t = _Table(reg, df)
+            self._pending.pop(name, None)
+            self._tables[name] = t
+        # Publish the whole _Table (DataFrame, timeline and the `reg`
+        # scan keys name) BEFORE the version plan keys name, and that
+        # before the serial result keys name; readers take them in the
+        # reverse order, so a reader that sees a new key also gets the
+        # new data.
         self.version += 1
-        self._reg_serial[name] = self._reg_serial.get(name, 0) + 1
+        self._reg_serial[name] = reg
         self._scans.discard(lambda k: k[0] == name)
         self._drop_retired()
-        if files is not None:
-            # only a bare Parquet read can be re-read file by file
-            bare = source._jdf.queryExecution().analyzed() \
-                .getClass().getSimpleName() == "LogicalRelation"
-            schema = source.schema
-            self._publish_timeline(
-                name, files,
-                _time_source(source.columns, df, time_column) if bare
-                else None,
-                lambda fs: _normalize(
-                    self.spark.read.schema(schema).parquet(*fs), time_column))
-        elif not isinstance(source, str):
-            self._timelines.pop(name, None)
-        # (a path registration keeps the old timeline until it is read:
-        # _materialize reuses its footer bounds)
 
     def register_lookup(self, name: str, mapping: dict[str, Any],
                         tier: str = "__default") -> None:
@@ -526,32 +572,32 @@ class Catalog:
         """Lookup name → mapping for one tier; None if no such tier."""
         return self._lookup_tiers.get(tier)
 
-    def _materialize(self, name: str) -> DataFrame:
+    def _materialize(self, name: str) -> _Table:
         # read + normalize BEFORE popping _pending: if the read raises
         # (bad/missing path) the registration must survive so the next
         # table() call re-raises the real error instead of a misleading
         # "unknown datasource".
-        path, time_column = self._pending[name]
+        pending = self._pending[name]
+        path, time_column, reg = pending
         raw = self.spark.read.parquet(path)
         df = _normalize(raw, time_column, path)
-        self._tables[name] = df
-        self._publish_timeline(
-            name, tuple(sorted(df.inputFiles())),
-            _time_source(raw.columns, df, time_column),
+        t = self._tables[name] = self._with_timeline(
+            name, reg, df, _time_source(raw.columns, df, time_column),
             lambda fs: _normalize(
                 self.spark.read.schema(raw.schema).parquet(*fs),
                 time_column, path))
-        self._pending.pop(name, None)
-        return df
+        if self._pending.get(name) == pending:  # not registered anew
+            self._pending.pop(name, None)
+        return t
 
     def schema(self, name: str):
         """Schema WITHOUT materializing a lazily-registered table: a
         pending path gets a footer-only read whose DataFrame is
         discarded, so the deferred registration (and its error
         surface on table()) stays intact."""
-        if name in self._tables:
-            return self._tables[name].schema
-        path, time_column = self._pending[name]
+        if name not in self._pending:
+            return self._tables[name].df.schema
+        path, time_column, _reg = self._pending[name]
         sch = self.spark.read.parquet(path).schema
         if (time_column and time_column in sch.fieldNames()
                 and "__time" not in sch.fieldNames()):
@@ -559,6 +605,9 @@ class Catalog:
         return sch
 
     def table(self, name: str) -> DataFrame:
+        return self._table(name).df
+
+    def _table(self, name: str) -> _Table:
         if name in self._pending:
             return self._materialize(name)
         if name not in self._tables:
@@ -608,12 +657,11 @@ class Catalog:
         self._pending.pop(name, None)
         self._paths.pop(name, None)
         self._partitioning.pop(name, None)
-        self._timelines.pop(name, None)
         self._scans.discard(lambda k: k[0] == name)
         self._drop_retired()
         if known:
             self.version += 1
-            self._reg_serial[name] = self._reg_serial.get(name, 0) + 1
+            self._reg_serial[name] = next(_REG_SERIALS)
             # Also drop the SQL temp views engine.sql created for this
             # name (both the direct view and the mangled alias for
             # non-identifier names) — the view-refresh path only

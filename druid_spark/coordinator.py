@@ -72,7 +72,7 @@ class RetentionDuty:
 
     def _partition_bounds(self, ds: str, value: str):
         """Partition value string → (start, end) datetimes via the
-        table's registered date_format pattern."""
+        table's registered date_format pattern and granularity."""
         part = self.engine.catalog.partitioning(ds)
         fmt = part[1] if part else "yyyy-MM-dd"
         py_fmt = fmt.replace("yyyy", "%Y").replace("MM", "%m") \
@@ -85,6 +85,8 @@ class RetentionDuty:
             end = start.replace(year=start.year + 1)
         elif py_fmt.endswith("%H"):
             end = start + dt.timedelta(hours=1)
+        elif part and part[2] == "week":  # the value is its Monday
+            end = start + dt.timedelta(days=7)
         else:
             end = start + dt.timedelta(days=1)
         return start, end

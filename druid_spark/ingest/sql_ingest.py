@@ -212,5 +212,6 @@ def _run_ingest_body(engine, stmt: IngestStatement):
                                   source_path=svc.path(stmt.table))
     fmt = _PART_FMT.get(stmt.granularity)
     if fmt:
-        engine.catalog.set_partitioning(stmt.table, "__dt", fmt)
+        engine.catalog.set_partitioning(stmt.table, "__dt", fmt,
+                                        stmt.granularity)
     return df

@@ -801,7 +801,8 @@ class _Overlord:
                         .get("segmentGranularity", "day"))
                 fmt = _PART_FMT.get(gran)
                 if fmt:
-                    self.engine.catalog.set_partitioning(name, "__dt", fmt)
+                    self.engine.catalog.set_partitioning(
+                        name, "__dt", fmt, gran)
                 rec["processed"] = sum(
                     nr for ds_, _p, _sz, nr
                     in self.engine.catalog.segments()

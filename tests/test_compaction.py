@@ -241,6 +241,19 @@ def test_retention_drop_requires_containment(eng):
     assert n_before  # silence lints
 
 
+def test_retention_week_partition_spans_its_week():
+    """A WEEK table's `__dt` value is its week's Monday (the day
+    format): the partition's interval is the whole week, so a drop rule
+    must contain all seven days."""
+    import datetime as dt
+    from types import SimpleNamespace
+    from druid_spark.coordinator import RetentionDuty
+    duty = RetentionDuty(SimpleNamespace(catalog=SimpleNamespace(
+        partitioning=lambda ds: ("__dt", "yyyy-MM-dd", "week"))))
+    assert duty._partition_bounds("wk", "2024-01-08") == (
+        dt.datetime(2024, 1, 8), dt.datetime(2024, 1, 15))
+
+
 def test_retention_http_rules_api(eng):
     import datetime as dt
     import json as _json

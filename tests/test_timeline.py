@@ -219,16 +219,19 @@ def test_unknown_timeline_scans_whole_table(spark, tmp_path, kw):
     e.catalog.register_table("unk", str(tmp_path), time_column="ts")
     ranges = interval_ranges(["2030-01-01/2031-01-01"])
     assert e.catalog.scan("unk", ranges) is e.catalog.table("unk")
-    assert e.catalog._timelines["unk"].bounds is None
+    assert e.catalog._tables["unk"].bounds is None
 
 
 def test_unknown_timeline_for_remote_and_untimed_files(tmp_path):
     _write_ts(str(tmp_path / "a.parquet"))
     local = f"file://{tmp_path}/a.parquet"
-    assert _footer_bounds((local,), "ts", {}) is not None
-    assert _footer_bounds(("s3a://bucket/t/a.parquet",), "ts", {}) is None
-    assert _footer_bounds((local,), "v", {}) is None  # not a timestamp
-    assert _footer_bounds((local,), None, {}) is None
+    assert _footer_bounds((local,), "ts", {}, True) is not None
+    assert _footer_bounds(("s3a://bucket/t/a.parquet",), "ts", {},
+                          True) is None
+    assert _footer_bounds((local,), "v", {}, True) is None  # not a timestamp
+    assert _footer_bounds((local,), None, {}, True) is None
+    # stored without UTC adjustment: wall-clock bounds
+    assert _footer_bounds((local,), "ts", {}, False) is None
 
 
 def test_file_pruning_check_fails_without_intervals(tl):
@@ -333,3 +336,123 @@ def test_scan_views_survive_eviction_under_threads(spark, hourly):
     assert not any(t.is_alive() for t in threads)
     assert errors == []
     assert len(_scan_views(spark, others)) <= 4
+
+
+def _counts(e, q: dict, ref: str) -> tuple:
+    return (e.query(q).collect(),
+            e.query({**q, "dataSource": ref}).collect())
+
+
+def test_week_partitions_keep_mid_week_rows(spark, tmp_path):
+    """A WEEK table's partition value is its bucket's Monday: a
+    mid-week interval still reads the week holding it, natively and in
+    Druid SQL, and skips the other weeks."""
+    e = DruidSparkEngine(spark)
+    e.warehouse_dir = str(tmp_path)
+    monday = dt.datetime(2024, 1, 1)
+    e.catalog.register_table("wk_ref", spark.createDataFrame(
+        [(monday + dt.timedelta(hours=6 * i), float(i)) for i in range(112)],
+        "__time timestamp, v double"))
+    e.sql("REPLACE INTO wk OVERWRITE ALL SELECT __time, v FROM wk_ref "
+          "PARTITIONED BY WEEK")
+    q = {"queryType": "timeseries", "dataSource": "wk", "granularity": "all",
+         "intervals": ["2024-01-10T00:00:00Z/2024-01-12T00:00:00Z"],
+         "aggregations": [{"type": "count", "name": "n"},
+                          {"type": "doubleSum", "name": "s",
+                           "fieldName": "v"}]}
+    # (measured first: a re-run of a cached plan skips its stages)
+    assert _scanned(spark, lambda: e.query(q).collect()) == 28
+    got, want = _counts(e, q, "wk_ref")
+    assert want[0]["n"] == 8 and got == want
+    text = ("SELECT COUNT(*) AS n, SUM(v) AS s FROM {t} "
+            "WHERE __time >= TIMESTAMP '2024-01-10' "
+            "AND __time < TIMESTAMP '2024-01-12'")
+    assert _scanned(spark, lambda: e.sql(text.format(t="wk")).collect()) == 28
+    assert e.sql(text.format(t="wk")).collect() \
+        == e.sql(text.format(t="wk_ref")).collect()
+    e.close()
+
+
+def test_query_during_reregistration_sees_appends_after(spark, tmp_path,
+                                                       monkeypatch):
+    """A query planned while a footer-bounded table is re-registered
+    (here: during the new registration's footer reads) reads the old
+    registration under the old catalog version and serial, so the same
+    query after the registration sees the appended file."""
+    import shutil
+    path, more = str(tmp_path / "flat"), str(tmp_path / "more")
+    write_day_files(path, days=2)
+    counts = write_day_files(more, days=3)
+    e = DruidSparkEngine(spark)
+
+    def register() -> None:
+        e.catalog.register_table("flat", spark.read.parquet(path),
+                                 time_column="ts", source_path=path)
+
+    q = {"queryType": "timeseries", "dataSource": "flat",
+         "granularity": "all", "intervals": ["2024-01-02/2024-01-04"],
+         "aggregations": [{"type": "count", "name": "n"}]}
+    cached = {**q, "context": {"useResultCache": True}}
+    text = ("SELECT COUNT(*) AS n FROM flat "
+            "WHERE __time >= TIMESTAMP '2024-01-02'")
+    register()
+    shutil.copy(os.path.join(more, "part-2.parquet"), path)
+    real = e.catalog._with_timeline
+
+    def query_first(*args):
+        for run in (lambda: e.query(dict(q)), lambda: e.query(dict(cached)),
+                    lambda: e.sql(text)):
+            assert run().collect()[0]["n"] == counts[1]
+        return real(*args)
+
+    monkeypatch.setattr(e.catalog, "_with_timeline", query_first)
+    register()
+    monkeypatch.setattr(e.catalog, "_with_timeline", real)
+    for run in (lambda: e.query(dict(q)), lambda: e.query(dict(cached)),
+                lambda: e.sql(text)):
+        assert run().collect()[0]["n"] == counts[1] + counts[2]
+    e.close()
+
+
+def test_non_utc_session_prunes_nothing(spark, tmp_path):
+    """A session moved off UTC after the engine set it up reads
+    zone-less SQL literals, and (inferring TIMESTAMP_NTZ) footers stored
+    without UTC adjustment, in its own zone: every read is whole and
+    matches the same files registered without a timeline."""
+    wall, utc = str(tmp_path / "wall"), str(tmp_path / "utc")
+    write_day_files(wall)
+    os.makedirs(utc)
+    for f in sorted(os.listdir(wall)):
+        t = pq.read_table(os.path.join(wall, f))
+        pq.write_table(t.set_column(0, "ts", t["ts"].cast(
+            pa.timestamp("us", tz="UTC"))), os.path.join(utc, f))
+    e = DruidSparkEngine(spark)
+    confs = {"spark.sql.session.timeZone": "America/Los_Angeles",
+             "spark.sql.parquet.inferTimestampNTZ.enabled": "true"}
+    prev = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        for name, path in (("wall", wall), ("utc", utc)):
+            e.catalog.register_table(name, path, time_column="ts")
+            e.catalog.register_table(name + "_ref", spark.read.parquet(path),
+                                     time_column="ts")
+        # 16:00-24:00 wall clock on Jan 3: instants in the part-2 file
+        q = {"queryType": "timeseries", "dataSource": "wall",
+             "granularity": "all",
+             "intervals": ["2024-01-04T00:00:00Z/2024-01-04T08:00:00Z"],
+             "aggregations": [{"type": "count", "name": "n"}]}
+        got, want = _counts(e, q, "wall_ref")
+        assert want[0]["n"] > 0 and got == want
+        # Jan 2 08:00Z to Jan 3 08:00Z: rows of the part-1 and part-2 files
+        text = ("SELECT COUNT(*) AS n, SUM(v) AS s FROM {t} "
+                "WHERE __time >= TIMESTAMP '2024-01-02' "
+                "AND __time < TIMESTAMP '2024-01-03'")
+        df = e.sql(text.format(t="utc"))
+        want = [tuple(r) for r in e.sql(text.format(t="utc_ref")).collect()]
+        assert _same([tuple(r) for r in df.collect()], want)
+        assert len(df.inputFiles()) == 4
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+        e.close()
