@@ -1,5 +1,7 @@
 """Tests for dedup / similarity / textstats / multimodal operators."""
 
+import random
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -259,6 +261,177 @@ def test_connected_components_clusters(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1,
                    10: 10, 11: 10, 12: 10,
                    20: 20, 21: 20}
+
+
+def _reference_components(rows):
+    """Plain-Python union-find: {id: least id of its component}; a null
+    endpoint joins nothing and maps to null."""
+    root = {}
+
+    def find(x):
+        while root[x] != x:
+            x = root[x]
+        return x
+
+    for pair in rows:
+        for x in pair:
+            if x is not None:
+                root.setdefault(x, x)
+        if None not in pair:
+            ra, rb = find(pair[0]), find(pair[1])
+            root[max(ra, rb)] = min(ra, rb)
+    out = {x: find(x) for x in root}
+    if any(None in pair for pair in rows):
+        out[None] = None
+    return out
+
+
+def _random_pairs(rng, nulls):
+    """A shuffled chain, random edges, repeats of edges in either
+    direction, self-pairs and (optionally) null endpoints."""
+    ids = rng.sample(range(200), 40)
+    chain = ids[:rng.randint(8, 20)]
+    rows = list(zip(chain, chain[1:]))
+    rows += [tuple(rng.sample(ids, 2)) for _ in range(rng.randint(0, 10))]
+    rows += [rng.choice(rows)[::rng.choice((1, -1))] for _ in range(4)]
+    rows += [(x, x) for x in rng.sample(ids, 2)]
+    if nulls:
+        rows += [(rng.choice(ids), None), (None, rng.choice(ids))]
+    rng.shuffle(rows)
+    return [r[::rng.choice((1, -1))] for r in rows]
+
+
+def _components_both_paths(spark, monkeypatch, rows, ddl):
+    """connected_components on the driver path and on the forced
+    distributed path: [(schema, {id: cluster_id}), ...]."""
+    pairs = spark.createDataFrame(rows, ddl)
+    got = []
+    for cap in (dedup._CC_DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", cap)
+        out = dedup.connected_components(pairs)
+        res = [tuple(r) for r in out.collect()]
+        assert len(res) == len(set(res))       # one row per id
+        got.append((out.schema, dict(res)))
+    return got
+
+
+def _cc_schema(typ):
+    from pyspark.sql import types as T
+    t = {"int": T.IntegerType(), "bigint": T.LongType(),
+         "string": T.StringType()}[typ]
+    return T.StructType([T.StructField("id", t),
+                         T.StructField("cluster_id", t)])
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_connected_components_paths_match_reference(spark, monkeypatch,
+                                                    seed):
+    """Random graphs: the driver path, the forced distributed path and a
+    reference union-find agree on rows and schema, for int, long and
+    string ids (strings order differently: 'n10' < 'n9')."""
+    rng = random.Random(seed)
+    typ = ("int", "bigint", "string")[seed % 3]
+    rows = _random_pairs(rng, nulls=seed >= 3)
+    if typ == "string":
+        rows = [tuple(None if x is None else f"n{x}" for x in r)
+                for r in rows]
+    want = (_cc_schema(typ), _reference_components(rows))
+    assert _components_both_paths(
+        spark, monkeypatch, rows, f"id_a {typ}, id_b {typ}") == [want] * 2
+
+
+@pytest.mark.parametrize("rows,ddl,want", [
+    ([], "id_a bigint, id_b bigint", {}),
+    ([(1, None), (None, 2), (3, 4)], "id_a bigint, id_b bigint",
+     {1: 1, 2: 2, 3: 3, 4: 3, None: None}),
+    ([(2, 1)], "id_a int, id_b bigint", {1: 1, 2: 1}),   # wider type
+])
+def test_connected_components_edge_cases(spark, monkeypatch, rows, ddl,
+                                         want):
+    got = _components_both_paths(spark, monkeypatch, rows, ddl)
+    assert got == [(_cc_schema("bigint"), want)] * 2
+
+
+def test_connected_components_long_chain_converges(spark, monkeypatch):
+    """The distributed path loops until no label changes: it used to stop
+    after 15 rounds and return a 24-node chain as 9 clusters."""
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(23)],
+                                  "id_a long, id_b long")
+    got = {r["id"]: r["cluster_id"]
+           for r in dedup.connected_components(pairs).collect()}
+    assert got == {i: 0 for i in range(24)}
+
+
+def test_connected_components_small_graph_one_job(spark):
+    """Under the cap: one Spark job (the probe), and the result is a
+    local relation whose collect runs none."""
+    import time
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)],
+                                  "id_a long, id_b long")
+    try:
+        sc.setJobGroup("cc-build", "connected_components")
+        out = dedup.connected_components(pairs)
+        sc.setJobGroup("cc-collect", "connected_components result")
+        assert sorted(map(tuple, out.collect())) == [
+            (1, 1), (2, 1), (3, 1), (5, 5), (6, 5)]
+        # a marker job in a later group: once the status store shows it,
+        # it has recorded every earlier job too
+        sc.setJobGroup("cc-marker", "status store barrier")
+        spark.range(1).count()
+        tracker = sc.statusTracker()
+        deadline = time.time() + 30
+        while (not tracker.getJobIdsForGroup("cc-marker")
+               and time.time() < deadline):
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup("cc-marker")
+        assert len(tracker.getJobIdsForGroup("cc-build")) <= 1
+        assert tracker.getJobIdsForGroup("cc-collect") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_connected_components_over_cap_runs_pairs_once(spark, monkeypatch):
+    """Over the cap the distributed path reads the probed pairs from
+    storage: a Python UDF in the pair chain sees each row once."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def tag(x):
+        seen.add(1)
+        return x
+
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 2)
+    pairs = (spark.createDataFrame([(i, i + 1) for i in range(6)],
+                                   "id_a long, id_b long")
+             .select(F.udf(tag, "long")("id_a").alias("id_a"), "id_b"))
+    got = {r["id"]: r["cluster_id"]
+           for r in dedup.connected_components(pairs).collect()}
+    assert got == {i: 0 for i in range(7)}
+    assert seen.value == 6
+
+
+def test_connected_components_releases_storage_on_error(spark, monkeypatch):
+    """A failed distributed round leaves nothing persisted."""
+    from pyspark.storagelevel import StorageLevel
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    cls, pinned = type(pairs), []
+    persist = cls.persist
+
+    def record(self, *a, **k):
+        pinned.append(persist(self, *a, **k))
+        return pinned[-1]
+
+    def fail(self, *a, **k):
+        raise RuntimeError("round failed")
+
+    monkeypatch.setattr(cls, "persist", record)
+    monkeypatch.setattr(cls, "localCheckpoint", fail)
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
+    with pytest.raises(RuntimeError, match="round failed"):
+        dedup.connected_components(pairs)
+    assert pinned
+    assert all(df.storageLevel == StorageLevel.NONE for df in pinned)
 
 
 def test_stratified_and_hash_sample(spark):
