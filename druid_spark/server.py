@@ -18,20 +18,24 @@ Error bodies carry the reference's QueryException JSON shape
 Design: a stdlib ThreadingHTTPServer over a DruidSparkEngine — no
 extra dependencies, one thread per request, the SparkSession shared
 across handler threads (py4j is thread-safe; Spark schedules concurrent
-jobs FIFO/fair per its scheduler config). Result sets are collected on
-the driver, which matches the reference's broker behavior: every Druid
-response funnels through the broker as JSON; queries are
-aggregations/limited scans by contract, so results are small even when
-inputs are 100 TB. Line formats (objectLines/arrayLines) stream via
-toLocalIterator so a large scan export never materializes driver-side.
+jobs FIFO/fair per its scheduler config). Native scan, timeseries and
+groupBy results and Druid SQL results in every resultFormat go out
+through one writer, `_Handler._stream` (the reference's
+QueryResultPusher): it runs the query under the scheduler, pulls rows
+one partition at a time and writes them as a chunked response, so a
+large result never materializes on the driver. The native types whose
+results are bounded by construction (topN, search, timeBoundary,
+metadata) are collected and sent whole.
 """
 
 from __future__ import annotations
 
 import base64
+import csv
 import datetime as dt
 import decimal
 import io
+import itertools
 import json
 import os
 import re
@@ -83,9 +87,8 @@ def json_safe(v: Any) -> Any:
     return str(v)
 
 
-def _row_dicts(rows) -> list[dict]:
-    return [{k: json_safe(x) for k, x in r.asDict(recursive=True).items()}
-            for r in rows]
+def _row_dict(r) -> dict:
+    return {k: json_safe(x) for k, x in r.asDict(recursive=True).items()}
 
 
 def _interval_start(q: dict) -> str | None:
@@ -113,13 +116,8 @@ def shape_native(q: dict, rows: list[dict]) -> Any:
     serialize as plain object rows, matching their reference JSON."""
     qt = q.get("queryType")
     t0 = _interval_start(q)
-    if qt == "timeseries":
-        out = []
-        for r in rows:
-            ts = r.pop("__time", None)
-            out.append({"timestamp": ts if ts is not None else t0,
-                        "result": r})
-        return out
+    if qt in ("timeseries", "groupBy"):
+        return [_envelope(qt, t0, r) for r in rows]
     if qt == "topN":
         buckets: dict[Any, list] = {}
         order: list = []
@@ -130,14 +128,6 @@ def shape_native(q: dict, rows: list[dict]) -> Any:
                 order.append(ts)
             buckets[ts].append(r)
         return [{"timestamp": ts, "result": buckets[ts]} for ts in order]
-    if qt == "groupBy":
-        out = []
-        for r in rows:
-            ts = r.pop("__time", None) if "__time" in r else t0
-            out.append({"version": "v1",
-                        "timestamp": ts if ts is not None else t0,
-                        "event": r})
-        return out
     if qt == "search":
         return [{"timestamp": t0, "result": rows}]
     if qt == "timeBoundary":
@@ -159,11 +149,136 @@ def shape_native(q: dict, rows: list[dict]) -> Any:
     return rows
 
 
+def _envelope(qt: str, t0: str | None, r: dict) -> dict:
+    """One row's envelope: timeseries Result<TimeseriesResultValue>,
+    groupBy v1 ResultRow. The row's __time, else the interval start."""
+    ts = r.pop("__time", None)
+    ts = t0 if ts is None else ts
+    if qt == "timeseries":
+        return {"timestamp": ts, "result": r}
+    return {"version": "v1", "timestamp": ts, "event": r}
+
+
+# ------------------------------------------------ streamed result bodies
+# A body writer maps an iterator of JSON-safe row dicts to the pieces of
+# the response body; _Handler._stream frames them. The closing bracket
+# (or the blank-line trailer) is the completeness marker a truncated
+# response lacks.
+def _json_array(items):
+    """'[' a ',' b ... ']\\n' (ObjectWriter.writeResponseEnd)."""
+    yield b"["
+    for i, b in enumerate(items):
+        yield b"," + b if i else b
+    yield b"]\n"
+
+
+def _native_body(q: dict, cols: list[str]):
+    """scan: ScanResultValue batches of `batchSize` rows (ScanQueryEngine
+    default 20480); timeseries/groupBy: one envelope per row."""
+    qt = q.get("queryType")
+    if qt != "scan":
+        t0 = _interval_start(q)
+        return lambda rows: _json_array(
+            json.dumps(_envelope(qt, t0, d)).encode() for d in rows)
+    compact = q.get("resultFormat", "list") == "compactedList"
+    try:
+        batch = max(1, int(q.get("batchSize") or 20480))
+    except (TypeError, ValueError):
+        batch = 20480
+    head = json.dumps({"segmentId": None, "columns": cols}
+                      )[:-1].encode() + b', "events": ['
+
+    def body(rows):
+        yield b"[" + head
+        for i, d in enumerate(rows):
+            ev = json.dumps([d.get(c) for c in cols] if compact
+                            else d).encode()
+            if i == 0:
+                yield ev
+            elif i % batch == 0:
+                yield b"]}," + head + ev
+            else:
+                yield b"," + ev
+        yield b"]}]\n"
+    return body
+
+
+_SQL_CTYPE = {"csv": "text/csv; charset=utf-8",
+              "objectLines": "text/plain; charset=utf-8",
+              "arrayLines": "text/plain; charset=utf-8"}
+
+
+def _sql_body(fmt: str, schema, header: bool, types: bool,
+              sql_types: bool):
+    """One writer per resultFormat (SqlResourceQueryResultPusher driving
+    ObjectWriter/ArrayWriter/CsvWriter/*LinesWriter):
+      object      [obj,obj,...]\\n   header row = {col: null}
+      array       [[...],[...]]\\n   header row = [cols]
+      objectLines obj\\n obj\\n ...\\n  (blank-line trailer)
+      arrayLines  [..]\\n [..]\\n ...\\n
+      csv         col,col\\r\\n v,v\\r\\n ... \\n (blank trailer —
+                  CsvWriter.writeResponseEnd:56-63)
+    typesHeader/sqlTypesHeader (SqlQuery.java:74-85) add type rows to
+    the array header (ArrayWriter.writeHeader:103-134) and nest
+    {type, sqlType} per column in the object header
+    (ObjectWriter.writeHeader:108-146)."""
+    cols = [f.name for f in schema.fields]
+    objects = fmt in ("object", "objectLines")
+    lines = fmt in ("objectLines", "arrayLines")
+    head: list = []
+    if header:
+        natives = [druid_type(f.dataType.simpleString())
+                   for f in schema.fields]
+        sqls = [_JDBC_TYPE.get(f.dataType.simpleString(),
+                               ("OTHER", 1111))[0] for f in schema.fields]
+        if objects:
+            hdr: dict[str, Any] = {}
+            for c, n, s in zip(cols, natives, sqls):
+                v: dict[str, str] = {}
+                if types:
+                    v["type"] = n
+                if sql_types:
+                    v["sqlType"] = s
+                hdr[c] = v if (types or sql_types) else None
+            head = [hdr]
+        elif fmt == "csv":
+            head = [cols]
+        elif fmt in ("array", "arrayLines"):
+            head = [cols]
+            if types:
+                head.append(natives)
+            if sql_types:
+                head.append(sqls)
+
+    def render(v) -> bytes:
+        if fmt == "csv":
+            sb = io.StringIO()
+            csv.writer(sb).writerow(["" if x is None else x for x in v])
+            return sb.getvalue().encode()
+        b = json.dumps(v).encode()
+        return b + b"\n" if lines else b
+
+    def body(rows):
+        vals = rows if objects else ([d[c] for c in cols] for d in rows)
+        items = map(render, itertools.chain(head, vals))
+        if fmt in ("object", "array"):
+            return _json_array(items)
+        return itertools.chain(items, (b"\n",))
+    return body
+
+
 def error_body(code: str, e: Exception) -> dict:
     return {"error": code,
             "errorMessage": str(e),
             "errorClass": type(e).__name__,
             "host": None}
+
+
+# scheduler errors → (HTTP status, QueryException code); any other error
+# is a 500 "Unknown exception"
+_QUERY_ERRORS = ((QueryCapacityExceededError, 429, "Query capacity exceeded"),
+                 (QueryTimeoutError, 504, "Query timeout"),
+                 (QueryCanceledError, 500, "Query cancelled"))
 
 
 # ------------------------------------------------- async SQL statements
@@ -218,7 +333,7 @@ class _SpilledResult:
             # contract exactly when results are huge. (ADVICE r6)
             if "AnalysisException" not in type(e).__name__:
                 raise
-            self._mem = _row_dicts(df.collect())
+            self._mem = [_row_dict(r) for r in df.collect()]
             self.total = len(self._mem)
 
     def row_dicts(self, lo: int, n: int) -> list[dict]:
@@ -296,7 +411,7 @@ class _Avatica:
     def __init__(self, engine, scheduler: QueryScheduler | None = None,
                  request_logger=None, authorizer=None):
         self.engine = engine
-        self.scheduler = scheduler
+        self.scheduler = scheduler or QueryScheduler(engine.spark)
         self.request_logger = request_logger
         self.authorizer = authorizer
         self._lock = threading.Lock()
@@ -432,10 +547,7 @@ class _Avatica:
         # Results spill to parquet via a distributed write (the durable
         # results contract) — never df.collect() into the driver; frames
         # page the spill at any offset with bounded memory.
-        spill = (self.scheduler.submit(
-                     qid, lambda: _SpilledResult(df, qid))
-                 if self.scheduler is not None
-                 else _SpilledResult(df, qid))
+        spill = self.scheduler.submit(qid, lambda: _SpilledResult(df, qid))
         if self.request_logger is not None:
             self.request_logger.log(
                 kind="avatica", detail=sql[:500], status=200,
@@ -573,7 +685,7 @@ class _Statements:
     def __init__(self, engine, scheduler: QueryScheduler | None = None,
                  request_logger=None):
         self.engine = engine
-        self.scheduler = scheduler
+        self.scheduler = scheduler or QueryScheduler(engine.spark)
         self.request_logger = request_logger
         self._lock = threading.Lock()
         self._st: dict[str, dict] = {}
@@ -623,11 +735,8 @@ class _Statements:
                                      task_id=qid)
                 # distributed parquet spill — the driver never holds
                 # the result rows (durable-results paging contract)
-                if self.scheduler is not None:
-                    spill = self.scheduler.submit(
-                        qid, lambda: _SpilledResult(df, qid))
-                else:
-                    spill = _SpilledResult(df, qid)
+                spill = self.scheduler.submit(
+                    qid, lambda: _SpilledResult(df, qid))
                 with self._lock:
                     if rec["cancel"]:
                         rec["state"] = "CANCELED"
@@ -725,8 +834,7 @@ class _Statements:
                 rec["state"] = "CANCELED"
         # Actually stop the Spark jobs, not just the bookkeeping
         # (QueryScheduler.cancelQuery semantics).
-        if self.scheduler is not None:
-            self.scheduler.cancel(qid)
+        self.scheduler.cancel(qid)
         return True
 
 
@@ -753,7 +861,7 @@ class _Overlord:
 
     def __init__(self, engine, scheduler: QueryScheduler | None = None):
         self.engine = engine
-        self.scheduler = scheduler
+        self.scheduler = scheduler or QueryScheduler(engine.spark)
         self._lock = threading.Lock()
         self._tasks: dict[str, dict] = {}
         self._supervisors: dict[str, dict] = {}
@@ -827,10 +935,7 @@ class _Overlord:
             try:
                 if rec["cancel"]:
                     raise QueryCanceledError(tid)
-                if self.scheduler is not None:
-                    self.scheduler.submit(tid, work)
-                else:
-                    work()
+                self.scheduler.submit(tid, work)
                 state = "CANCELED" if rec["cancel"] else "SUCCESS"
             except Exception as e:
                 if rec["cancel"]:
@@ -923,8 +1028,7 @@ class _Overlord:
                 return 404, {"error":
                              f"Cannot find any task with id: [{tid}]"}
             rec["cancel"] = True
-        if self.scheduler is not None:
-            self.scheduler.cancel(tid)
+        self.scheduler.cancel(tid)
         return 200, {"task": tid}
 
     def shutdown_datasource(self, ds: str) -> tuple[int, dict]:
@@ -1244,48 +1348,129 @@ class _Handler(BaseHTTPRequestHandler):
     def _timed(self, fn, kind: str, detail: str) -> None:
         """Run a query handler under the request logger (RequestLogger
         contract: time, remote, identity, query id, success,
-        query/time ms). Streaming paths that write raw chunks leave
-        _last_status unset and log as 200 unless they raised."""
+        query/time ms). Status and query id are the ones _headers sent;
+        a stream that fails after its headers keeps its status and logs
+        success false with the error class (_stream sets _last_error)."""
         logger = getattr(self.server, "request_logger", None)
         if logger is None:
             fn()
             return
-        self._last_status = None
-        self._last_qid = None
+        self._last_status = self._last_qid = self._last_error = None
         t0 = time.time()
         try:
             fn()
         except Exception as e:
-            logger.log(kind=kind, detail=detail, status=500,
+            self._last_status, self._last_error = 500, type(e).__name__
+            raise
+        finally:
+            status = self._last_status or 200
+            extra = {"error": self._last_error} if self._last_error else {}
+            logger.log(kind=kind, detail=detail, status=status,
                        identity=getattr(self, "_ident", None),
                        remote=self.client_address[0],
                        queryId=self._last_qid,
-                       success=False, error=type(e).__name__,
-                       query_time_ms=int((time.time() - t0) * 1000))
-            raise
-        status = self._last_status if self._last_status is not None else 200
-        logger.log(kind=kind, detail=detail, status=status,
-                   identity=getattr(self, "_ident", None),
-                   remote=self.client_address[0],
-                   queryId=self._last_qid,
-                   success=status < 400,
-                   query_time_ms=int((time.time() - t0) * 1000))
+                       success=status < 400 and not self._last_error,
+                       query_time_ms=int((time.time() - t0) * 1000),
+                       **extra)
 
-    def _send(self, status: int, body: bytes,
-              ctype: str = "application/json", qid: str | None = None) -> None:
+    def _headers(self, status: int, qid: str | None, ctype: str | None,
+                 length: int | None = None, etag: str | None = None) -> None:
+        """Status line and headers of a response, recording the status
+        and query id for the request log. No length means a chunked
+        body."""
         self._last_status = status
         if qid:
             self._last_qid = qid
         self.send_response(status)
-        self.send_header("Content-Type", ctype)
-        self.send_header("Content-Length", str(len(body)))
+        if ctype:
+            self.send_header("Content-Type", ctype)
+        if length is None:
+            self.send_header("Transfer-Encoding", "chunked")
+        else:
+            self.send_header("Content-Length", str(length))
         if qid:
             self.send_header("X-Druid-Query-Id", qid)
+        if etag:
+            self.send_header("ETag", etag)
         self.end_headers()
+
+    def _send(self, status: int, body: bytes,
+              ctype: str | None = "application/json",
+              qid: str | None = None, etag: str | None = None) -> None:
+        self._headers(status, qid, ctype, len(body), etag)
         self.wfile.write(body)
 
     def _send_json(self, status: int, obj: Any, qid: str | None = None) -> None:
         self._send(status, json.dumps(obj).encode(), qid=qid)
+
+    def _send_error(self, e: Exception, qid: str) -> None:
+        status, code = next(((s, c) for cls, s, c in _QUERY_ERRORS
+                             if isinstance(e, cls)),
+                            (500, "Unknown exception"))
+        self._send_json(status, error_body(code, e), qid)
+
+    def _submit(self, qid: str, ctx: dict, fn) -> Any:
+        """Run fn under the scheduler with the context's lane and
+        timeout."""
+        return self.server.scheduler.submit(  # type: ignore[attr-defined]
+            qid, fn, lane=QueryScheduler.compute_lane(ctx),
+            timeout_ms=_timeout_ms(ctx))
+
+    def _stream(self, qid: str, ctx: dict, df, ctype: str, body,
+                etag: str | None = None) -> None:
+        """Write a query result as it is computed — the one result
+        writer of the native and SQL endpoints (the reference's
+        QueryResultPusher). Rows come from a local iterator under the
+        scheduler, so no result materializes on the driver; body(rows)
+        turns the JSON-safe row dicts into the body's pieces, which go
+        out as ~64 KiB chunks of a chunked response.
+
+        The first row is pulled before the headers go out, so a fast
+        failure still gets its error status. Once the headers are out,
+        an error truncates the body (no completeness marker), closes the
+        connection, and is logged as a failure."""
+        end = object()
+        # started/aborted share one lock: a timeout raised by submit
+        # before the worker sent headers must keep the worker (which a
+        # cancel does not always stop) off the socket, or two responses
+        # interleave on the keep-alive connection
+        lock = threading.Lock()
+        state = {"started": False, "aborted": False}
+
+        def run() -> None:
+            it = df.toLocalIterator()
+            first = next(it, end)
+            with lock:
+                if state["aborted"]:
+                    return
+                state["started"] = True
+                self._headers(200, qid, ctype, etag=etag)
+            rows = it if first is end else itertools.chain((first,), it)
+            buf = bytearray()
+
+            def chunk() -> None:
+                if buf:
+                    self.wfile.write(b"%X\r\n%s\r\n" % (len(buf), buf))
+                    buf.clear()
+
+            for piece in body(map(_row_dict, rows)):
+                buf += piece
+                if len(buf) >= 65536:  # one write per chunk, not per row
+                    chunk()
+            chunk()
+            self.wfile.write(b"0\r\n\r\n")
+
+        try:
+            self._submit(qid, ctx, run)
+        except Exception as e:
+            with lock:
+                started = state["started"]
+                state["aborted"] = True
+            if not started:
+                self._send_error(e, qid)
+                return
+            self.close_connection = True
+            self._last_error = type(e).__name__
 
     def do_GET(self):  # noqa: N802
         from urllib.parse import parse_qs, urlparse
@@ -2081,7 +2266,7 @@ class _Handler(BaseHTTPRequestHandler):
     def _native(self, q: dict) -> None:
         ctx = dict(q.get("context") or {})
         qid = ctx.get("queryId") or str(uuid.uuid4())
-        sched = self.server.scheduler  # type: ignore[attr-defined]
+        qt = q.get("queryType")
         # ThresholdBasedQueryPrioritizationStrategy: long-range scans
         # get demoted priority → the bounded low lane
         prio = getattr(self.server, "prioritization", None)
@@ -2102,171 +2287,39 @@ class _Handler(BaseHTTPRequestHandler):
                 (json.dumps(q, sort_keys=True) + stamp).encode()
             ).hexdigest() + '"'
             if self.headers.get("If-None-Match") == etag:
-                self.send_response(304)
-                self.send_header("ETag", etag)
-                self.send_header("X-Druid-Query-Id", qid)
-                self.send_header("Content-Length", "0")
-                self.end_headers()
+                self._send(304, b"", None, qid, etag)
                 return
         except Exception:
             etag = None
+        # The native types whose result size scales with data (scan) or
+        # bucket/group cardinality (timeseries at fine grain, groupBy)
+        # stream — the reference's QueryResource writes every result
+        # Sequence incrementally. topN/search/timeBoundary/metadata
+        # results are bounded by construction and are sent whole.
+        streamed = qt in ("scan", "timeseries", "groupBy")
         try:
             df = self.engine.query(q)
-            if q.get("queryType") in ("scan", "timeseries", "groupBy"):
-                # The native types whose result size scales with data
-                # (scan) or bucket/group cardinality (timeseries at
-                # fine grain, groupBy) stream row-by-row — the
-                # reference's QueryResource writes every result
-                # Sequence incrementally. scan emits ScanResultValue
-                # batches (batchSize rows, ScanQueryEngine default
-                # 20480); timeseries/groupBy emit one envelope object
-                # per row. topN/search/timeBoundary/metadata results
-                # are bounded by construction and keep the buffered
-                # path.
-                self._native_stream(q, df, qid, etag, sched, ctx)
-                return
-            rows = sched.submit(
-                qid, df.collect,
-                lane=QueryScheduler.compute_lane(ctx),
-                timeout_ms=_timeout_ms(ctx))
-            rows = _row_dicts(rows)
+            if not streamed:
+                rows = self._submit(qid, ctx, df.collect)
         except NotImplementedError as e:
             self._send_json(400, error_body("Unknown query type", e), qid)
             return
         except KeyError as e:
             self._send_json(400, error_body("Unknown datasource", e), qid)
             return
-        except QueryCapacityExceededError as e:
-            self._send_json(429, error_body("Query capacity exceeded", e), qid)
+        except Exception as e:  # analysis/runtime, scheduler
+            self._send_error(e, qid)
             return
-        except QueryTimeoutError as e:
-            self._send_json(504, error_body("Query timeout", e), qid)
+        if streamed:
+            self._stream(qid, ctx, df, "application/json",
+                         _native_body(q, df.columns), etag)
             return
-        except QueryCanceledError as e:
-            self._send_json(500, error_body("Query cancelled", e), qid)
-            return
-        except Exception as e:  # analysis/runtime
-            self._send_json(500, error_body("Unknown exception", e), qid)
-            return
-        body = json.dumps(shape_native(q, rows)).encode()
-        self._last_status, self._last_qid = 200, qid
-        self.send_response(200)
-        self.send_header("Content-Type", "application/json")
-        self.send_header("Content-Length", str(len(body)))
-        self.send_header("X-Druid-Query-Id", qid)
-        if etag:
-            self.send_header("ETag", etag)
-        self.end_headers()
-        self.wfile.write(body)
-
-    def _native_stream(self, q: dict, df, qid: str, etag,
-                       sched, ctx) -> None:
-        """Stream a native result envelope from toLocalIterator over
-        chunked transfer. scan: [{segmentId, columns, events}...] with
-        one batch per `batchSize` rows; timeseries/groupBy: one
-        envelope object per row (shape_native's per-row forms). First
-        row pulled before headers so fast failures return proper error
-        statuses; a later error truncates the JSON (no closing bracket
-        = incomplete)."""
-        qt = q.get("queryType")
-        fmt = q.get("resultFormat", "list")
-        try:
-            batch_size = max(1, int(q.get("batchSize") or 20480))
-        except (TypeError, ValueError):
-            batch_size = 20480
-        cols = list(df.columns)
-        t0 = _interval_start(q)
-        _END = object()
-        state_lock = threading.Lock()
-        state = {"started": False, "aborted": False}
-
-        def stream() -> None:
-            it = df.toLocalIterator()
-            first = next(it, _END)
-            with state_lock:
-                if state["aborted"]:
-                    return
-                state["started"] = True
-                self._last_status, self._last_qid = 200, qid
-                self.send_response(200)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("X-Druid-Query-Id", qid)
-                if etag:
-                    self.send_header("ETag", etag)
-                self.send_header("Transfer-Encoding", "chunked")
-                self.end_headers()
-            buf = bytearray()
-
-            def out(b: bytes, flush: bool = False) -> None:
-                buf.extend(b)
-                if flush or len(buf) >= 65536:
-                    self.wfile.write(
-                        f"{len(buf):X}\r\n".encode() + bytes(buf)
-                        + b"\r\n")
-                    buf.clear()
-
-            def rowdict(r) -> dict:
-                return {k: json_safe(v)
-                        for k, v in r.asDict(recursive=True).items()}
-
-            def envelope(r) -> bytes:
-                # per-row envelope (shape_native timeseries/groupBy
-                # arms): Result<TimeseriesResultValue> / v1 ResultRow
-                d = rowdict(r)
-                ts = d.pop("__time", None) if "__time" in d else t0
-                if qt == "timeseries":
-                    return json.dumps(
-                        {"timestamp": ts if ts is not None else t0,
-                         "result": d}).encode()
-                return json.dumps(
-                    {"version": "v1",
-                     "timestamp": ts if ts is not None else t0,
-                     "event": d}).encode()
-
-            out(b"[")
-            if qt == "scan":
-                def ev(r) -> bytes:
-                    d = rowdict(r)
-                    return json.dumps([d.get(c) for c in cols]
-                                      if fmt == "compactedList" else d
-                                      ).encode()
-
-                head = json.dumps({"segmentId": None, "columns": cols}
-                                  )[:-1].encode() + b', "events": ['
-                if first is _END:
-                    out(head + b"]}")
-                else:
-                    out(head + ev(first))
-                    n_in_batch = 1
-                    for r in it:
-                        if n_in_batch >= batch_size:
-                            out(b"]}," + head + ev(r))
-                            n_in_batch = 1
-                        else:
-                            out(b"," + ev(r))
-                            n_in_batch += 1
-                    out(b"]}")
-            elif first is not _END:
-                out(envelope(first))
-                for r in it:
-                    out(b"," + envelope(r))
-            out(b"]\n", flush=True)
-            self.wfile.write(b"0\r\n\r\n")
-
-        try:
-            sched.submit(qid, stream,
-                         lane=QueryScheduler.compute_lane(ctx),
-                         timeout_ms=_timeout_ms(ctx))
-        except Exception:
-            with state_lock:
-                if state["started"]:
-                    self.close_connection = True
-                    return
-                state["aborted"] = True
-            raise
+        body = json.dumps(shape_native(q, [_row_dict(r) for r in rows]))
+        self._send(200, body.encode(), qid=qid, etag=etag)
 
     def _sql(self, body: dict) -> None:
-        qid = (body.get("context") or {}).get("sqlQueryId") or str(uuid.uuid4())
+        ctx = body.get("context") or {}
+        qid = ctx.get("sqlQueryId") or str(uuid.uuid4())
         text = body.get("query")
         if not text:
             self._send_json(
@@ -2275,11 +2328,6 @@ class _Handler(BaseHTTPRequestHandler):
                       "errorClass": None, "host": None}, qid)
             return
         fmt = body.get("resultFormat", "object")
-        header = bool(body.get("header", False))
-        types_hdr = bool(body.get("typesHeader", False))
-        sql_types_hdr = bool(body.get("sqlTypesHeader", False))
-        ctx = body.get("context") or {}
-        sched = self.server.scheduler  # type: ignore[attr-defined]
         try:
             text = _bind_parameters(text, body.get("parameters"))
             # context.sqlTimeZone (PlannerContext CTX_SQL_TIME_ZONE):
@@ -2314,171 +2362,21 @@ class _Handler(BaseHTTPRequestHandler):
                     df = df.select(*[
                         _F.to_json(_F.col(c)).alias(c) if c in arr
                         else _F.col(c) for c in df.columns])
-            cols = df.columns
-            # EVERY resultFormat streams row-by-row from toLocalIterator
-            # over chunked transfer — the reference pushes all writers
-            # incrementally (SqlResourceQueryResultPusher.java:110-135
-            # driving ObjectWriter/ArrayWriter/CsvWriter/*LinesWriter),
-            # so a heavy SELECT never materializes driver-side on any
-            # sync format. Writer protocol per format:
-            #   object      [obj,obj,...]\n   header row = {col: null}
-            #   array       [[...],[...]]\n   header row = [cols]
-            #   objectLines obj\n obj\n ...\n  (blank-line trailer)
-            #   arrayLines  [..]\n [..]\n ...\n
-            #   csv         col,col\r\n v,v\r\n ... \n (blank trailer —
-            #               CsvWriter.writeResponseEnd:56-63)
-            # The first row is pulled BEFORE headers go out so fast
-            # failures still return a proper error status; after that,
-            # an error truncates the stream without the completeness
-            # marker (the trailer / closing bracket).
-            lines = fmt in ("objectLines", "arrayLines")
-            if fmt == "csv":
-                ctype = "text/csv; charset=utf-8"
-            elif lines:
-                ctype = "text/plain; charset=utf-8"
-            else:
-                ctype = "application/json"
-            import csv as _csv
-
-            def render(r) -> bytes:
-                d = {k: json_safe(v)
-                     for k, v in r.asDict(recursive=True).items()}
-                if fmt in ("object", "objectLines"):
-                    b = json.dumps(d).encode()
-                elif fmt == "csv":
-                    sb = io.StringIO()
-                    _csv.writer(sb).writerow(
-                        ["" if d[c] is None else d[c] for c in cols])
-                    return sb.getvalue().encode()
-                else:  # array / arrayLines
-                    b = json.dumps([d[c] for c in cols]).encode()
-                return b + b"\n" if lines else b
-
-            def header_bytes() -> bytes | None:
-                if not header:
-                    return None
-                # typesHeader/sqlTypesHeader (SqlQuery.java:74-85;
-                # ArrayWriter.writeHeader:103-134 emits extra type
-                # rows, ObjectWriter nests {type, sqlType} per column)
-                natives = [druid_type(f.dataType.simpleString())
-                           for f in df.schema.fields]
-                sqls = [_JDBC_TYPE.get(f.dataType.simpleString(),
-                                       ("OTHER", 1111))[0]
-                        for f in df.schema.fields]
-                if fmt in ("array", "arrayLines"):
-                    rows = [cols]
-                    if types_hdr:
-                        rows.append(natives)
-                    if sql_types_hdr:
-                        rows.append(sqls)
-                    sep = b"\n" if fmt == "arrayLines" else b","
-                    out_ = sep.join(json.dumps(r).encode()
-                                    for r in rows)
-                    return out_ + b"\n" if fmt == "arrayLines" else out_
-                if fmt in ("object", "objectLines"):
-                    # ObjectWriter.writeHeader:108-146 — {column:
-                    # null} or {column: {type, sqlType}} leads
-                    hdr: dict[str, Any] = {}
-                    for i, c in enumerate(cols):
-                        if types_hdr or sql_types_hdr:
-                            v: Any = {}
-                            if types_hdr:
-                                v["type"] = natives[i]
-                            if sql_types_hdr:
-                                v["sqlType"] = sqls[i]
-                        else:
-                            v = None
-                        hdr[c] = v
-                    b = json.dumps(hdr).encode()
-                    return b + b"\n" if fmt == "objectLines" else b
-                if fmt == "csv":
-                    sb = io.StringIO()
-                    _csv.writer(sb).writerow(cols)
-                    return sb.getvalue().encode()
-                return None
-
-            json_array = fmt in ("object", "array")
-            # started/aborted share one lock: a timeout raised by
-            # sched.submit BEFORE the worker sent headers must stop
-            # the worker from ever writing to the socket (the
-            # cancel is async — the worker can survive it), or two
-            # responses interleave on the keep-alive connection.
-            _END = object()
-            state_lock = threading.Lock()
-            state = {"started": False, "aborted": False}
-
-            def stream() -> None:
-                it = df.toLocalIterator()
-                first = next(it, _END)
-                with state_lock:
-                    if state["aborted"]:
-                        return
-                    state["started"] = True
-                    self.send_response(200)
-                    self.send_header("Content-Type", ctype)
-                    self.send_header("X-Druid-Query-Id", qid)
-                    self.send_header("Transfer-Encoding", "chunked")
-                    self.end_headers()
-                buf = bytearray()
-
-                def out(b: bytes, flush: bool = False) -> None:
-                    # coalesce rows into ~64 KiB chunks: one TCP-ish
-                    # write per row would dominate wide exports
-                    buf.extend(b)
-                    if flush or len(buf) >= 65536:
-                        self.wfile.write(
-                            f"{len(buf):X}\r\n".encode() + bytes(buf)
-                            + b"\r\n")
-                        buf.clear()
-
-                emitted = False
-                if json_array:
-                    out(b"[")
-                hb = header_bytes()
-                if hb is not None:
-                    out(hb)
-                    emitted = True
-                if first is not _END:
-                    if emitted and json_array:
-                        out(b",")
-                    out(render(first))
-                    for r in it:
-                        if json_array:
-                            out(b",")
-                        out(render(r))
-                # completeness marker: closing bracket + LF for JSON
-                # arrays (ObjectWriter.writeResponseEnd), trailing
-                # blank line for line/csv formats
-                out(b"]\n" if json_array else b"\n", flush=True)
-                self.wfile.write(b"0\r\n\r\n")
-
-            try:
-                sched.submit(
-                    qid, stream,
-                    lane=QueryScheduler.compute_lane(ctx),
-                    timeout_ms=_timeout_ms(ctx))
-            except Exception:
-                with state_lock:
-                    if state["started"]:
-                        # headers already sent: the closed
-                        # connection (no completeness marker) is
-                        # the error signal
-                        self.close_connection = True
-                        return
-                    state["aborted"] = True
-                raise
-            return
-        except QueryCapacityExceededError as e:
-            self._send_json(429, error_body("Query capacity exceeded", e), qid)
-        except QueryTimeoutError as e:
-            self._send_json(504, error_body("Query timeout", e), qid)
-        except QueryCanceledError as e:
-            self._send_json(500, error_body("Query cancelled", e), qid)
+            writer = _sql_body(fmt, df.schema,
+                               bool(body.get("header", False)),
+                               bool(body.get("typesHeader", False)),
+                               bool(body.get("sqlTypesHeader", False)))
         except Exception as e:
-            code = ("SQL parse failed"
-                    if "PARSE_SYNTAX_ERROR" in str(e) else "Unknown exception")
-            self._send_json(400 if code == "SQL parse failed" else 500,
-                            error_body(code, e), qid)
+            if "PARSE_SYNTAX_ERROR" in str(e):
+                self._send_json(400, error_body("SQL parse failed", e), qid)
+            else:
+                self._send_error(e, qid)
+            return
+        # every resultFormat streams (SqlResourceQueryResultPusher
+        # pushes all writers incrementally), so a heavy SELECT never
+        # materializes on the driver in any sync format
+        self._stream(qid, ctx, df, _SQL_CTYPE.get(fmt, "application/json"),
+                     writer)
 
 
 def _timeout_ms(ctx: dict) -> int | None:

@@ -5,8 +5,10 @@ sql/.../sql/http/SqlResource.java:124 (SQL + resultFormats), error shape
 processing/.../query/QueryException.java:159-175.
 """
 
+import http.client
 import json
 import os
+import time
 import urllib.request
 
 import duckdb
@@ -35,6 +37,17 @@ def _post(srv, path, obj, expect_error=False):
         if not expect_error:
             raise
         return e.code, json.loads(e.read()), dict(e.headers)
+
+
+def _log_entry(srv, qid):
+    """The request-log entry of query `qid`. It is written after the
+    response's last byte, so poll for it."""
+    for _ in range(200):
+        for e in srv.request_logger.recent():
+            if e.get("queryId") == qid:
+                return e
+        time.sleep(0.05)
+    raise AssertionError(f"no request-log entry for {qid}")
 
 
 def _get(srv, path):
@@ -430,6 +443,7 @@ def test_native_etag_304(server):
     except urllib.error.HTTPError as e:  # urllib treats 304 as an error
         code, payload, hdrs = e.code, e.read(), e.headers
     assert code == 304 and payload == b"" and hdrs["ETag"] == etag
+    assert _log_entry(server, hdrs["X-Druid-Query-Id"])["status"] == 304
     # a different query gets a different tag
     q2 = dict(q, dataSource="orders")
     status, _, headers2 = _post(server, "/druid/v2", q2)
@@ -621,11 +635,16 @@ def test_request_logging(engine, tmp_path_factory):
             "granularity": "all",
             "aggregations": [{"type": "count", "name": "n"}],
             "intervals": ["2024-01-01/2024-02-01"]})
-        _post(srv, "/druid/v2/sql",
-              {"query": "SELECT count(*) AS n FROM events"})
+        _, _, sql_hdrs = _post(srv, "/druid/v2/sql",
+                               {"query": "SELECT count(*) AS n FROM events"})
         _post(srv, "/druid/v2/sql", {"query": "SELECT broken FROM"},
               expect_error=True)
-        entries = srv.request_logger.recent()
+        # an entry is written after the response's last byte: poll
+        for _ in range(200):
+            entries = srv.request_logger.recent()
+            if len(entries) >= 3:
+                break
+            time.sleep(0.05)
         assert len(entries) == 3
         native, sql_ok, sql_bad = entries
         assert native["kind"] == "native" and native["success"]
@@ -633,6 +652,7 @@ def test_request_logging(engine, tmp_path_factory):
         assert native["queryId"] and native["query_time_ms"] >= 0
         assert sql_ok["kind"] == "sql" and sql_ok["success"]
         assert "SELECT count(*)" in sql_ok["detail"]
+        assert sql_ok["queryId"] == sql_hdrs["X-Druid-Query-Id"]
         assert not sql_bad["success"] and sql_bad["status"] >= 400
         with open(log_path) as fh:
             lines = [json.loads(ln) for ln in fh]
@@ -841,6 +861,48 @@ def test_native_scan_streams_no_driver_collect(server):
                                      ["NATION_2"]]
     finally:
         _CDF.collect = orig
+
+
+def _truncated(srv, path, obj) -> str:
+    """POST a query whose result fails after its first rows: the 200
+    headers are out, so the body ends without its completeness marker
+    and the connection closes. Returns the query id."""
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{srv.port}{path}", data=json.dumps(obj).encode(),
+        headers={"Content-Type": "application/json"}, method="POST")
+    with urllib.request.urlopen(req) as r:
+        assert r.status == 200
+        with pytest.raises((http.client.IncompleteRead,
+                            ConnectionResetError)):
+            r.read()
+        return r.headers["X-Druid-Query-Id"]
+
+
+_FAILS_LATE = "CASE WHEN id < 150000 THEN id ELSE raise_error('boom') END"
+
+
+def test_truncated_stream_logged_as_failure(server, spark):
+    """A result that fails after its headers went out is logged with
+    success false and the error class, for native and SQL streams
+    alike. range(..., 4) yields partition 0 (the first row) before the
+    failing partition 3 runs."""
+    qid = _truncated(server, "/druid/v2/sql", {
+        "query": f"SELECT {_FAILS_LATE} AS x FROM range(0, 200000, 1, 4)"})
+    entry = _log_entry(server, qid)
+    assert entry["kind"] == "sql" and not entry["success"]
+    assert entry["error"]
+    cat = server.engine.catalog
+    cat.register_table("fails_late", spark.range(0, 200000, 1, 4)
+                       .selectExpr(f"{_FAILS_LATE} AS x"))
+    try:
+        qid = _truncated(server, "/druid/v2", {
+            "queryType": "scan", "dataSource": "fails_late",
+            "columns": ["x"]})
+    finally:
+        cat.drop_table("fails_late")
+    entry = _log_entry(server, qid)
+    assert entry["kind"] == "native" and not entry["success"]
+    assert entry["error"]
 
 
 def test_console_dynamic_config_and_capacity_endpoints(server):
