@@ -1364,14 +1364,13 @@ class _Handler(BaseHTTPRequestHandler):
             raise
         finally:
             status = self._last_status or 200
-            extra = {"error": self._last_error} if self._last_error else {}
             logger.log(kind=kind, detail=detail, status=status,
                        identity=getattr(self, "_ident", None),
                        remote=self.client_address[0],
                        queryId=self._last_qid,
                        success=status < 400 and not self._last_error,
-                       query_time_ms=int((time.time() - t0) * 1000),
-                       **extra)
+                       error=self._last_error,
+                       query_time_ms=int((time.time() - t0) * 1000))
 
     def _headers(self, status: int, qid: str | None, ctype: str | None,
                  length: int | None = None, etag: str | None = None) -> None:
@@ -1429,7 +1428,6 @@ class _Handler(BaseHTTPRequestHandler):
         failure still gets its error status. Once the headers are out,
         an error truncates the body (no completeness marker), closes the
         connection, and is logged as a failure."""
-        end = object()
         # started/aborted share one lock: a timeout raised by submit
         # before the worker sent headers must keep the worker (which a
         # cancel does not always stop) off the socket, or two responses
@@ -1439,13 +1437,13 @@ class _Handler(BaseHTTPRequestHandler):
 
         def run() -> None:
             it = df.toLocalIterator()
-            first = next(it, end)
+            first = next(it, None)
             with lock:
                 if state["aborted"]:
                     return
                 state["started"] = True
                 self._headers(200, qid, ctype, etag=etag)
-            rows = it if first is end else itertools.chain((first,), it)
+            rows = it if first is None else itertools.chain((first,), it)
             buf = bytearray()
 
             def chunk() -> None:

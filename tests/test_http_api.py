@@ -883,14 +883,14 @@ _FAILS_LATE = "CASE WHEN id < 150000 THEN id ELSE raise_error('boom') END"
 
 def test_truncated_stream_logged_as_failure(server, spark):
     """A result that fails after its headers went out is logged with
-    success false and the error class, for native and SQL streams
-    alike. range(..., 4) yields partition 0 (the first row) before the
+    the status it sent, success false and the error class, for native
+    and SQL streams alike. range(..., 4) yields partition 0 (the first row) before the
     failing partition 3 runs."""
     qid = _truncated(server, "/druid/v2/sql", {
         "query": f"SELECT {_FAILS_LATE} AS x FROM range(0, 200000, 1, 4)"})
     entry = _log_entry(server, qid)
-    assert entry["kind"] == "sql" and not entry["success"]
-    assert entry["error"]
+    assert entry["kind"] == "sql" and entry["status"] == 200
+    assert not entry["success"] and entry["error"]
     cat = server.engine.catalog
     cat.register_table("fails_late", spark.range(0, 200000, 1, 4)
                        .selectExpr(f"{_FAILS_LATE} AS x"))
@@ -901,8 +901,8 @@ def test_truncated_stream_logged_as_failure(server, spark):
     finally:
         cat.drop_table("fails_late")
     entry = _log_entry(server, qid)
-    assert entry["kind"] == "native" and not entry["success"]
-    assert entry["error"]
+    assert entry["kind"] == "native" and entry["status"] == 200
+    assert not entry["success"] and entry["error"]
 
 
 def test_console_dynamic_config_and_capacity_endpoints(server):
