@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import contextlib
 import datetime as _dt
+import glob
 import hashlib
 import itertools
 import json
@@ -32,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from druid_spark.cache import LockedLRU
+from druid_spark.granularity import (CHUNK_FORMATS, chunk_interval,
+                                     strftime_format)
 
 # default time-column mapping for the driver's tables
 DEFAULT_TIME_COLUMNS = {
@@ -85,8 +88,7 @@ def _part_ranges(part, ranges) -> list[tuple[str | None, str | None]]:
     pattern, segment granularity). A value is its bucket's start,
     zero-padded, so chronological order is lexicographic order."""
     _col, fmt, grain = part
-    py_fmt = fmt.replace("yyyy", "%Y").replace("MM", "%m") \
-        .replace("dd", "%d").replace("HH", "%H")
+    py_fmt = strftime_format(fmt)
     lo_ok, hi_ok = to_us(_dt.datetime.min), to_us(_dt.datetime.max)
 
     def fmt_us(us: int) -> str | None:
@@ -307,6 +309,17 @@ def _part_predicate(column: str, pr) -> str:
                          + [f"{col} <= '{hi}'"] * (hi is not None))
             for lo, hi in pr]
     return " OR ".join(f"({a})" for a in arms) or "false"
+
+
+def _parquet_files(path: str):
+    """The Parquet files of a table path, lazily: the file itself, or
+    those under the directory (a glob skips dot-names such as staging
+    directories, as Spark does)."""
+    if not os.path.isdir(path):
+        return iter([path] if path.endswith(".parquet")
+                    and os.path.isfile(path) else [])
+    return glob.iglob(os.path.join(glob.escape(path), "**", "*.parquet"),
+                      recursive=True)
 
 
 class Catalog:
@@ -550,6 +563,27 @@ class Catalog:
         self._scans.discard(lambda k: k[0] == name)
         self._drop_retired()
 
+    def commit(self, name: str, path: str,
+               granularity: str | None = None) -> None:
+        """Publish the warehouse directory `path` as table `name`: the
+        step every writer ends with, as Druid's all publish through
+        SegmentTransactionalInsertAction. `path` is read again and
+        registered, partitioned by the segment `granularity`'s chunks
+        (None keeps the registered partitioning; ALL, or a grain outside
+        CHUNK_FORMATS, clears it). With no Parquet file left the table
+        is unregistered (drop_table)."""
+        if next(_parquet_files(path), None) is None:
+            self.drop_table(name)
+            return
+        self.register_table(name, self.spark.read.parquet(path),
+                            source_path=path)
+        if granularity is not None:
+            g = granularity.lower()
+            if g in CHUNK_FORMATS:
+                self.set_partitioning(name, "__dt", CHUNK_FORMATS[g], g)
+            else:
+                self._partitioning.pop(name, None)
+
     def register_lookup(self, name: str, mapping: dict[str, Any],
                         tier: str = "__default") -> None:
         self._lookup_tiers.setdefault(tier, {})[name] = mapping
@@ -685,7 +719,7 @@ class Catalog:
         if info is None or name in self._tables or name in self._pending:
             return False
         path, time_column, part = info
-        if not os.path.exists(path):
+        if next(_parquet_files(path), None) is None:
             return False  # killed on disk in the meantime
         self.register_table(name, path, time_column=time_column)
         if part:
@@ -696,71 +730,37 @@ class Catalog:
         """(datasource, segment path, size bytes, num rows) per parquet
         file — the sys.segments analog (SystemSchema.java:105). Row counts
         come from parquet footers (no data scan)."""
+        import pyarrow.parquet as pq
         out = []
         for name, path in sorted(self._paths.items()):
-            files = []
-            if os.path.isdir(path):
-                for root, _, fns in os.walk(path):
-                    files += [os.path.join(root, f) for f in fns
-                              if f.endswith(".parquet")]
-            elif path.endswith(".parquet"):
-                files = [path]
-            for f in sorted(files):
-                rows = -1
+            for f in sorted(_parquet_files(path)):
                 try:
-                    import pyarrow.parquet as pq
                     rows = pq.read_metadata(f).num_rows
                 except Exception:
-                    pass
+                    rows = -1
                 out.append((name, f, os.path.getsize(f), rows))
         return out
 
     def segments_full(self) -> list[tuple]:
         """Reference-shaped segment rows (SystemSchema.java:105
         SEGMENTS_SIGNATURE subset): (datasource, segment_path, size,
-        num_rows, start, end, partition_num, version). start/end come
-        from the `__dt=<bucket>` partition directory (the engine's
-        segment-interval layout); partition_num indexes files within
-        one interval; version is the file mtime (segment version is a
-        timestamp in the reference too). Caveat: WEEK-partitioned
-        tables share the day directory format (yyyy-MM-dd, Monday
-        buckets), so their rows report day-length intervals — the
-        start is always exact."""
-        import datetime as _dt
-        import re as _re
-
-        _GRAIN = {4: ("%Y", "year"), 7: ("%Y-%m", "month"),
-                  10: ("%Y-%m-%d", "day"), 13: ("%Y-%m-%d-%H", "hour")}
-
-        def interval(path: str):
-            m = _re.search(r"__dt=([^/]+)", path)
-            if not m:
-                return None, None
-            val = m.group(1)
-            spec = _GRAIN.get(len(val))
-            if not spec:
-                return None, None
-            fmt, grain = spec
-            try:
-                start = _dt.datetime.strptime(val, fmt)
-            except ValueError:
-                return None, None
-            if grain == "hour":
-                end = start + _dt.timedelta(hours=1)
-            elif grain == "day":
-                end = start + _dt.timedelta(days=1)
-            elif grain == "month":
-                end = (start.replace(day=28) + _dt.timedelta(days=4)) \
-                    .replace(day=1)
-            else:
-                end = start.replace(year=start.year + 1)
-            iso = "%Y-%m-%dT%H:%M:%S.000Z"
-            return start.strftime(iso), end.strftime(iso)
-
+        num_rows, start, end, partition_num, version). start/end are the
+        time chunk of the file's partition value under the table's
+        registered partitioning (chunk_interval); partition_num indexes
+        files within one interval; version is the file mtime (segment
+        version is a timestamp in the reference too)."""
+        iso = "%Y-%m-%dT%H:%M:%S.000Z"
         out = []
         part_counter: dict[tuple, int] = {}
         for name, f, size, rows in self.segments():
-            start, end = interval(f)
+            col, fmt, grain = (self._partitioning.get(name)
+                               or ("__dt", None, None))
+            m = re.search(f"/{re.escape(col)}=([^/]+)/", f)
+            start = end = None
+            if m:
+                with contextlib.suppress(ValueError):
+                    start, end = (t.strftime(iso) for t in
+                                  chunk_interval(m.group(1), fmt, grain))
             key = (name, start)
             pnum = part_counter.get(key, 0)
             part_counter[key] = pnum + 1

@@ -1,4 +1,4 @@
-"""Coordinator duties — auto-compaction.
+"""Coordinator duties — auto-compaction and retention.
 
 The reference coordinator runs periodic duties; CompactSegments
 (server/.../server/coordinator/duty/CompactSegments.java) scans each
@@ -6,14 +6,15 @@ datasource's segment timeline for intervals fragmented into many small
 segments and submits compaction tasks for just those intervals. The
 Spark analog: scan a warehouse table's time-partition directories via
 parquet footers (no data read), and rewrite only the partitions whose
-file count exceeds the per-datasource config.
+file count exceeds the per-datasource config. The overlord's compact
+and kill tasks share these steps (compact_table, drop_interval); each
+ends in Catalog.commit.
 
-The rewrite targets one partition directory at a time (never the whole
-table, unlike TableService.compact), staging into a dot-prefixed temp
-dir inside the warehouse (ignored by Spark's partition discovery) and
-swapping it in. Single-node swap semantics: rmtree+rename, the same
-non-MVCC caveat as TableService — the reference swaps atomically via
-segment versions/overshadowing.
+The rewrite targets one partition directory at a time, staging into a
+dot-prefixed temp dir inside the warehouse (ignored by Spark's
+partition discovery) and swapping it in. Single-node swap semantics:
+rmtree+rename, not MVCC — the reference swaps atomically via segment
+versions/overshadowing.
 """
 
 from __future__ import annotations
@@ -24,7 +25,9 @@ import shutil
 import threading
 import time
 import uuid
-from typing import Any
+from typing import Any, Callable
+
+from druid_spark.granularity import chunk_interval, parse_iso_interval
 
 
 def _parse_period(p: str) -> "dt.timedelta":
@@ -42,15 +45,102 @@ def _parse_period(p: str) -> "dt.timedelta":
                         hours=h, minutes=mi, seconds=s)
 
 
+def _iso_interval(iv: str) -> tuple[dt.datetime, dt.datetime]:
+    """An ISO interval as naive-UTC [start, end) datetimes."""
+    return tuple(dt.datetime.fromisoformat(t) for t in parse_iso_interval(iv))
+
+
+def _table_dir(catalog, ds: str) -> str:
+    path = catalog.source_path(ds)
+    if path is None or not os.path.isdir(path):
+        raise KeyError(f"no warehouse table {ds!r}")
+    return path
+
+
+def _partition_dirs(path: str) -> list[tuple[str, int]]:
+    """(partition dirname, parquet file count) for each time partition
+    under a warehouse table path — footer-free listing."""
+    out = []
+    if not os.path.isdir(path):
+        return out
+    for d in sorted(os.listdir(path)):
+        full = os.path.join(path, d)
+        if "=" not in d or not os.path.isdir(full):
+            continue
+        n = sum(1 for f in os.listdir(full) if f.endswith(".parquet"))
+        out.append((d, n))
+    return out
+
+
+def drop_chunks(catalog, ds: str,
+                drop: Callable[[dt.datetime, dt.datetime], bool]
+                ) -> list[tuple[str, dt.datetime]]:
+    """Delete the time chunks of table `ds` whose [start, end)
+    (chunk_interval) `drop` accepts, then commit the table: the step
+    retention rules and the kill task share. A chunk goes whole, the
+    unit Druid retires. Returns each dropped chunk's (dirname, start)."""
+    path = _table_dir(catalog, ds)
+    col, fmt, grain = catalog.partitioning(ds) or ("__dt", None, None)
+    dropped = []
+    for d, _n in _partition_dirs(path):
+        if not d.startswith(col + "="):
+            continue
+        try:
+            start, end = chunk_interval(d.split("=", 1)[1], fmt, grain)
+        except ValueError:
+            continue
+        if drop(start, end):
+            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+            dropped.append((d, start))
+    if dropped:
+        catalog.commit(ds, path)
+    return dropped
+
+
+def drop_interval(catalog, ds: str, interval: str) -> list[str]:
+    """Kill task (KillUnusedSegmentsTask analog): drop the chunks of
+    `ds` that the ISO `interval` contains; a chunk it only overlaps
+    stays, as with IntervalDropRule. Returns the dropped partition
+    values."""
+    a, b = _iso_interval(interval)
+    return [d.split("=", 1)[1] for d, _start in
+            drop_chunks(catalog, ds, lambda s, e: a <= s and e <= b)]
+
+
+def _compact_partition(catalog, ds: str, part: str, target: int) -> None:
+    """Rewrite partition directory `part` of table `ds` into `target`
+    files."""
+    path = catalog.source_path(ds)
+    pdir = os.path.join(path, part)
+    tmp = os.path.join(path, f".compact_{uuid.uuid4().hex[:8]}")
+    (catalog.spark.read.parquet(pdir).repartition(target)
+     .write.mode("overwrite").parquet(tmp))
+    # drop the _SUCCESS marker so the swapped dir holds parquet only
+    for f in os.listdir(tmp):
+        if f.startswith("_"):
+            os.remove(os.path.join(tmp, f))
+    shutil.rmtree(pdir)
+    os.rename(tmp, pdir)
+
+
+def compact_table(catalog, ds: str, target: int) -> None:
+    """Compaction task (ClientCompactionTaskQuery analog): rewrite every
+    time partition of `ds` into `target` files, then commit the table."""
+    path = _table_dir(catalog, ds)
+    for part, _n in _partition_dirs(path):
+        _compact_partition(catalog, ds, part, target)
+    catalog.commit(ds, path)
+
+
 class RetentionDuty:
     """Retention / load-drop rules duty — the coordinator's rule engine
     (server/.../server/coordinator/rules/: LoadRule, DropRule,
     PeriodLoadRule, PeriodDropBeforeRule, RunRules duty; RulesResource
     for the HTTP surface). Rules per datasource are evaluated in order,
     FIRST MATCH WINS; a partition matched by a load rule is retained,
-    by a drop rule deleted (the markAsUnused + kill analog: files are
-    removed, then the datasource re-registers). No matching rule =
-    retained (the cluster default rule is loadForever).
+    by a drop rule deleted (the markAsUnused + kill analog:
+    drop_chunks removes its files and commits the table). No matching
+    rule = retained (the cluster default rule is loadForever).
 
     Supported rule types: loadForever, dropForever,
     loadByPeriod {"period"} (retain partitions younger than now-P),
@@ -69,27 +159,6 @@ class RetentionDuty:
 
     def set_rules(self, datasource: str, rules: list[dict]) -> None:
         self.rules[datasource] = list(rules)
-
-    def _partition_bounds(self, ds: str, value: str):
-        """Partition value string → (start, end) datetimes via the
-        table's registered date_format pattern and granularity."""
-        part = self.engine.catalog.partitioning(ds)
-        fmt = part[1] if part else "yyyy-MM-dd"
-        py_fmt = fmt.replace("yyyy", "%Y").replace("MM", "%m") \
-            .replace("dd", "%d").replace("HH", "%H")
-        start = dt.datetime.strptime(value, py_fmt)
-        if py_fmt == "%Y-%m":  # calendar month, not a fixed span
-            end = (start.replace(day=28)
-                   + dt.timedelta(days=4)).replace(day=1)
-        elif py_fmt == "%Y":
-            end = start.replace(year=start.year + 1)
-        elif py_fmt.endswith("%H"):
-            end = start + dt.timedelta(hours=1)
-        elif part and part[2] == "week":  # the value is its Monday
-            end = start + dt.timedelta(days=7)
-        else:
-            end = start + dt.timedelta(days=1)
-        return start, end
 
     def _decide(self, rules: list[dict], start, end, now) -> str:
         """First-match rule decision. Reference semantics (rules/):
@@ -131,11 +200,7 @@ class RetentionDuty:
                 if end <= now - _parse_period(r["period"]):
                     return "drop"
             elif t in ("loadByInterval", "dropByInterval"):
-                a, b = r["interval"].split("/")
-                ia = dt.datetime.fromisoformat(a.replace("T", " ")
-                                               .rstrip("Z"))
-                ib = dt.datetime.fromisoformat(b.replace("T", " ")
-                                               .rstrip("Z"))
+                ia, ib = _iso_interval(r["interval"])
                 if t == "loadByInterval":
                     if start < ib and end > ia:  # overlap
                         return "load"
@@ -145,43 +210,25 @@ class RetentionDuty:
 
     def run_once(self) -> list[dict[str, Any]]:
         """One rule pass: drop every partition whose first matching
-        rule is a drop rule; re-register touched datasources; record
-        kill tasks in sys.tasks."""
+        rule is a drop rule (drop_chunks commits each touched table);
+        record kill tasks in sys.tasks."""
         now = self._now or dt.datetime.now()
         dropped = []
+        cat = self.engine.catalog
         with self._lock:
             for ds, rules in self.rules.items():
-                path = self.engine.catalog.source_path(ds)
-                if not path or not os.path.isdir(path):
+                if not os.path.isdir(cat.source_path(ds) or ""):
                     continue
-                part = self.engine.catalog.partitioning(ds)
-                col = part[0] if part else "__dt"
-                touched = False
-                for d in sorted(os.listdir(path)):
-                    if not d.startswith(col + "="):
-                        continue
-                    val = d.split("=", 1)[1]
-                    try:
-                        start, end = self._partition_bounds(ds, val)
-                    except ValueError:
-                        continue
-                    if self._decide(rules, start, end, now) == "drop":
-                        shutil.rmtree(os.path.join(path, d),
-                                      ignore_errors=True)
-                        tid = f"kill_{ds}_{val}_{uuid.uuid4().hex[:6]}"
-                        self.engine.record_task(tid, "kill", ds,
-                                                "SUCCESS")
-                        rec = {"dataSource": ds, "partition": d,
-                               "start": start.isoformat()}
-                        dropped.append(rec)
-                        self.history.append(rec)
-                        touched = True
-                if touched:
-                    self.engine.catalog.register_table(
-                        ds, self.engine.spark.read.parquet(path),
-                        source_path=path)
-                    if part:
-                        self.engine.catalog.set_partitioning(ds, *part)
+                for d, start in drop_chunks(
+                        cat, ds, lambda s, e: self._decide(rules, s, e, now)
+                        == "drop"):
+                    tid = (f"kill_{ds}_{d.split('=', 1)[1]}_"
+                           f"{uuid.uuid4().hex[:6]}")
+                    self.engine.record_task(tid, "kill", ds, "SUCCESS")
+                    rec = {"dataSource": ds, "partition": d,
+                           "start": start.isoformat()}
+                    dropped.append(rec)
+                    self.history.append(rec)
         return dropped
 
     def start(self, period: float = 300.0) -> "RetentionDuty":
@@ -241,20 +288,6 @@ class CompactionDuty:
         return self.configs.pop(datasource, None) is not None
 
     # -------------------------------------------------------------- scan
-    def _partition_dirs(self, path: str) -> list[tuple[str, int]]:
-        """(partition dirname, parquet file count) for each time
-        partition under a warehouse table path — footer-free listing."""
-        out = []
-        if not os.path.isdir(path):
-            return out
-        for d in sorted(os.listdir(path)):
-            full = os.path.join(path, d)
-            if "=" not in d or not os.path.isdir(full):
-                continue
-            n = sum(1 for f in os.listdir(full) if f.endswith(".parquet"))
-            out.append((d, n))
-        return out
-
     def scan(self) -> list[dict[str, Any]]:
         """Fragmented partitions across all configured datasources."""
         found = []
@@ -262,7 +295,7 @@ class CompactionDuty:
             path = self.engine.catalog.source_path(ds)
             if not path:
                 continue
-            for part, n in self._partition_dirs(path):
+            for part, n in _partition_dirs(path):
                 if n > cfg["maxFilesPerPartition"]:
                     found.append({"dataSource": ds, "partition": part,
                                   "files": n,
@@ -270,25 +303,11 @@ class CompactionDuty:
         return found
 
     # ----------------------------------------------------------- compact
-    def _compact_partition(self, ds: str, part: str, target: int) -> None:
-        path = self.engine.catalog.source_path(ds)
-        pdir = os.path.join(path, part)
-        spark = self.engine.spark
-        tmp = os.path.join(path, f".compact_{uuid.uuid4().hex[:8]}")
-        (spark.read.parquet(pdir).repartition(target)
-         .write.mode("overwrite").parquet(tmp))
-        # drop the _SUCCESS marker so the swapped dir holds parquet only
-        for f in os.listdir(tmp):
-            if f.startswith("_"):
-                os.remove(os.path.join(tmp, f))
-        shutil.rmtree(pdir)
-        os.rename(tmp, pdir)
-
     def run_once(self) -> list[dict[str, Any]]:
         """One duty cycle: compact every fragmented partition found.
-        Re-registers touched datasources so queries see the new file
-        listing (a registered DataFrame pins its file index); records
-        each compaction as a sys.tasks row."""
+        Commits touched datasources so queries see the new file listing
+        (a registered DataFrame pins its file index); records each
+        compaction as a sys.tasks row."""
         with self._lock:
             work = self.scan()
             touched = set()
@@ -300,8 +319,8 @@ class CompactionDuty:
                 self.engine.record_task(tid, "compact", w["dataSource"],
                                         "RUNNING")
                 try:
-                    self._compact_partition(w["dataSource"], w["partition"],
-                                            w["targetFiles"])
+                    _compact_partition(self.engine.catalog, w["dataSource"],
+                                       w["partition"], w["targetFiles"])
                     status = "SUCCESS"
                     err = None
                 except Exception as e:  # keep the duty loop alive
@@ -313,13 +332,8 @@ class CompactionDuty:
                 touched.add(w["dataSource"])
                 self.history.append(dict(w))
             for ds in touched:
-                path = self.engine.catalog.source_path(ds)
-                part = self.engine.catalog.partitioning(ds)
-                self.engine.catalog.register_table(
-                    ds, self.engine.spark.read.parquet(path),
-                    source_path=path)
-                if part:
-                    self.engine.catalog.set_partitioning(ds, *part)
+                self.engine.catalog.commit(
+                    ds, self.engine.catalog.source_path(ds))
             return work
 
     # -------------------------------------------------------------- loop

@@ -1021,13 +1021,12 @@ class DruidSparkEngine:
                 T.StructField("IS_AGGREGATOR", T.StringType()),
                 T.StructField("SIGNATURES", T.StringType()),
             ])).createOrReplaceTempView("information_schema_routines")
-        segs = self.catalog.segments()
-        if segs:
+        full = self.catalog.segments_full()
+        if full:
             # SEGMENTS_SIGNATURE subset (SystemSchema.java:105): the
             # single-warehouse engine publishes every segment it has —
             # is_published/is_available are identically 1, nothing is
             # realtime-unpublished or overshadowed after handoff
-            full = self.catalog.segments_full()
             self.spark.createDataFrame(
                 [(f"{ds}_{start or 'all'}_{pnum}", ds, p, sz, nr,
                   start, end, pnum, ver, 1, 1, 0, 0)
@@ -1061,7 +1060,7 @@ class DruidSparkEngine:
         # sys.server_segments (SystemSchema SERVER_SEGMENTS): which
         # server serves which segment — single-process: all of them
         self.spark.createDataFrame(
-            [(server, f"{s[0]}:{s[1]}") for s in segs],
+            [(server, f"{s[0]}:{s[1]}") for s in full],
             T.StructType([T.StructField("server", T.StringType()),
                           T.StructField("segment_id", T.StringType())])
         ).createOrReplaceTempView("sys_server_segments")

@@ -49,6 +49,17 @@ _PERIOD_TRUNC = {
     "P1Y": "year",
 }
 
+# segment granularity -> date_format pattern of a warehouse table's
+# `__dt` partition values. A value is its time chunk's start; WEEK
+# shares the day pattern, its values being Mondays
+CHUNK_FORMATS = {
+    "hour": "yyyy-MM-dd-HH",
+    "day": "yyyy-MM-dd",
+    "week": "yyyy-MM-dd",
+    "month": "yyyy-MM",
+    "year": "yyyy",
+}
+
 _PERIOD_RE = re.compile(
     r"^P(?:(\d+)Y)?(?:(\d+)M)?(?:(\d+)W)?(?:(\d+)D)?"
     r"(?:T(?:(\d+)H)?(?:(\d+)M)?(?:(\d+(?:\.\d+)?)S)?)?$"
@@ -102,6 +113,44 @@ def add_period(t: "datetime.datetime", period: str,
         t = t.replace(year=ny, month=nm + 1, day=nd)
     return t + sign * dt.timedelta(weeks=w, days=d, hours=h,
                                    minutes=mi, seconds=s)
+
+
+def chunk_format(granularity: str) -> str | None:
+    """The `__dt` pattern a table of segment `granularity` is written
+    with; None for ALL (unpartitioned). Grains outside CHUNK_FORMATS
+    write day values that Catalog.commit does not register."""
+    g = granularity.lower()
+    return None if g == "all" else CHUNK_FORMATS.get(g, "yyyy-MM-dd")
+
+
+def strftime_format(fmt: str) -> str:
+    """A `__dt` date_format pattern as the strftime/strptime one."""
+    return fmt.replace("yyyy", "%Y").replace("MM", "%m") \
+        .replace("dd", "%d").replace("HH", "%H")
+
+
+def chunk_interval(value: str, fmt: str | None = None,
+                   granularity: str | None = None
+                   ) -> tuple["datetime.datetime", "datetime.datetime"]:
+    """[start, end) of the time chunk whose `__dt` value is `value`,
+    under a table's registered (`fmt`, `granularity`): a WEEK value is
+    its Monday, any other spans its pattern's unit. With no `fmt`, the
+    CHUNK_FORMATS pattern of the value's length. ValueError if the
+    value does not parse."""
+    import datetime as dt
+    if fmt is None:
+        fmt = next((f for f in CHUNK_FORMATS.values()
+                    if len(f) == len(value)), "")
+    start = dt.datetime.strptime(value, strftime_format(fmt))
+    if fmt.endswith("HH"):
+        end = start + dt.timedelta(hours=1)
+    elif fmt.endswith("dd"):
+        end = start + dt.timedelta(days=7 if granularity == "week" else 1)
+    elif fmt.endswith("MM"):
+        end = (start.replace(day=28) + dt.timedelta(days=4)).replace(day=1)
+    else:
+        end = start.replace(year=start.year + 1)
+    return start, end
 
 
 def parse_iso_interval(iv: str) -> tuple[str, str]:

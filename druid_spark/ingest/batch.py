@@ -33,16 +33,6 @@ from druid_spark.aggregations import AggCompiler
 from druid_spark.expr import compile_expr
 from druid_spark.filters import FilterCompiler
 
-# segment granularity -> partition dir format
-_PART_FMT = {
-    "hour": "yyyy-MM-dd-HH",
-    "day": "yyyy-MM-dd",
-    "week": "yyyy-MM-dd",
-    "month": "yyyy-MM",
-    "year": "yyyy",
-    "all": None,
-}
-
 
 def apply_flatten_spec(df: DataFrame, flatten: dict[str, Any]) -> DataFrame:
     """inputFormat.flattenSpec (JSONPathSpec.java:1,
@@ -270,7 +260,9 @@ def apply_rollup(df: DataFrame, dims: list[str], metrics: list[dict],
 class TableService:
     """Time-partitioned Parquet warehouse with REPLACE-by-interval.
 
-    Layout: {base}/{datasource}/__dt=<bucket>/part-*.parquet.
+    Layout: {base}/{datasource}/__dt=<bucket>/part-*.parquet, the
+    bucket formatted by granularity.chunk_format. A writer publishes
+    what it wrote with Catalog.commit.
     Dynamic partition overwrite = Druid's atomic version swap per time
     chunk (VersionedIntervalTimeline overshadowing) without the custom
     MVCC machinery — Spark replaces exactly the partitions present in
@@ -289,7 +281,7 @@ class TableService:
               segment_granularity: str = "day", mode: str = "overwrite",
               target_rows_per_file: int = 5_000_000,
               cluster_by: list[str] | None = None) -> None:
-        fmt = _PART_FMT.get(segment_granularity, "yyyy-MM-dd")
+        fmt = G.chunk_format(segment_granularity)
         if fmt is None:
             df.write.mode(mode).parquet(self.path(datasource))
             return
@@ -332,49 +324,6 @@ class TableService:
 
     def table(self, datasource: str) -> DataFrame:
         return self.spark.read.parquet(self.path(datasource)).drop("__dt")
-
-    def drop_interval(self, datasource: str, interval: str) -> list[str]:
-        """Retention: drop the time chunks covered by an ISO interval
-        "start/end" — the coordinator drop-rule + kill-task analog
-        (server/coordinator/rules/IntervalDropRule.java,
-        indexing KillUnusedSegmentsTask). A chunk is dropped whole —
-        the same unit Druid retires (a segment's time chunk), no data
-        rewrite. Returns the dropped partition names."""
-        import shutil
-        from datetime import datetime
-
-        def parse(s: str) -> datetime:
-            return datetime.fromisoformat(
-                s.replace("T", " ").rstrip("Z"))
-
-        start, end = (parse(p) for p in interval.split("/"))
-        strp = {10: "%Y-%m-%d", 13: "%Y-%m-%d-%H", 7: "%Y-%m", 4: "%Y"}
-        p = self.path(datasource)
-        dropped = []
-        for name in sorted(os.listdir(p)):
-            if not name.startswith("__dt="):
-                continue
-            val = name[len("__dt="):]
-            fmt = strp.get(len(val))
-            if fmt is None:
-                continue
-            bucket = datetime.strptime(val, fmt)
-            if start <= bucket < end:
-                shutil.rmtree(os.path.join(p, name))
-                dropped.append(val)
-        return dropped
-
-    def compact(self, datasource: str, target_files_per_partition: int = 1) -> None:
-        """Rewrite each time partition into target file count (Druid's
-        compaction task analog)."""
-        p = self.path(datasource)
-        df = self.spark.read.parquet(p)
-        tmp = p + ".compact"
-        (df.repartition(target_files_per_partition, F.col("__dt"))
-         .write.mode("overwrite").partitionBy("__dt").parquet(tmp))
-        import shutil
-        shutil.rmtree(p)
-        os.rename(tmp, p)
 
 
 def run_ingestion(spark: SparkSession, spec: dict[str, Any],

@@ -203,15 +203,7 @@ def _run_ingest_body(engine, stmt: IngestStatement):
     mode = "append" if stmt.verb == "INSERT" else "overwrite"
     svc.write(df, stmt.table, stmt.granularity, mode=mode,
               cluster_by=stmt.cluster_by)
-    # register WITH the __dt partition column so interval queries can
-    # prune time chunks (Catalog.scan); query compilers
-    # never surface __dt unless explicitly selected
-    from druid_spark.ingest.batch import _PART_FMT
-    tbl = engine.spark.read.parquet(svc.path(stmt.table))
-    engine.catalog.register_table(stmt.table, tbl,
-                                  source_path=svc.path(stmt.table))
-    fmt = _PART_FMT.get(stmt.granularity)
-    if fmt:
-        engine.catalog.set_partitioning(stmt.table, "__dt", fmt,
-                                        stmt.granularity)
+    # partitioned by __dt, interval queries prune time chunks
+    # (Catalog.scan); query compilers never surface __dt unless selected
+    engine.catalog.commit(stmt.table, svc.path(stmt.table), stmt.granularity)
     return df

@@ -848,8 +848,8 @@ class _Overlord:
     shutdown lifecycle). Task types: index / index_parallel (spec →
     run_ingestion → catalog registration, so the datasource is
     immediately queryable), compact (ClientCompactionTaskQuery analog →
-    TableService.compact), kill (KillUnusedSegmentsTask →
-    TableService.drop_interval), noop (NoopTask — the reference's test
+    coordinator.compact_table), kill (KillUnusedSegmentsTask →
+    coordinator.drop_interval), noop (NoopTask — the reference's test
     task). Each task runs on a daemon thread under the query
     scheduler's job-group registry, so shutdown cancels the underlying
     Spark jobs, not just the bookkeeping. Terminal tasks are evicted
@@ -897,33 +897,27 @@ class _Overlord:
         self.engine.record_task(tid, ttype, ds, "RUNNING")
 
         def work():
-            svc = self.engine.table_service()
             if ttype in ("index", "index_parallel"):
-                from druid_spark.ingest.batch import _PART_FMT, run_ingestion
+                from druid_spark.ingest.batch import run_ingestion
+                svc = self.engine.table_service()
                 name = run_ingestion(self.engine.spark, spec, svc)
-                tbl = self.engine.spark.read.parquet(svc.path(name))
-                self.engine.catalog.register_table(
-                    name, tbl, source_path=svc.path(name))
-                gran = (spec.get("spec", spec)["dataSchema"]
-                        .get("granularitySpec", {})
-                        .get("segmentGranularity", "day"))
-                fmt = _PART_FMT.get(gran)
-                if fmt:
-                    self.engine.catalog.set_partitioning(
-                        name, "__dt", fmt, gran)
+                self.engine.catalog.commit(
+                    name, svc.path(name),
+                    spec.get("spec", spec)["dataSchema"]
+                    .get("granularitySpec", {})
+                    .get("segmentGranularity", "day"))
                 rec["processed"] = sum(
                     nr for ds_, _p, _sz, nr
                     in self.engine.catalog.segments()
                     if ds_ == name and nr >= 0)
             elif ttype == "compact":
+                from druid_spark.coordinator import compact_table
                 tuning = spec.get("tuningConfig") or {}
-                svc.compact(ds, tuning.get("targetFilesPerPartition", 1))
+                compact_table(self.engine.catalog, ds,
+                              tuning.get("targetFilesPerPartition", 1))
             elif ttype == "kill":
-                svc.drop_interval(ds, spec["interval"])
-                # refresh the cached DataFrame so queries see the drop
-                self.engine.catalog.register_table(
-                    ds, self.engine.spark.read.parquet(svc.path(ds)),
-                    source_path=svc.path(ds))
+                from druid_spark.coordinator import drop_interval
+                drop_interval(self.engine.catalog, ds, spec["interval"])
             elif ttype == "noop":
                 # NoopTask.java: sleeps runTime millis then succeeds —
                 # poll the cancel flag so shutdown interrupts the sleep

@@ -246,12 +246,32 @@ def test_retention_week_partition_spans_its_week():
     format): the partition's interval is the whole week, so a drop rule
     must contain all seven days."""
     import datetime as dt
-    from types import SimpleNamespace
-    from druid_spark.coordinator import RetentionDuty
-    duty = RetentionDuty(SimpleNamespace(catalog=SimpleNamespace(
-        partitioning=lambda ds: ("__dt", "yyyy-MM-dd", "week"))))
-    assert duty._partition_bounds("wk", "2024-01-08") == (
+    from druid_spark.granularity import chunk_interval
+    assert chunk_interval("2024-01-08", "yyyy-MM-dd", "week") == (
         dt.datetime(2024, 1, 8), dt.datetime(2024, 1, 15))
+
+
+def test_retention_dropping_every_chunk_unregisters(eng):
+    """A rule pass that drops every chunk of a table unregisters it
+    (nothing is left to read) and goes on to the next datasource,
+    instead of failing on the empty directory."""
+    import datetime as dt
+    from druid_spark.coordinator import RetentionDuty
+    for name in ("ev_gone", "ev_next"):
+        eng.sql(f"REPLACE INTO {name} OVERWRITE ALL "
+                "SELECT ts AS __time, value FROM events PARTITIONED BY DAY")
+    duty = RetentionDuty(eng, now=dt.datetime(2024, 2, 1))
+    duty.set_rules("ev_gone", [{"type": "dropForever"}])
+    duty.set_rules("ev_next", [
+        {"type": "dropByInterval",
+         "interval": "2024-01-10T00:00:00Z/2024-01-11T00:00:00Z"}])
+    dropped = duty.run_once()
+    assert "ev_gone" not in eng.catalog.tables()
+    assert [d["partition"] for d in dropped
+            if d["dataSource"] == "ev_next"] == ["__dt=2024-01-10"]
+    with pytest.raises(Exception):
+        eng.sql("SELECT COUNT(*) AS n FROM ev_gone").collect()
+    assert eng.sql("SELECT COUNT(*) AS n FROM ev_next").first()["n"] > 0
 
 
 def test_retention_http_rules_api(eng):

@@ -203,6 +203,49 @@ def test_compact_task(osrv):
     assert _await_task(osrv, out["task"])["statusCode"] == "SUCCESS"
 
 
+def test_compact_task_keeps_query_results(osrv):
+    """After a compact task the datasource reads the rewritten files, so
+    the same query returns the same rows."""
+    status, out = _post(osrv, "/druid/indexer/v1/task",
+                        _index_spec("ov_compact_q"))
+    assert _await_task(osrv, out["task"])["statusCode"] == "SUCCESS"
+    query = {"queryType": "timeseries", "dataSource": "ov_compact_q",
+             "granularity": "day", "intervals": ["2024-03-01/2024-03-06"],
+             "aggregations": [{"type": "count", "name": "c"},
+                              {"type": "longSum", "name": "s",
+                               "fieldName": "n"}]}
+    # distinct query ids keep the two runs from sharing one cached plan,
+    # whose second run would reuse the first one's shuffle output
+    status, before = _post(osrv, "/druid/v2",
+                           dict(query, context={"queryId": "before"}))
+    assert status == 200 and sum(r["result"]["s"] for r in before) == 10
+
+    status, out = _post(osrv, "/druid/indexer/v1/task", {
+        "type": "compact", "dataSource": "ov_compact_q"})
+    assert _await_task(osrv, out["task"])["statusCode"] == "SUCCESS"
+    status, after = _post(osrv, "/druid/v2",
+                          dict(query, context={"queryId": "after"}))
+    assert status == 200 and after == before
+
+
+def test_kill_task_over_whole_span_unregisters(osrv):
+    """A kill that drops every chunk leaves nothing to read: the task
+    succeeds and the datasource is no longer served."""
+    status, out = _post(osrv, "/druid/indexer/v1/task",
+                        _index_spec("ov_kill_all"))
+    assert _await_task(osrv, out["task"])["statusCode"] == "SUCCESS"
+    status, out = _post(osrv, "/druid/indexer/v1/task", {
+        "type": "kill", "dataSource": "ov_kill_all",
+        "interval": "2024-01-01/2025-01-01"})
+    assert _await_task(osrv, out["task"])["statusCode"] == "SUCCESS"
+    _, names = _get(osrv, "/druid/v2/datasources")
+    assert "ov_kill_all" not in names
+    # and there is nothing left to mark used again
+    status, _ = _post(osrv, "/druid/coordinator/v1/datasources/ov_kill_all",
+                      expect_error=True)
+    assert status == 404
+
+
 def test_noop_task_shutdown_cancels(osrv):
     status, out = _post(osrv, "/druid/indexer/v1/task",
                         {"type": "noop", "runTime": 30_000})

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from druid_spark import DruidSparkEngine
+from druid_spark.coordinator import drop_interval
 from druid_spark.ingest.sql_ingest import parse_ingest_sql
 
 
@@ -164,13 +165,36 @@ def test_drop_interval_retention(eng):
     eng.sql("REPLACE INTO ret_t OVERWRITE ALL SELECT __time, user, v "
             "FROM src PARTITIONED BY DAY")
     svc = eng.table_service()
-    dropped = svc.drop_interval(
-        "ret_t", "2024-01-02T00:00:00Z/2024-01-03T00:00:00Z")
+    dropped = drop_interval(
+        eng.catalog, "ret_t", "2024-01-02T00:00:00Z/2024-01-03T00:00:00Z")
     assert dropped == ["2024-01-02"]
     left = svc.table("ret_t").select(
         F.date_format("__time", "yyyy-MM-dd").alias("d")).distinct()
     assert sorted(r["d"] for r in left.collect()) == \
         ["2024-01-01", "2024-01-03"]
+
+
+def test_drop_interval_keeps_chunks_it_only_overlaps(eng):
+    """A kill interval drops only the chunks it contains: the
+    2024-01-02 DAY chunk starts inside 2024-01-01T12:00Z/2024-01-02T01:00Z
+    but ends after it, so its 3 rows stay."""
+    eng.sql("REPLACE INTO ret_p OVERWRITE ALL SELECT __time, user, v "
+            "FROM src PARTITIONED BY DAY")
+    dropped = drop_interval(
+        eng.catalog, "ret_p", "2024-01-01T12:00:00Z/2024-01-02T01:00:00Z")
+    assert dropped == []
+    assert eng.sql("SELECT COUNT(*) AS n FROM ret_p").first()["n"] == 9
+
+
+def test_week_table_segments_span_their_week(eng):
+    """sys.segments reports a WEEK table's chunk as its whole week:
+    the `__dt` value is the Monday and the end is 7 days later."""
+    eng.sql("REPLACE INTO wk_t OVERWRITE ALL SELECT __time, user, v "
+            "FROM src PARTITIONED BY WEEK")
+    rows = eng.sql('SELECT start, "end" FROM sys.segments '
+                   "WHERE datasource = 'wk_t'").collect()
+    assert {(r["start"], r["end"]) for r in rows} == {
+        ("2024-01-01T00:00:00.000Z", "2024-01-08T00:00:00.000Z")}
 
 
 def test_explain_insert_does_not_execute(spark, tmp_path):
