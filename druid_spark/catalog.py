@@ -8,6 +8,11 @@ dimension tables used for joins/lookups) are allowed — Spark has no
 mandatory-time constraint and queries that don't touch `__time` work
 fine.
 
+Each table is one `_Table` record in one immutable state (version,
+{name: record}). Every write replaces the state whole (Catalog._publish)
+and every read takes it in one attribute read, as a Druid publish swaps
+one VersionedIntervalTimeline.
+
 Lookups mirror processing/.../query/lookup/LookupExtractor.java:36 —
 small key→value maps broadcast to every node. Here: a dict registered
 by name; applied either as a map-literal expression (LOOKUP() function,
@@ -33,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from druid_spark.cache import LockedLRU
-from druid_spark.granularity import (CHUNK_FORMATS, chunk_interval,
+from druid_spark.granularity import (chunk_format, chunk_interval,
                                      strftime_format)
 
 # default time-column mapping for the driver's tables
@@ -42,9 +47,6 @@ DEFAULT_TIME_COLUMNS = {
     "orders": "o_orderdate",
     "lineitem": "l_shipdate",
 }
-
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
 # Pruned scans kept per (table, registration, file set or partition
 # range); re-registering a table drops its entries.
@@ -97,10 +99,14 @@ def _part_ranges(part, ranges) -> list[tuple[str | None, str | None]]:
         return (_EPOCH + us * _US).strftime(py_fmt)
 
     def bucket_start(us: int) -> int:
-        # a week's value is its Monday's date (1970-01-01 was a Thursday);
-        # formatting floors every other grain to its bucket
+        # a week's value is its Monday's date (1970-01-01 was a Thursday)
+        # and a quarter's its first day; formatting floors every other
+        # grain to its bucket
         if grain == "week":
             return us - (us // _DAY_US + 3) % 7 * _DAY_US
+        if grain == "quarter" and lo_ok <= us <= hi_ok:
+            t = _EPOCH + us * _US
+            return to_us(_dt.datetime(t.year, (t.month - 1) // 3 * 3 + 1, 1))
         return us
 
     return [(fmt_us(bucket_start(a)), fmt_us(b - 1)) for a, b in ranges]
@@ -189,19 +195,31 @@ def _footer_bounds(files, column, known, utc_session) -> tuple | None:
 
 
 class _Table(NamedTuple):
-    """A registered table: its DataFrame `df`, the serial `reg` of the
-    registration that made it and, for a path-backed table, its time
-    timeline — the files `df` reads (recorded once, with inputFiles(),
-    when it is built), each file's footer time bounds when known (see
-    _footer_bounds) and a reader giving `df` over a subset of the
-    files. Scans are cut from one _Table, so the files they pick, the
-    DataFrame they fall back to and the key they are cached under
-    always belong to the same registration."""
+    """A table's record: the serial `reg` of the registration that made
+    it, its DataFrame `df` (None until a path registration is read),
+    whether it is `used` (not dropped), source `path`, `time_column`,
+    partitioning `part` (set_partitioning), JSON hints and, once a
+    path-backed table is read, its time timeline — the files `df` reads
+    (recorded once, with inputFiles()), each file's footer time bounds
+    when known (see _footer_bounds) and a reader giving `df` over a
+    subset of the files. Scans are cut from one _Table, so everything
+    they use belongs to the same registration."""
     reg: int
-    df: DataFrame
+    df: DataFrame | None = None
+    path: str | None = None
+    time_column: str | None = None
+    part: tuple[str, str, str | None] | None = None
+    json: dict[str, str] | None = None
     files: tuple[str, ...] | None = None
     bounds: tuple | None = None
     read: Callable[[list[str]], DataFrame] | None = None
+    used: bool = True
+
+
+class _State(NamedTuple):
+    """What readers see; never mutated once published."""
+    version: int
+    tables: dict[str, _Table]
 
 
 # registration serials, unique across tables and catalogs
@@ -325,14 +343,9 @@ def _parquet_files(path: str):
 class Catalog:
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        # name -> its _Table, published whole: the segment timeline
-        # analog scan() and fingerprint() prune by
-        self._tables: dict[str, _Table] = {}
-        # name -> (path, time_column, registration serial): registered
-        # but not yet read
-        self._pending: dict[str, tuple[str, str | None, int]] = {}
-        # name -> column names stored as JSON text (COMPLEX<json>)
-        self._json_cols: dict[str, set[str]] = {}
+        # the segment timeline analog scan() and fingerprint() prune by
+        self._state = _State(0, {})
+        self._lock = threading.Lock()  # serializes writers
         # lookup registry by tier (LookupCoordinatorResource manages
         # {tier: {name: spec}}; `__default` is the reference's
         # LookupCoordinatorResource DEFAULT_TIER). Non-default tiers
@@ -341,30 +354,52 @@ class Catalog:
         # join datasources).
         self._lookup_tiers: dict[str, dict[str, dict]] = {
             "__default": {}}
-        # bumped on any registration; lets the SQL layer skip re-creating
-        # temp views when nothing changed (a py4j round trip per table
-        # per sql() call otherwise)
-        self.version = 0
-        self._paths: dict[str, str] = {}  # table -> source path (sys.segments)
-        # table -> (partition column, date_format pattern, segment
-        # granularity): lets scan() derive partition predicates from
-        # __time intervals (Catalyst cannot infer __dt from __time on
-        # its own)
-        self._partitioning: dict[str, tuple[str, str, str | None]] = {}
-        # table -> registration serial (a new one per register_table and
-        # drop_table call): the whole-table snapshot identity that
-        # result-cache keys name
-        self._reg_serial: dict[str, int] = {}
         self._scans = LockedLRU(SCAN_CACHE_ENTRIES, on_evict=self._retire)
         # SQL views over cached scans (scan_views): statements binding
         # now, and views of scans that left the cache, dropped when none is
         self._view_lock = threading.Lock()
         self._binding = 0
         self._retired: deque[str] = deque()
-        # dropped-but-restorable datasources: name -> (path,
-        # time_column, partitioning) — the metadata-store "unused
-        # segments" analog behind restore_table()
-        self._dropped: dict[str, tuple] = {}
+
+    @property
+    def version(self) -> int:
+        """Bumped by every write; plan keys name it."""
+        return self._state.version
+
+    @property
+    def _tables(self) -> dict[str, _Table]:
+        """Name → record, dropped tables included."""
+        return self._state.tables
+
+    def _publish(self, name: str | None = None,
+                 edit: Callable[[_Table | None], _Table] | None = None,
+                 bump: bool = True) -> tuple[_Table | None, _Table | None]:
+        """The step every write ends with: under the writers' lock, the
+        state becomes one where `name`'s record (the used one, or None)
+        is replaced by edit(record), with the next version if `bump`.
+        An edit returning its argument publishes nothing. Returns the
+        record before and after."""
+        with self._lock:
+            version, tables = self._state
+            old = tables.get(name)
+            old = new = old if old is not None and old.used else None
+            if edit is not None:
+                new = edit(old)
+                if new is old:
+                    return old, new
+                tables = {**tables, name: new}
+            self._state = _State(version + 1 if bump else version, tables)
+        if edit is not None:
+            self._scans.discard(lambda k: k[0] == name)
+            self._drop_retired()
+        return old, new
+
+    def _live(self, name: str) -> _Table:
+        t = self._state.tables.get(name)
+        if t is None or not t.used:
+            raise KeyError(f"unknown datasource {name!r}; "
+                           f"have {self.tables()}")
+        return t
 
     def set_partitioning(self, name: str, column: str, fmt: str,
                          granularity: str | None = None) -> None:
@@ -374,31 +409,41 @@ class Catalog:
         (WEEK shares the day format), so its ranges start a week early."""
         if granularity is None and fmt == "yyyy-MM-dd":
             granularity = "week"
-        self._partitioning[name] = (column, fmt, granularity)
+        self._live(name)  # KeyError if unknown
+        self._publish(name, lambda t: t and t._replace(
+            part=(column, fmt, granularity)))
 
     def partitioning(self, name: str) -> tuple[str, str, str | None] | None:
-        return self._partitioning.get(name)
+        t = self._state.tables.get(name)
+        return t.part if t and t.used else None
 
     def source_path(self, name: str) -> str | None:
-        return self._paths.get(name)
+        t = self._state.tables.get(name)
+        return t.path if t and t.used else None
+
+    def serials(self) -> dict[str, int]:
+        """Name → registration serial, from one state: the whole-table
+        snapshot identity result-cache keys name."""
+        return {n: t.reg for n, t in self._state.tables.items()}
+
+    def json_columns(self) -> dict[str, dict[str, str]]:
+        """Name → JSON-text column hints (column → DATA_TYPE)."""
+        return {n: t.json for n, t in self._state.tables.items()
+                if t.used and t.json}
 
     def fingerprint(self, name: str, ranges=None) -> str:
         """Identity of the data a query over `name` reads: the
         registration serial (a registered DataFrame is a fixed file
         snapshot), or, for a partitioned path-backed table, a hash of
         its registered files within the time `ranges`."""
-        # registrations publish the serial last (register_table): a
-        # table of a registration whose serial is not out yet is named
-        # by the older serial, never the reverse
-        reg = self._reg_serial.get(name, 0)
-        part = self._partitioning.get(name)
-        if ranges and part and _utc_session(self.spark):
-            t = self._table(name)
-            files = _overlapping(t, part, ranges) if t.reg == reg else None
+        t = self._state.tables.get(name) or _Table(0)
+        if ranges and t.used and t.part and _utc_session(self.spark):
+            t = self._read(name, t)
+            files = _overlapping(t, t.part, ranges)
             if files is not None:
                 return hashlib.blake2b("\n".join(files).encode(),
                                        digest_size=16).hexdigest()
-        return f"reg:{reg}"
+        return f"reg:{t.reg}"
 
     def scan(self, name: str, ranges=None) -> DataFrame:
         """`name`'s DataFrame cut down to the data that can meet the
@@ -411,24 +456,23 @@ class Catalog:
         table without a timeline, or whose files all overlap, is the
         registered DataFrame itself, as is every table outside a UTC
         session (_utc_session)."""
-        entry = self._pruned(name, ranges)
-        return self.table(name) if entry is None else entry.df
-
-    def _pruned(self, name: str, ranges) -> _Scan | None:
-        """The scan-cache entry of scan(name, ranges); None when that is
-        the registered DataFrame."""
         t = self._table(name)
+        entry = self._pruned(name, t, ranges)
+        return t.df if entry is None else entry.df
+
+    def _pruned(self, name: str, t: _Table, ranges) -> _Scan | None:
+        """The scan-cache entry of scanning record `t` of `name` over
+        `ranges`; None when that is the registered DataFrame."""
         if ranges is None or not _utc_session(self.spark):
             return None
         ranges = [(a, b) for a, b in ranges if a < b]
-        part = self._partitioning.get(name)
-        if part and part[0] in t.df.columns:
-            pr = _part_ranges(part, ranges)
+        if t.part and t.part[0] in t.df.columns:
+            pr = _part_ranges(t.part, ranges)
             if (None, None) in pr:
                 return None  # an unbounded range covers every partition
             return self._scans.get_or_build(
                 (name, t.reg, tuple(pr)),
-                lambda: _Scan(t.df.where(_part_predicate(part[0], pr))))
+                lambda: _Scan(t.df.where(_part_predicate(t.part[0], pr))))
         files = _overlapping(t, None, ranges)
         if files is None or len(files) == len(t.files):
             return None
@@ -460,7 +504,7 @@ class Catalog:
             self._drop_retired()
 
     def _bind(self, name: str, ranges) -> str | None:
-        entry = self._pruned(name, ranges)
+        entry = self._pruned(name, self._table(name), ranges)
         if entry is None:
             return None
         with self._view_lock:
@@ -484,19 +528,28 @@ class Catalog:
             while self._binding == 0 and self._retired:
                 self.spark.catalog.dropTempView(self._retired.popleft())
 
-    def _with_timeline(self, name: str, reg: int, df: DataFrame,
-                       column: str | None,
-                       read: Callable[[list[str]], DataFrame]) -> _Table:
-        # the table's previous registration (kept until the new one is
-        # published) lends the footer bounds of files it already read
-        old = self._tables.get(name)
+    def _with_timeline(self, name: str, t: _Table,
+                       raw: DataFrame) -> _Table:
+        """Path-backed record `t` with `raw`, a read of t.path, as its
+        DataFrame, and its time timeline. Only a bare Parquet read can
+        be re-read file by file or have its nanos fixed from the file."""
+        bare = raw._jdf.queryExecution().analyzed() \
+            .getClass().getSimpleName() == "LogicalRelation"
+        nanos_path = t.path if bare else None
+        df = _normalize(raw, t.time_column, nanos_path)
+        # the current record lends the footer bounds it already read
+        old = self._state.tables.get(name)
         known = (dict(zip(old.files, old.bounds))
                  if old is not None and old.bounds else {})
         files = tuple(sorted(df.inputFiles()))
-        return _Table(
-            reg, df, files,
-            _footer_bounds(files, column, known, _utc_session(self.spark)),
-            read)
+        column = _time_source(raw.columns, df, t.time_column) if bare else None
+        return t._replace(
+            df=df, files=files,
+            bounds=_footer_bounds(files, column, known,
+                                  _utc_session(self.spark)),
+            read=lambda fs: _normalize(
+                self.spark.read.schema(raw.schema).parquet(*fs),
+                t.time_column, nanos_path))
 
     def register_dir(self, data_dir: str,
                      time_columns: dict[str, str] | None = None) -> None:
@@ -513,81 +566,51 @@ class Catalog:
                        time_column: str | None = None,
                        source_path: str | None = None,
                        json_columns: list[str] | None = None) -> None:
+        """Register `source` as `name`, keeping its partitioning. A path
+        is read on first use: reading a whole directory's tables costs
+        ~3-4 s of engine init for tables a query may never touch."""
         # COMPLEX<json> columns are stored as JSON text (our nested-
         # data convention); the hint lets INFORMATION_SCHEMA report
         # the Druid-visible type (InformationSchema.java DATA_TYPE).
         # A dict maps column -> DATA_TYPE ('COMPLEX<json>' or 'ARRAY'
         # for variant-element arrays); a list means COMPLEX<json>.
-        if json_columns is not None:
-            self._json_cols[name] = (
-                dict(json_columns) if isinstance(json_columns, dict)
-                else {c: "COMPLEX<json>" for c in json_columns})
-        else:
-            self._json_cols.pop(name, None)
-        reg = next(_REG_SERIALS)
+        hints = None if json_columns is None else (
+            dict(json_columns) if isinstance(json_columns, dict)
+            else dict.fromkeys(json_columns, "COMPLEX<json>"))
+        t = _Table(next(_REG_SERIALS), time_column=time_column, json=hints)
         if isinstance(source, str):
-            # Lazy: defer the parquet read (schema/footer fetch + nanos/
-            # NTZ normalization) until first access. Registering a whole
-            # directory costs 10 py4j scan plans otherwise — ~3-4 s of
-            # engine init for tables a query may never touch. (The old
-            # _Table stays until _materialize, which reuses its footer
-            # bounds; table() reads a pending registration first.)
-            self._pending[name] = (source, time_column, reg)
-            self._paths[name] = source
+            t = t._replace(path=source)
+        elif source_path:
+            t = self._with_timeline(name, t._replace(path=source_path),
+                                    source)
         else:
-            df = _normalize(source, time_column)
-            if source_path:
-                # only a bare Parquet read can be re-read file by file
-                bare = source._jdf.queryExecution().analyzed() \
-                    .getClass().getSimpleName() == "LogicalRelation"
-                schema = source.schema
-                t = self._with_timeline(
-                    name, reg, df,
-                    _time_source(source.columns, df, time_column) if bare
-                    else None,
-                    lambda fs: _normalize(
-                        self.spark.read.schema(schema).parquet(*fs),
-                        time_column))
-                self._paths[name] = source_path
-            else:
-                t = _Table(reg, df)
-            self._pending.pop(name, None)
-            self._tables[name] = t
-        # Publish the whole _Table (DataFrame, timeline and the `reg`
-        # scan keys name) BEFORE the version plan keys name, and that
-        # before the serial result keys name; readers take them in the
-        # reverse order, so a reader that sees a new key also gets the
-        # new data.
-        self.version += 1
-        self._reg_serial[name] = reg
-        self._scans.discard(lambda k: k[0] == name)
-        self._drop_retired()
+            t = t._replace(df=_normalize(source, time_column))
+        self._publish(name, lambda old: t._replace(part=old and old.part))
 
     def commit(self, name: str, path: str,
                granularity: str | None = None) -> None:
         """Publish the warehouse directory `path` as table `name`: the
         step every writer ends with, as Druid's all publish through
         SegmentTransactionalInsertAction. `path` is read again and
-        registered, partitioned by the segment `granularity`'s chunks
-        (None keeps the registered partitioning; ALL, or a grain outside
-        CHUNK_FORMATS, clears it). With no Parquet file left the table
-        is unregistered (drop_table)."""
+        published in one step with its partitioning: the `__dt` chunks
+        of the segment `granularity` (chunk_format; ALL has none), or,
+        for None, the table's registered partitioning. With no Parquet
+        file left the table is unregistered (drop_table)."""
         if next(_parquet_files(path), None) is None:
             self.drop_table(name)
             return
-        self.register_table(name, self.spark.read.parquet(path),
-                            source_path=path)
-        if granularity is not None:
-            g = granularity.lower()
-            if g in CHUNK_FORMATS:
-                self.set_partitioning(name, "__dt", CHUNK_FORMATS[g], g)
-            else:
-                self._partitioning.pop(name, None)
+        t = self._with_timeline(
+            name, _Table(next(_REG_SERIALS), path=path),
+            self.spark.read.parquet(path))
+        fmt = granularity and chunk_format(granularity)
+        part = ("__dt", fmt, granularity.lower()) if fmt else None
+        self._publish(name, lambda old: t._replace(
+            part=old and old.part if granularity is None else part))
 
     def register_lookup(self, name: str, mapping: dict[str, Any],
                         tier: str = "__default") -> None:
         self._lookup_tiers.setdefault(tier, {})[name] = mapping
-        self.version += 1
+        self._publish()
 
     def drop_lookup(self, name: str, tier: str = "__default") -> bool:
         d = self._lookup_tiers.get(tier, {})
@@ -595,7 +618,7 @@ class Catalog:
             del d[name]
             if not d and tier != "__default":
                 del self._lookup_tiers[tier]
-            self.version += 1
+            self._publish()
             return True
         return False
 
@@ -606,48 +629,39 @@ class Catalog:
         """Lookup name → mapping for one tier; None if no such tier."""
         return self._lookup_tiers.get(tier)
 
-    def _materialize(self, name: str) -> _Table:
-        # read + normalize BEFORE popping _pending: if the read raises
-        # (bad/missing path) the registration must survive so the next
-        # table() call re-raises the real error instead of a misleading
-        # "unknown datasource".
-        pending = self._pending[name]
-        path, time_column, reg = pending
-        raw = self.spark.read.parquet(path)
-        df = _normalize(raw, time_column, path)
-        t = self._tables[name] = self._with_timeline(
-            name, reg, df, _time_source(raw.columns, df, time_column),
-            lambda fs: _normalize(
-                self.spark.read.schema(raw.schema).parquet(*fs),
-                time_column, path))
-        if self._pending.get(name) == pending:  # not registered anew
-            self._pending.pop(name, None)
-        return t
+    def _read(self, name: str, t: _Table) -> _Table:
+        """Record `t` of `name`, read if it was not. The read replaces
+        `t` only while the table holds that registration (whose
+        partitioning may have changed). A read that raises publishes
+        nothing: the next table() call re-raises the real error."""
+        if t.df is not None:
+            return t
+        read = self._with_timeline(name, t, self.spark.read.parquet(t.path))
+        _old, new = self._publish(
+            name, lambda cur: read._replace(part=cur.part)
+            if cur and cur.reg == t.reg and cur.df is None else cur,
+            bump=False)
+        return new if new and new.reg == t.reg else read
 
     def schema(self, name: str):
         """Schema WITHOUT materializing a lazily-registered table: a
-        pending path gets a footer-only read whose DataFrame is
+        path not read yet gets a footer-only read whose DataFrame is
         discarded, so the deferred registration (and its error
         surface on table()) stays intact."""
-        if name not in self._pending:
-            return self._tables[name].df.schema
-        path, time_column, _reg = self._pending[name]
-        sch = self.spark.read.parquet(path).schema
-        if (time_column and time_column in sch.fieldNames()
+        t = self._live(name)
+        if t.df is not None:
+            return t.df.schema
+        sch = self.spark.read.parquet(t.path).schema
+        if (t.time_column and t.time_column in sch.fieldNames()
                 and "__time" not in sch.fieldNames()):
-            sch = sch.add("__time", sch[time_column].dataType)
+            sch = sch.add("__time", sch[t.time_column].dataType)
         return sch
 
     def table(self, name: str) -> DataFrame:
         return self._table(name).df
 
     def _table(self, name: str) -> _Table:
-        if name in self._pending:
-            return self._materialize(name)
-        if name not in self._tables:
-            raise KeyError(f"unknown datasource {name!r}; "
-                           f"have {self.tables()}")
-        return self._tables[name]
+        return self._read(name, self._live(name))
 
     def lookup(self, name: str) -> dict:
         return self.lookups[name]
@@ -669,7 +683,7 @@ class Catalog:
         return out
 
     def tables(self) -> list[str]:
-        return sorted(set(self._tables) | set(self._pending))
+        return sorted(n for n, t in self._state.tables.items() if t.used)
 
     def drop_table(self, name: str) -> bool:
         """Unregister a datasource (DatasourcesResource.java
@@ -677,54 +691,36 @@ class Catalog:
         the table stops resolving; files on disk are untouched —
         reclaiming space is the kill task's job). Returns False if the
         name was unknown."""
-        known = name in self._tables or name in self._pending
-        # Remember enough to re-enable the datasource later (the
-        # reference keeps unused segments in the metadata store;
-        # markAsUsed* brings them back — DataSourcesResource.java:206).
-        # Only path-backed tables can be restored (a DataFrame
-        # registration has no durable source).
-        if known and name in self._paths:
-            tc = (self._pending.get(name) or (None, None))[1]
-            self._dropped[name] = (self._paths[name], tc,
-                                   self._partitioning.get(name))
-        self._tables.pop(name, None)
-        self._pending.pop(name, None)
-        self._paths.pop(name, None)
-        self._partitioning.pop(name, None)
-        self._scans.discard(lambda k: k[0] == name)
-        self._drop_retired()
-        if known:
-            self.version += 1
-            self._reg_serial[name] = next(_REG_SERIALS)
-            # Also drop the SQL temp views engine.sql created for this
-            # name (both the direct view and the mangled alias for
-            # non-identifier names) — the view-refresh path only
-            # createOrReplace's views for CURRENT tables, so without
-            # this the dropped datasource keeps resolving in SQL via
-            # the stale view, contradicting markAsUnused semantics.
-            for view in (f"`{name.replace('`', '')}`",
-                         "__ds_" + re.sub(r"\W", "_", name)):
-                try:
-                    self.spark.sql(f"DROP VIEW IF EXISTS {view}")
-                except Exception:
-                    pass
-        return known
+        # The dropped record is what restore_table re-enables, as the
+        # reference keeps unused segments in the metadata store.
+        old, new = self._publish(name, lambda t: t and t._replace(
+            reg=next(_REG_SERIALS), used=False))
+        if new is old:
+            return False
+        # Also drop the SQL temp views engine.sql created for this name
+        # (the direct view and the mangled alias): the view refresh only
+        # replaces views of current tables, so the dropped datasource
+        # would keep resolving in SQL.
+        for view in (f"`{name.replace('`', '')}`",
+                     "__ds_" + re.sub(r"\W", "_", name)):
+            with contextlib.suppress(Exception):
+                self.spark.sql(f"DROP VIEW IF EXISTS {view}")
+        return True
 
     def restore_table(self, name: str) -> bool:
         """Re-enable a dropped path-backed datasource —
         markAsUsedAllNonOvershadowedSegments analog
-        (DataSourcesResource.java:206): re-registers from the
-        remembered source path. False when nothing restorable."""
-        info = self._dropped.pop(name, None)
-        if info is None or name in self._tables or name in self._pending:
-            return False
-        path, time_column, part = info
-        if next(_parquet_files(path), None) is None:
-            return False  # killed on disk in the meantime
-        self.register_table(name, path, time_column=time_column)
-        if part:
-            self._partitioning[name] = part
-        return True
+        (DataSourcesResource.java:206): re-registers the remembered
+        source path, time column and partitioning. False when nothing
+        is restorable or the name was registered anew."""
+        t = self._state.tables.get(name)
+        if (t is None or t.used or t.path is None
+                or next(_parquet_files(t.path), None) is None):
+            return False  # nothing to restore, or killed on disk
+        old, new = self._publish(name, lambda cur: cur or _Table(
+            next(_REG_SERIALS), path=t.path, time_column=t.time_column,
+            part=t.part))
+        return new is not old
 
     def segments(self) -> list[tuple]:
         """(datasource, segment path, size bytes, num rows) per parquet
@@ -732,7 +728,9 @@ class Catalog:
         come from parquet footers (no data scan)."""
         import pyarrow.parquet as pq
         out = []
-        for name, path in sorted(self._paths.items()):
+        for name, path in sorted((n, t.path) for n, t in
+                                 self._state.tables.items()
+                                 if t.used and t.path):
             for f in sorted(_parquet_files(path)):
                 try:
                     rows = pq.read_metadata(f).num_rows
@@ -753,7 +751,7 @@ class Catalog:
         out = []
         part_counter: dict[tuple, int] = {}
         for name, f, size, rows in self.segments():
-            col, fmt, grain = (self._partitioning.get(name)
+            col, fmt, grain = (self.partitioning(name)
                                or ("__dt", None, None))
             m = re.search(f"/{re.escape(col)}=([^/]+)/", f)
             start = end = None

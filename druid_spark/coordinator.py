@@ -27,22 +27,8 @@ import time
 import uuid
 from typing import Any, Callable
 
-from druid_spark.granularity import chunk_interval, parse_iso_interval
-
-
-def _parse_period(p: str) -> "dt.timedelta":
-    """ISO-8601 period → timedelta (calendar months/years approximated
-    as 30/365 days, matching the retention use where periods bound a
-    horizon, not a calendar arithmetic result)."""
-    import re as _re
-    m = _re.fullmatch(
-        r"P(?:(\d+)Y)?(?:(\d+)M)?(?:(\d+)W)?(?:(\d+)D)?"
-        r"(?:T(?:(\d+)H)?(?:(\d+)M)?(?:(\d+)S)?)?", p or "")
-    if not m or not any(m.groups()):
-        raise ValueError(f"bad ISO period {p!r}")
-    y, mo, w, d, h, mi, s = (int(g or 0) for g in m.groups())
-    return dt.timedelta(days=y * 365 + mo * 30 + w * 7 + d,
-                        hours=h, minutes=mi, seconds=s)
+from druid_spark.granularity import (add_period, chunk_interval,
+                                     parse_iso_interval)
 
 
 def _iso_interval(iv: str) -> tuple[dt.datetime, dt.datetime]:
@@ -178,7 +164,7 @@ class RetentionDuty:
             if t == "dropForever":
                 return "drop"
             if t == "loadByPeriod":
-                horizon = now - _parse_period(r["period"])
+                horizon = add_period(now, r["period"], -1)
                 if r.get("includeFuture", True):
                     # Rules.eligibleForLoad includeFuture arm:
                     # currInterval.start < interval.end
@@ -187,7 +173,7 @@ class RetentionDuty:
                 elif end > horizon and start < now:
                     return "load"  # overlap with [now-P, now]
             elif t == "dropByPeriod":
-                horizon = now - _parse_period(r["period"])
+                horizon = add_period(now, r["period"], -1)
                 if r.get("includeFuture", True):
                     # PeriodDropRule:77-78: currInterval.start <=
                     # theInterval.start
@@ -197,7 +183,7 @@ class RetentionDuty:
                     return "drop"  # full containment in [now-P, now]
             elif t == "dropBeforeByPeriod":
                 # PeriodDropBeforeRule:63-64: end <= now - P
-                if end <= now - _parse_period(r["period"]):
+                if end <= add_period(now, r["period"], -1):
                     return "drop"
             elif t in ("loadByInterval", "dropByInterval"):
                 ia, ib = _iso_interval(r["interval"])
@@ -212,7 +198,8 @@ class RetentionDuty:
         """One rule pass: drop every partition whose first matching
         rule is a drop rule (drop_chunks commits each touched table);
         record kill tasks in sys.tasks."""
-        now = self._now or dt.datetime.now()
+        now = self._now or dt.datetime.now(dt.timezone.utc).replace(
+            tzinfo=None)
         dropped = []
         cat = self.engine.catalog
         with self._lock:

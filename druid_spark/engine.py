@@ -291,9 +291,9 @@ class DruidSparkEngine:
                 fp = self._tables_fingerprint(q)
             except Exception:
                 use_cache = False  # unfingerprintable → serve uncached
-        # the version is read AFTER the fingerprint (and a registration
-        # bumps it before the fingerprint changes): a result key never
-        # names newer files than the plan reads
+        # the version is read AFTER the fingerprint (a registration
+        # publishes both at once): a result key never names newer files
+        # than the plan reads
         plan_key = f"native||cv={self.catalog.version}||{canon}"
 
         def plan() -> DataFrame:
@@ -525,10 +525,10 @@ class DruidSparkEngine:
             register_druid_functions(self.spark)
             self._fns_registered = True
         self._register_sql_lookups()
-        # Key on registration serials read BEFORE the views refresh (a
-        # registration bumps the version first): a racing registration
-        # then gives an older key newer data, never the reverse.
-        serials = (dict(self.catalog._reg_serial)
+        # Key on registration serials read BEFORE the views refresh: a
+        # racing registration then gives an older key newer data, never
+        # the reverse.
+        serials = (self.catalog.serials()
                    if set_ctx.get("useResultCache", "").lower() == "true"
                    else None)
         # Re-create temp views only when the catalog changed OR another
@@ -573,12 +573,12 @@ class DruidSparkEngine:
             self.catalog.tables(), text) if rt == "DATASOURCE"}
         scalar_cols, array_cols, array_elem, scalar_types = \
             self._scalar_array_cols(ref_tables or None)
-        # the _json_cols-derived hint sets scope to the query's
+        # the json_columns()-derived hint sets scope to the query's
         # referenced tables the same way _scalar_array_cols does — an
         # unrelated table's same-named MVD/COMPLEX column must not
         # drive the MVD explode or COMPLEX rejection rewrites for a
         # scalar column of the referenced table
-        _jc_by_table = self.catalog._json_cols
+        _jc_by_table = self.catalog.json_columns()
         _known = set(self.catalog.tables())
         if ref_tables and ref_tables & _known:
             _jc_by_table = {t: cols for t, cols in _jc_by_table.items()
@@ -952,9 +952,10 @@ class DruidSparkEngine:
                           else s.upper())
 
         rows_t, rows_c = [], []
+        hints = self.catalog.json_columns()
         for t in self.catalog.tables():
             df = self.catalog.table(t)
-            jc = self.catalog._json_cols.get(t, {})
+            jc = hints.get(t, {})
             rows_t.append(("druid", "druid", t, "TABLE"))
             for i, f in enumerate(df.schema.fields):
                 rows_c.append(("druid", "druid", t, f.name, i + 1,

@@ -66,12 +66,19 @@ _PERIOD_RE = re.compile(
 )
 
 
+def _period_fields(period: str) -> tuple[float, ...]:
+    """(years, months, weeks, days, hours, minutes, seconds) of an
+    ISO-8601 period; ValueError unless `period` is one naming at least
+    one field."""
+    m = _PERIOD_RE.match(period) if isinstance(period, str) else None
+    if not m or not any(m.groups()):
+        raise ValueError(f"bad ISO period: {period!r}")
+    return tuple(float(g) if g else 0.0 for g in m.groups())
+
+
 def period_to_millis(period: str) -> int:
     """Fixed-width millis for a period with no variable-length units."""
-    m = _PERIOD_RE.match(period)
-    if not m:
-        raise ValueError(f"bad ISO period: {period}")
-    y, mo, w, d, h, mi, s = (float(g) if g else 0.0 for g in m.groups())
+    y, mo, w, d, h, mi, s = _period_fields(period)
     if y or mo:
         raise ValueError(f"variable-length period needs calendar bucketing: {period}")
     return int(((w * 7 + d) * 24 * 3600 + h * 3600 + mi * 60 + s) * 1000)
@@ -101,10 +108,7 @@ def add_period(t: "datetime.datetime", period: str,
     day-of-month, e.g. Jan 31 + P1M = Feb 28/29)."""
     import calendar
     import datetime as dt
-    m = _PERIOD_RE.match(period)
-    if not m:
-        raise ValueError(f"bad ISO period: {period}")
-    y, mo, w, d, h, mi, s = (float(g) if g else 0.0 for g in m.groups())
+    y, mo, w, d, h, mi, s = _period_fields(period)
     months = sign * int(y * 12 + mo)
     if months:
         total = t.year * 12 + (t.month - 1) + months
@@ -117,8 +121,9 @@ def add_period(t: "datetime.datetime", period: str,
 
 def chunk_format(granularity: str) -> str | None:
     """The `__dt` pattern a table of segment `granularity` is written
-    with; None for ALL (unpartitioned). Grains outside CHUNK_FORMATS
-    write day values that Catalog.commit does not register."""
+    with; None for ALL (unpartitioned). A grain outside CHUNK_FORMATS
+    writes day values: a finer grain's chunk is its day, a QUARTER's
+    value is its first day (chunk_interval)."""
     g = granularity.lower()
     return None if g == "all" else CHUNK_FORMATS.get(g, "yyyy-MM-dd")
 
@@ -134,23 +139,17 @@ def chunk_interval(value: str, fmt: str | None = None,
                    ) -> tuple["datetime.datetime", "datetime.datetime"]:
     """[start, end) of the time chunk whose `__dt` value is `value`,
     under a table's registered (`fmt`, `granularity`): a WEEK value is
-    its Monday, any other spans its pattern's unit. With no `fmt`, the
-    CHUNK_FORMATS pattern of the value's length. ValueError if the
-    value does not parse."""
+    its Monday and a QUARTER value its first day, any other spans its
+    pattern's unit. With no `fmt`, the CHUNK_FORMATS pattern of the
+    value's length. ValueError if the value does not parse."""
     import datetime as dt
     if fmt is None:
         fmt = next((f for f in CHUNK_FORMATS.values()
                     if len(f) == len(value)), "")
     start = dt.datetime.strptime(value, strftime_format(fmt))
-    if fmt.endswith("HH"):
-        end = start + dt.timedelta(hours=1)
-    elif fmt.endswith("dd"):
-        end = start + dt.timedelta(days=7 if granularity == "week" else 1)
-    elif fmt.endswith("MM"):
-        end = (start.replace(day=28) + dt.timedelta(days=4)).replace(day=1)
-    else:
-        end = start.replace(year=start.year + 1)
-    return start, end
+    unit = {"HH": "PT1H", "dd": "P1D", "MM": "P1M"}.get(fmt[-2:], "P1Y")
+    span = {"week": "P1W", "quarter": "P3M"}.get(granularity, unit)
+    return start, add_period(start, span)
 
 
 def parse_iso_interval(iv: str) -> tuple[str, str]:

@@ -22,8 +22,11 @@ matching the reference's fail-fast contract.
 
 from __future__ import annotations
 
+import datetime as dt
 import threading
 from typing import Any, Callable
+
+from druid_spark.granularity import add_period, period_to_millis
 
 __all__ = [
     "QueryCapacityExceededError",
@@ -215,15 +218,17 @@ class ThresholdPrioritization:
         if not period_threshold and not duration_threshold:
             raise ValueError("periodThreshold or durationThreshold "
                              "must be set")
-        from druid_spark.coordinator import _parse_period
-        self._period = (_parse_period(period_threshold)
-                        if period_threshold else None)
-        self._duration = (_parse_period(duration_threshold)
-                          if duration_threshold else None)
+        if period_threshold:  # ValueError if malformed
+            add_period(dt.datetime(2000, 1, 1), period_threshold)
+        self._period = period_threshold or None
+        # a duration has no calendar units (Joda's
+        # Period.toStandardDuration refuses months and years)
+        self._duration = (
+            dt.timedelta(milliseconds=period_to_millis(duration_threshold))
+            if duration_threshold else None)
         self.adjustment = adjustment
 
     def _intervals(self, q: dict):
-        import datetime as dt
         out = []
         for iv in q.get("intervals") or []:
             try:
@@ -242,13 +247,12 @@ class ThresholdPrioritization:
         """Adjusted priority, or None when no threshold is violated
         (the reference returns Optional.empty() → context priority
         stands)."""
-        import datetime as dt
         now = now or dt.datetime.now(dt.timezone.utc).replace(
             tzinfo=None)
         ivs = self._intervals(q)
         violates = False
         if self._period is not None and ivs:
-            horizon = now - self._period
+            horizon = add_period(now, self._period, -1)
             violates |= any(a < horizon for a, _b in ivs)
         if self._duration is not None and ivs:
             total = sum(((b - a) for a, b in ivs),

@@ -41,14 +41,14 @@ def test_array_slice_null_array_is_null(engine):
 def test_scalar_scan_keeps_pending_and_survives_bad_table(engine, tmp_path):
     import os
     cat = engine.catalog
-    # footer-only schema read leaves a lazy registration pending
+    # footer-only schema read leaves a lazy registration unread
     from tests.conftest import SF_DIR
     cat.register_table("__lazy_ok", os.path.join(SF_DIR, "region.parquet"),
                        time_column=None)
     try:
-        assert "__lazy_ok" in cat._pending
+        assert cat._tables["__lazy_ok"].df is None
         assert "r_name" in cat.schema("__lazy_ok").fieldNames()
-        assert "__lazy_ok" in cat._pending, \
+        assert cat._tables["__lazy_ok"].df is None, \
             "schema() must not materialize a pending table"
     finally:
         cat.drop_table("__lazy_ok")
@@ -57,12 +57,12 @@ def test_scalar_scan_keeps_pending_and_survives_bad_table(engine, tmp_path):
     cat.register_table("__bad_reg", str(tmp_path / "nope_missing"),
                        time_column=None)
     try:
-        assert "__bad_reg" in cat._pending
+        assert cat._tables["__bad_reg"].df is None
         rows = engine.sql("SELECT MV_LENGTH('x') AS x").collect()
         # auto-wrap still works: scalar 'x' literal wraps to ['x']
         assert rows[0]["x"] == 1
         # the bad registration survives (its error surfaces on direct use)
-        assert "__bad_reg" in cat._pending
+        assert cat._tables["__bad_reg"].df is None
         with pytest.raises(Exception, match="nope_missing"):
             cat.table("__bad_reg").collect()
     finally:

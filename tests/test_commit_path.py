@@ -2,7 +2,9 @@
 parse `druid_spark/` without running it: outside catalog.py no module
 sets a table's partitioning itself, or registers a fresh
 `spark.read.parquet(...)` of a written directory, which is commit's
-job."""
+job; and none reads a private attribute of the catalog, whose state
+only its own methods may take apart.
+"""
 
 import ast
 import os
@@ -69,3 +71,40 @@ def test_guard_sees_both_forms():
         "cat.set_partitioning('t', '__dt', 'yyyy')\n")
     assert [v.split(" ", 1)[0] for v in _violations("m.py", tree)] == [
         "m.py:2", "m.py:3", "m.py:5"]
+
+
+def _private_reads(rel: str, tree) -> list[str]:
+    """Reads of `<catalog>._name`, where `<catalog>` is a name
+    `catalog`, an attribute `.catalog` or a name bound to either."""
+    def is_catalog(node) -> bool:
+        return (isinstance(node, ast.Name) and node.id == "catalog"
+                or isinstance(node, ast.Attribute) and node.attr == "catalog")
+    aliases = {t.id for node in ast.walk(tree)
+               if isinstance(node, ast.Assign) and is_catalog(node.value)
+               for t in node.targets if isinstance(t, ast.Name)}
+    return sorted(
+        (node.lineno, f"{rel}:{node.lineno} reads catalog.{node.attr}")
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute) and node.attr.startswith("_")
+        and not node.attr.startswith("__")
+        and (is_catalog(node.value) or isinstance(node.value, ast.Name)
+             and node.value.id in aliases))
+
+
+def test_only_catalog_reads_its_private_state():
+    found = [v for rel, tree in _modules() if rel != "catalog.py"
+             for _line, v in _private_reads(rel, tree)]
+    assert found == []
+
+
+def test_private_read_guard_sees_each_form():
+    tree = ast.parse(
+        "a = self.catalog._reg_serial\n"
+        "b = catalog._json_cols.get(t, {})\n"
+        "cat = self.engine.catalog\n"
+        "c = cat._tables\n"
+        "d = self.catalog.tables()\n"
+        "e = self._cache\n"
+        "f = catalog.__class__\n")
+    assert [v.split(" ", 1)[0] for _line, v in _private_reads("m.py", tree)
+            ] == ["m.py:1", "m.py:2", "m.py:4"]
