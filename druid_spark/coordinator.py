@@ -8,7 +8,9 @@ Spark analog: scan a warehouse table's time-partition directories via
 parquet footers (no data read), and rewrite only the partitions whose
 file count exceeds the per-datasource config. The overlord's compact
 and kill tasks share these steps (compact_table, drop_interval); each
-ends in Catalog.commit.
+ends in Catalog.commit. Both duties run on one loop (_Duty), and each
+compaction or retention kill they do is a task of the engine's task
+registry (druid_spark.tasks), where sys.tasks reads it.
 
 The rewrite targets one partition directory at a time, staging into a
 dot-prefixed temp dir inside the warehouse (ignored by Spark's
@@ -23,7 +25,6 @@ import datetime as dt
 import os
 import shutil
 import threading
-import time
 import uuid
 from typing import Any, Callable
 
@@ -118,7 +119,44 @@ def compact_table(catalog, ds: str, target: int) -> None:
     catalog.commit(ds, path)
 
 
-class RetentionDuty:
+class _Duty:
+    """A coordinator duty: `run_once` is one cycle, `start` runs it on
+    a daemon thread every `period` seconds until `stop`."""
+
+    PERIOD = 60.0
+
+    def __init__(self, engine):
+        self.engine = engine
+        self._stop = threading.Event()
+        self._thread: threading.Thread | None = None
+        self._lock = threading.Lock()
+
+    def start(self, period: float | None = None):
+        if self._thread is not None and self._thread.is_alive():
+            return self
+        self._stop.clear()
+        period = self.PERIOD if period is None else period
+
+        def loop():
+            while not self._stop.wait(period):
+                try:
+                    self.run_once()
+                except Exception:
+                    pass  # next cycle retries
+
+        self._thread = threading.Thread(
+            target=loop, daemon=True, name=type(self).__name__)
+        self._thread.start()
+        return self
+
+    def stop(self) -> None:
+        self._stop.set()
+        if self._thread is not None:
+            self._thread.join(timeout=5)
+            self._thread = None
+
+
+class RetentionDuty(_Duty):
     """Retention / load-drop rules duty — the coordinator's rule engine
     (server/.../server/coordinator/rules/: LoadRule, DropRule,
     PeriodLoadRule, PeriodDropBeforeRule, RunRules duty; RulesResource
@@ -134,14 +172,12 @@ class RetentionDuty:
     dropBeforeByPeriod {"period"} (drop partitions older than now-P),
     loadByInterval / dropByInterval {"interval": "A/B"}."""
 
+    PERIOD = 300.0
+
     def __init__(self, engine, now=None):
-        self.engine = engine
+        super().__init__(engine)
         self.rules: dict[str, list[dict[str, Any]]] = {}
-        self.history: list[dict[str, Any]] = []
         self._now = now  # fixed clock for tests; None = wall clock
-        self._stop = threading.Event()
-        self._thread: threading.Thread | None = None
-        self._lock = threading.Lock()
 
     def set_rules(self, datasource: str, rules: list[dict]) -> None:
         self.rules[datasource] = list(rules)
@@ -212,37 +248,12 @@ class RetentionDuty:
                     tid = (f"kill_{ds}_{d.split('=', 1)[1]}_"
                            f"{uuid.uuid4().hex[:6]}")
                     self.engine.record_task(tid, "kill", ds, "SUCCESS")
-                    rec = {"dataSource": ds, "partition": d,
-                           "start": start.isoformat()}
-                    dropped.append(rec)
-                    self.history.append(rec)
+                    dropped.append({"dataSource": ds, "partition": d,
+                                    "start": start.isoformat()})
         return dropped
 
-    def start(self, period: float = 300.0) -> "RetentionDuty":
-        if self._thread is not None and self._thread.is_alive():
-            return self
-        self._stop.clear()
 
-        def loop():
-            while not self._stop.wait(period):
-                try:
-                    self.run_once()
-                except Exception:
-                    pass
-
-        self._thread = threading.Thread(
-            target=loop, daemon=True, name="retention-duty")
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-class CompactionDuty:
+class CompactionDuty(_Duty):
     """Auto-compaction duty over an engine's warehouse tables.
 
         duty = CompactionDuty(engine)
@@ -252,13 +263,10 @@ class CompactionDuty:
     """
 
     def __init__(self, engine):
-        self.engine = engine
+        super().__init__(engine)
         # ds -> {"maxFilesPerPartition": int, "targetFiles": int}
         self.configs: dict[str, dict[str, Any]] = {}
         self.history: list[dict[str, Any]] = []
-        self._stop = threading.Event()
-        self._thread: threading.Thread | None = None
-        self._lock = threading.Lock()
 
     # ------------------------------------------------------------ config
     def set_config(self, datasource: str,
@@ -291,59 +299,28 @@ class CompactionDuty:
 
     # ----------------------------------------------------------- compact
     def run_once(self) -> list[dict[str, Any]]:
-        """One duty cycle: compact every fragmented partition found.
+        """One duty cycle: compact every fragmented partition found,
+        each as one compact task of the engine's task registry.
         Commits touched datasources so queries see the new file listing
-        (a registered DataFrame pins its file index); records each
-        compaction as a sys.tasks row."""
+        (a registered DataFrame pins its file index)."""
         with self._lock:
             work = self.scan()
-            touched = set()
             for w in work:
                 tid = (f"compact_{w['dataSource']}_"
                        f"{w['partition'].split('=', 1)[-1]}_"
                        f"{uuid.uuid4().hex[:6]}")
-                t0 = time.time()
-                self.engine.record_task(tid, "compact", w["dataSource"],
-                                        "RUNNING")
+                w["status"] = "SUCCESS"
                 try:
-                    _compact_partition(self.engine.catalog, w["dataSource"],
-                                       w["partition"], w["targetFiles"])
-                    status = "SUCCESS"
-                    err = None
-                except Exception as e:  # keep the duty loop alive
-                    status, err = "FAILED", f"{type(e).__name__}: {e}"
-                self.engine.record_task(
-                    tid, "compact", w["dataSource"], status,
-                    (time.time() - t0) * 1000.0, err)
-                w["status"] = status
-                touched.add(w["dataSource"])
-                self.history.append(dict(w))
-            for ds in touched:
+                    with self.engine.tasks.track(tid, "compact",
+                                                 w["dataSource"]):
+                        _compact_partition(self.engine.catalog,
+                                           w["dataSource"], w["partition"],
+                                           w["targetFiles"])
+                except Exception:  # recorded; keep the duty loop alive
+                    w["status"] = "FAILED"
+            for ds in {w["dataSource"] for w in work}:
                 self.engine.catalog.commit(
                     ds, self.engine.catalog.source_path(ds))
+            # the last 20, all /compaction/status serves
+            self.history = (self.history + [dict(w) for w in work])[-20:]
             return work
-
-    # -------------------------------------------------------------- loop
-    def start(self, period: float = 60.0) -> "CompactionDuty":
-        """Background duty cycle (the coordinator's indexing period)."""
-        if self._thread is not None and self._thread.is_alive():
-            return self
-        self._stop.clear()
-
-        def loop():
-            while not self._stop.wait(period):
-                try:
-                    self.run_once()
-                except Exception:
-                    pass  # next cycle retries
-
-        self._thread = threading.Thread(
-            target=loop, daemon=True, name="compaction-duty")
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None

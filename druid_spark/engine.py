@@ -22,6 +22,7 @@ from druid_spark.cache import LockedLRU
 from druid_spark.catalog import Catalog, interval_ranges
 from druid_spark.expr import compile_expr, parse, Compiler, Bin, Ref
 from druid_spark.filters import FilterCompiler
+from druid_spark.tasks import TaskRegistry
 from druid_spark.time_filters import lift_time_bounds
 from druid_spark.dimensions import virtual_columns
 
@@ -246,10 +247,10 @@ class DruidSparkEngine:
         # tables' Catalog.fingerprint, not the catalog version, so an
         # append to one interval leaves cached queries over others valid.
         self._result_cache = LockedLRU(RESULT_CACHE_ENTRIES)
-        # task log feeding the sys.tasks view (SystemSchema TASKS
-        # signature, reduced): async SQL statements (server.py) and
-        # SQL-ingest tasks record themselves here
-        self.tasks: list[dict[str, Any]] = []
+        # every task — overlord tasks, async SQL statements, SQL
+        # ingest and coordinator duty runs — is one record here; it
+        # feeds sys.tasks and the HTTP task routes
+        self.tasks = TaskRegistry()
         if data_dir:
             self.catalog.register_dir(data_dir)
         # Overlap the one-time per-session SQL-function DDL pass (~80
@@ -1065,12 +1066,11 @@ class DruidSparkEngine:
             T.StructType([T.StructField("server", T.StringType()),
                           T.StructField("segment_id", T.StringType())])
         ).createOrReplaceTempView("sys_server_segments")
-        # sys.tasks (SystemSchema TASKS signature, reduced): the
-        # engine task log — async SQL statements and SQL-ingest runs
+        # sys.tasks (SystemSchema TASKS signature, reduced): a
+        # snapshot of the task registry
         self.spark.createDataFrame(
-            [(t.get("task_id"), t.get("type"), t.get("datasource"),
-              t.get("created_time"), t.get("status"),
-              int(t.get("duration_ms") or 0), t.get("error_msg"))
+            [(t["task_id"], t["type"], t["datasource"], t["created_time"],
+              t["status"], int(t["duration_ms"] or 0), t["error_msg"])
              for t in self.tasks],
             T.StructType([
                 T.StructField("task_id", T.StringType()),
@@ -1102,23 +1102,10 @@ class DruidSparkEngine:
                     datasource: str | None, status: str,
                     duration_ms: float = 0.0,
                     error_msg: str | None = None) -> None:
-        """Append/update a sys.tasks row (TaskStorage analog: latest
+        """Insert or update a sys.tasks row (TaskStorage analog: latest
         status wins per task_id)."""
-        import datetime as _dt
-        for t in self.tasks:
-            if t["task_id"] == task_id:
-                t.update(status=status, duration_ms=duration_ms,
-                         error_msg=error_msg)
-                if datasource is not None:
-                    t.update(datasource=datasource, type=task_type)
-                return
-        self.tasks.append({
-            "task_id": task_id, "type": task_type,
-            "datasource": datasource,
-            "created_time":
-                _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "status": status, "duration_ms": duration_ms,
-            "error_msg": error_msg})
+        self.tasks.record(task_id, task_type, datasource, status,
+                          duration_ms, error_msg)
 
     # ---------------------------------------------------- datasources
     def resolve(self, ds: Any, ctx: dict | None = None,

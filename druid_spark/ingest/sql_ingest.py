@@ -163,26 +163,16 @@ def run_ingest_sql(engine, stmt: IngestStatement,
     DataFrame (so the statement composes like a query). The new/updated
     datasource is (re)registered in the engine catalog.
 
-    Records itself in sys.tasks as a `query_controller` task with the
-    target datasource (MSQ ControllerImpl / TaskStorage analog) — under
-    the caller-supplied task_id when the async statements API drives it,
-    so the sys.tasks row and the statement id line up like the
-    reference's sqlQueryId == taskId contract."""
-    import time as _time
+    Runs as one `query_controller` task of the engine's task registry
+    with the target datasource (MSQ ControllerImpl / TaskStorage
+    analog) — under the caller-supplied task_id when the async
+    statements API drives it, so the statement and its task are one
+    record, like the reference's sqlQueryId == taskId contract."""
     import uuid as _uuid
 
-    tid = task_id or f"query-{_uuid.uuid4()}"
-    engine.record_task(tid, "query_controller", stmt.table, "RUNNING")
-    t0 = _time.time()
-    try:
-        df = _run_ingest_body(engine, stmt)
-    except Exception as e:
-        engine.record_task(tid, "query_controller", stmt.table, "FAILED",
-                           (_time.time() - t0) * 1000.0, str(e))
-        raise
-    engine.record_task(tid, "query_controller", stmt.table, "SUCCESS",
-                       (_time.time() - t0) * 1000.0)
-    return df
+    with engine.tasks.track(task_id or f"query-{_uuid.uuid4()}",
+                            "query_controller", stmt.table):
+        return _run_ingest_body(engine, stmt)
 
 
 def _run_ingest_body(engine, stmt: IngestStatement):

@@ -26,6 +26,11 @@ one partition at a time and writes them as a chunked response, so a
 large result never materializes on the driver. The native types whose
 results are bounded by construction (topN, search, timeBoundary,
 metadata) are collected and sent whole.
+
+The overlord task routes and the async SQL routes (statements,
+/sql/task) read one task registry (druid_spark.tasks), so the id
+/sql/task returns polls at /druid/indexer/v1/task/{id}/status, as in
+Druid; _Statements and _Overlord keep only parsing and shapes.
 """
 
 from __future__ import annotations
@@ -62,6 +67,7 @@ from druid_spark.security import (
     native_query_resources,
     sql_resources,
 )
+from druid_spark.tasks import TERMINAL, TaskForbidden
 
 
 # ------------------------------------------------------------- JSON safety
@@ -664,174 +670,106 @@ class _AvaticaForbidden(_AvaticaError):
 
 
 class _Statements:
-    """Async SQL statement registry — the MSQ task-style surface
+    """Async SQL statements — the MSQ task-style surface
     (sql/.../sql/http/SqlStatementResource.java: POST
     /druid/v2/sql/statements → {queryId, state}, GET …/{id} polls
     state, GET …/{id}/results pages results, DELETE cancels). States
     mirror SqlStatementState: ACCEPTED → RUNNING → SUCCESS | FAILED |
-    CANCELED. Execution runs on a daemon thread per statement; results
-    spill to parquet (_SpilledResult — the durable-results contract)
-    so a heavy SELECT through the async surface never materializes in
-    driver memory; pages are served from the spill files."""
+    CANCELED. Each statement is one task of the engine's registry
+    (druid_spark.tasks), which runs it, bounds the completed ones and
+    scopes them to their owner. Results spill to parquet
+    (_SpilledResult — the durable-results contract) so a heavy SELECT
+    through the async surface never materializes in driver memory;
+    pages are served from the spill files."""
 
-    # completed statements retained (with their spilled results) before
-    # the oldest are evicted — the reference expires statement results
-    # too (SqlStatementResource retention); eviction deletes the spill
-    # directory so result storage is bounded for the server's lifetime
-    MAX_DONE = 256
     PAGE_SIZE = 100_000  # rows per /results?page=N page
-    _TERMINAL = ("SUCCESS", "FAILED", "CANCELED")
 
     def __init__(self, engine, scheduler: QueryScheduler | None = None,
                  request_logger=None):
         self.engine = engine
         self.scheduler = scheduler or QueryScheduler(engine.spark)
         self.request_logger = request_logger
-        self._lock = threading.Lock()
-        self._st: dict[str, dict] = {}
 
     def submit(self, text: str, params=None,
                identity: str | None = None) -> dict:
         qid = str(uuid.uuid4())
-        rec = {"queryId": qid, "state": "ACCEPTED",
-               "createdAt": time.time(), "spill": None, "cols": None,
-               "error": None, "cancel": False, "identity": identity}
-        with self._lock:
-            self._st[qid] = rec
-            done = [q for q, r in self._st.items()
-                    if r["state"] in self._TERMINAL]
-            for q in done[:max(0, len(done) - self.MAX_DONE)]:
-                old = self._st.pop(q)  # insertion order == oldest first
-                if old.get("spill") is not None:
-                    old["spill"].close()
-        is_task = bool(_re_task.match(text or ""))
-        ttype = "query_controller" if is_task else "query"
-        ds = None
-        if is_task:
-            from druid_spark.ingest.sql_ingest import parse_ingest_sql
-            stripped = re.sub(r"^\s*(?:SET\s+[\w.]+\s*=\s*[^;]+;\s*)*",
-                              "", text, flags=re.IGNORECASE)
-            stmt = parse_ingest_sql(stripped)
-            ds = stmt.table if stmt else None
-        self.engine.record_task(qid, ttype, ds, "ACCEPTED")
+        # an INSERT/REPLACE names its datasource once the ingest starts
+        ttype = "query_controller" if _re_task.match(text or "") else "query"
 
-        def run():
-            # a cancel can land before the worker starts (no Spark job
-            # group exists yet for scheduler.cancel to kill): honor it
-            # here instead of overwriting CANCELED back to RUNNING and
-            # paying for the whole query
-            with self._lock:
-                if rec["cancel"]:
-                    rec["state"] = "CANCELED"
-                else:
-                    rec["state"] = "RUNNING"
-            if rec["state"] == "CANCELED":
-                self.engine.record_task(
-                    qid, ttype, None, "CANCELED",
-                    (time.time() - rec["createdAt"]) * 1000.0)
-                return
-            try:
-                df = self.engine.sql(_bind_parameters(text, params),
-                                     task_id=qid)
-                # distributed parquet spill — the driver never holds
-                # the result rows (durable-results paging contract)
-                spill = self.scheduler.submit(
-                    qid, lambda: _SpilledResult(df, qid))
-                with self._lock:
-                    if rec["cancel"]:
-                        rec["state"] = "CANCELED"
-                        spill.close()
-                    else:
-                        rec["cols"] = df.columns
-                        rec["spill"] = spill
-                        rec["state"] = "SUCCESS"
-            except Exception as e:
-                with self._lock:
-                    rec["error"] = error_body(
-                        "CANCELED" if rec["cancel"] else "Unknown exception",
-                        e)
-                    rec["state"] = ("CANCELED" if rec["cancel"]
-                                    else "FAILED")
-            self.engine.record_task(
-                qid, ttype, None, rec["state"],
-                (time.time() - rec["createdAt"]) * 1000.0,
-                (rec["error"] or {}).get("errorMessage")
-                if rec["error"] else None)
+        def body(rec):
+            df = self.engine.sql(_bind_parameters(text, params), task_id=qid)
+            # distributed parquet spill — the driver never holds the
+            # result rows (durable-results paging contract)
+            rec["spill"] = _SpilledResult(df, qid)
+
+        def done(rec):
             if self.request_logger is not None:
                 # statements log at completion with the real
                 # end-to-end duration (SqlStatementResource contract)
+                ok = rec["status"] == "SUCCESS"
                 self.request_logger.log(
                     kind="statement", detail=(text or "")[:500],
-                    status=200 if rec["state"] == "SUCCESS" else 500,
-                    identity=identity, remote=None, queryId=qid,
-                    success=rec["state"] == "SUCCESS",
-                    query_time_ms=int(
-                        (time.time() - rec["createdAt"]) * 1000))
+                    status=200 if ok else 500, identity=identity,
+                    remote=None, queryId=qid, success=ok,
+                    query_time_ms=int(rec["duration_ms"]))
 
-        threading.Thread(target=run, daemon=True,
-                         name=f"sql-statement-{qid[:8]}").start()
-        return {"queryId": qid, "state": rec["state"]}
+        rec = self.engine.tasks.run_async(
+            qid, ttype, None, body, self.scheduler, done, owner=identity,
+            payload={"type": ttype, "id": qid, "sqlQuery": text})
+        return {"queryId": qid, "state": rec["status"]}
 
-    def status(self, qid: str) -> dict | None:
-        rec = self._st.get(qid)
+    def _get(self, qid: str, ident) -> dict | None:
+        """The statement's record; other tasks are not statements."""
+        rec = self.engine.tasks.get(qid, ident)
+        return rec if rec is not None and "owner" in rec else None
+
+    def status(self, qid: str, ident=None) -> dict | None:
+        rec = self._get(qid, ident)
         if rec is None:
             return None
-        out = {"queryId": qid, "state": rec["state"]}
-        if rec["state"] == "SUCCESS":
-            import os as _os
-            spill = rec["spill"]
+        out = {"queryId": qid, "state": rec["status"]}
+        spill = rec["spill"]
+        if rec["status"] == "SUCCESS" and spill is not None:
             # page manifest (SqlStatementResource result stanza: page
             # id/numRows/sizeInBytes). Pages here are the row-range
             # pages /results?page=N actually serves (PAGE_SIZE rows);
             # sizeInBytes prorates the spill's on-disk bytes.
-            total_b = sum(_os.path.getsize(p)
-                          for p, _f, _n in spill.files) \
-                if spill.files else 0
-            pages = []
-            lo = 0
-            while lo < spill.total:
-                n = min(self.PAGE_SIZE, spill.total - lo)
-                pages.append({
-                    "id": len(pages), "numRows": n,
-                    "sizeInBytes": round(total_b * n
-                                         / max(spill.total, 1))})
-                lo += n
+            total_b = sum(os.path.getsize(p) for p, _f, _n in spill.files)
+            sizes = [min(self.PAGE_SIZE, spill.total - lo)
+                     for lo in range(0, spill.total, self.PAGE_SIZE)]
+            pages = [{"id": i, "numRows": n,
+                      "sizeInBytes": round(total_b * n / spill.total)}
+                     for i, n in enumerate(sizes)]
             out["result"] = {"numTotalRows": spill.total,
                              "dataSource": "__query_select",
                              "pages": pages}
-        if rec["error"] is not None:
-            out["errorDetails"] = rec["error"]
+        if rec["error_msg"] is not None:
+            out["errorDetails"] = {
+                "error": "CANCELED" if rec["cancel"]
+                else "Unknown exception",
+                "errorMessage": rec["error_msg"],
+                "errorClass": rec["error_class"], "host": None}
         return out
 
     def results(self, qid: str, page: int = 0,
-                page_size: int | None = None) -> tuple[int, Any]:
-        rec = self._st.get(qid)
+                page_size: int | None = None,
+                ident=None) -> tuple[int, Any]:
+        rec = self._get(qid, ident)
         if rec is None:
             return 404, {"error": "Not found", "errorMessage": qid,
                          "errorClass": None, "host": None}
-        if rec["state"] != "SUCCESS":
+        spill = rec["spill"]
+        if rec["status"] != "SUCCESS" or spill is None:
             return 400, {"error": "Statement not successful",
-                         "errorMessage": f"state is {rec['state']}",
+                         "errorMessage": f"state is {rec['status']}",
                          "errorClass": None, "host": None}
         size = page_size or self.PAGE_SIZE
-        return 200, rec["spill"].row_dicts(page * size, size)
+        return 200, spill.row_dicts(page * size, size)
 
-    def owner_mismatch(self, qid: str, ident: str | None) -> bool:
-        """True when the statement exists but was submitted by a
-        different identity — the reference's SqlStatementResource
-        rejects status/results/cancel from non-owners (MSQ statements
-        are owner-scoped), so the HTTP layer returns 403."""
-        rec = self._st.get(qid)
-        return rec is not None and rec.get("identity") != ident
-
-    def cancel(self, qid: str) -> bool:
-        with self._lock:
-            rec = self._st.get(qid)
-            if rec is None:
-                return False
-            rec["cancel"] = True
-            if rec["state"] in ("ACCEPTED", "RUNNING"):
-                rec["state"] = "CANCELED"
+    def cancel(self, qid: str, ident=None) -> bool:
+        if self._get(qid, ident) is None:
+            return False
+        self.engine.tasks.cancel(qid)
         # Actually stop the Spark jobs, not just the bookkeeping
         # (QueryScheduler.cancelQuery semantics).
         self.scheduler.cancel(qid)
@@ -850,20 +788,17 @@ class _Overlord:
     immediately queryable), compact (ClientCompactionTaskQuery analog →
     coordinator.compact_table), kill (KillUnusedSegmentsTask →
     coordinator.drop_interval), noop (NoopTask — the reference's test
-    task). Each task runs on a daemon thread under the query
-    scheduler's job-group registry, so shutdown cancels the underlying
-    Spark jobs, not just the bookkeeping. Terminal tasks are evicted
-    FIFO past MAX_DONE, like _Statements."""
+    task). The task routes read the engine's one task registry
+    (druid_spark.tasks), so they also serve SQL statements (the id
+    POST /druid/v2/sql/task returns), SQL ingest and the coordinator
+    duties' tasks; the registry runs each task under the query
+    scheduler's job group, so shutdown cancels its Spark jobs."""
 
-    MAX_DONE = 256
-    _TERMINAL = ("SUCCESS", "FAILED", "CANCELED")
     _TYPES = ("index", "index_parallel", "compact", "kill", "noop")
 
     def __init__(self, engine, scheduler: QueryScheduler | None = None):
         self.engine = engine
         self.scheduler = scheduler or QueryScheduler(engine.spark)
-        self._lock = threading.Lock()
-        self._tasks: dict[str, dict] = {}
         self._supervisors: dict[str, dict] = {}
         # overlord dynamic worker config (WorkerBehaviorConfig) — a
         # no-op for the single-process engine, but the console reads/
@@ -883,20 +818,8 @@ class _Overlord:
               or spec.get("dataSchema", {}).get("dataSource"))
         tid = (spec.get("id")
                or f"{ttype}_{ds or 'task'}_{uuid.uuid4().hex[:12]}")
-        rec = {"id": tid, "type": ttype, "dataSource": ds, "spec": spec,
-               "state": "RUNNING", "createdAt": time.time(),
-               "duration": -1, "error": None, "cancel": False}
-        with self._lock:
-            if tid in self._tasks:
-                return 400, {"error": f"Task[{tid}] already exists"}
-            self._tasks[tid] = rec
-            done = [t for t, r in self._tasks.items()
-                    if r["state"] in self._TERMINAL]
-            for t in done[:max(0, len(done) - self.MAX_DONE)]:
-                del self._tasks[t]
-        self.engine.record_task(tid, ttype, ds, "RUNNING")
 
-        def work():
+        def work(rec):
             if ttype in ("index", "index_parallel"):
                 from druid_spark.ingest.batch import run_ingestion
                 svc = self.engine.table_service()
@@ -925,68 +848,55 @@ class _Overlord:
                 while time.time() < deadline and not rec["cancel"]:
                     time.sleep(0.02)
 
-        def run():
-            try:
-                if rec["cancel"]:
-                    raise QueryCanceledError(tid)
-                self.scheduler.submit(tid, work)
-                state = "CANCELED" if rec["cancel"] else "SUCCESS"
-            except Exception as e:
-                if rec["cancel"]:
-                    state = "CANCELED"
-                else:
-                    state = "FAILED"
-                    rec["error"] = f"{type(e).__name__}: {e}"
-            if rec["cancel"] and rec["error"] is None:
-                rec["error"] = "Shutdown request from user"
-            with self._lock:
-                rec["state"] = state
-                rec["duration"] = int(
-                    (time.time() - rec["createdAt"]) * 1000)
-            self.engine.record_task(tid, ttype, ds, state,
-                                    rec["duration"], rec["error"])
-
-        threading.Thread(target=run, daemon=True,
-                         name=f"task-{tid[:24]}").start()
+        try:
+            self.engine.tasks.run_async(tid, ttype, ds, work,
+                                        self.scheduler, payload=spec)
+        except KeyError:
+            return 400, {"error": f"Task[{tid}] already exists"}
         return 200, {"task": tid}
 
-    def _status_plus(self, rec: dict) -> dict:
+    @staticmethod
+    def _status_plus(rec: dict) -> dict:
         """TaskStatusPlus JSON (OverlordResource.getTaskStatus)."""
-        terminal = rec["state"] in self._TERMINAL
-        created = dt.datetime.fromtimestamp(
-            rec["createdAt"], dt.timezone.utc)
+        terminal = rec["status"] in TERMINAL
+        code = rec["status"] if terminal else "RUNNING"
+        err = rec["error_msg"]
+        if rec["error_class"] and not rec["cancel"]:
+            err = f"{rec['error_class']}: {err}"
         return {
-            "id": rec["id"], "groupId": rec["id"], "type": rec["type"],
-            "createdTime": created.isoformat().replace("+00:00", "Z"),
+            "id": rec["task_id"], "groupId": rec["task_id"],
+            "type": rec["type"],
+            "createdTime": rec["created_time"].replace("+00:00", "Z"),
             "queueInsertionTime": "1970-01-01T00:00:00.000Z",
-            "statusCode": rec["state"], "status": rec["state"],
+            "statusCode": code, "status": code,
             "runnerStatusCode": "NONE" if terminal else "RUNNING",
-            "duration": rec["duration"],
+            "duration": int(rec["duration_ms"]) if terminal else -1,
             "location": {"host": None, "port": -1, "tlsPort": -1},
-            "dataSource": rec["dataSource"], "errorMsg": rec["error"]}
+            "dataSource": rec["datasource"], "errorMsg": err}
 
-    def status(self, tid: str) -> tuple[int, dict]:
-        rec = self._tasks.get(tid)
+    def _not_found(self, tid: str) -> tuple[int, dict]:
+        return 404, {"error": f"Cannot find any task with id: [{tid}]"}
+
+    def status(self, tid: str, ident=None) -> tuple[int, dict]:
+        rec = self.engine.tasks.get(tid, ident)
         if rec is None:
-            return 404, {"error":
-                         f"Cannot find any task with id: [{tid}]"}
+            return self._not_found(tid)
         return 200, {"task": tid, "status": self._status_plus(rec)}
 
-    def payload(self, tid: str) -> tuple[int, dict]:
-        rec = self._tasks.get(tid)
+    def payload(self, tid: str, ident=None) -> tuple[int, dict]:
+        rec = self.engine.tasks.get(tid, ident)
         if rec is None:
-            return 404, {"error":
-                         f"Cannot find any task with id: [{tid}]"}
-        return 200, {"task": tid, "payload": rec["spec"]}
+            return self._not_found(tid)
+        return 200, {"task": tid, "payload": rec.get("payload") or {
+            "type": rec["type"], "id": tid, "dataSource": rec["datasource"]}}
 
-    def reports(self, tid: str) -> tuple[int, dict]:
+    def reports(self, tid: str, ident=None) -> tuple[int, dict]:
         """GET task/{id}/reports — IngestionStatsAndErrorsTaskReport
         for completed ingestion tasks (OverlordResource
         /task/{taskid}/reports; TaskReport.java shape). Non-ingestion
         tasks have no reports, like the reference."""
-        rec = self._tasks.get(tid)
-        if rec is None or rec["type"] not in ("index", "index_parallel") \
-                or rec.get("processed") is None:
+        rec = self.engine.tasks.get(tid, ident)
+        if rec is None or rec.get("processed") is None:
             return 404, {"error":
                          f"No task reports were found for task [{tid}]"}
         return 200, {"ingestionStatsAndErrors": {
@@ -998,40 +908,33 @@ class _Overlord:
                     "processed": rec["processed"],
                     "processedBytes": -1, "processedWithError": 0,
                     "thrownAway": 0, "unparseable": 0}},
-                "errorMsg": rec["error"],
+                "errorMsg": rec["error_msg"],
                 "segmentAvailabilityConfirmed": True,
                 "segmentAvailabilityWaitTimeMs": 0}}}
 
-    def tasks(self, state: str | None = None) -> list[dict]:
+    def tasks(self, state: str | None = None, ident=None) -> list[dict]:
         """GET /druid/indexer/v1/tasks (+ runningTasks/completeTasks
         filter paths)."""
-        with self._lock:
-            recs = list(self._tasks.values())
+        recs = self.engine.tasks.records(ident)
         if state == "running":
-            recs = [r for r in recs if r["state"] not in self._TERMINAL]
+            recs = [r for r in recs if r["status"] not in TERMINAL]
         elif state == "complete":
-            recs = [r for r in recs if r["state"] in self._TERMINAL]
+            recs = [r for r in recs if r["status"] in TERMINAL]
         elif state in ("waiting", "pending"):
             recs = []  # no queue: tasks start immediately
         return [self._status_plus(r) for r in recs]
 
-    def shutdown(self, tid: str) -> tuple[int, dict]:
-        with self._lock:
-            rec = self._tasks.get(tid)
-            if rec is None:
-                return 404, {"error":
-                             f"Cannot find any task with id: [{tid}]"}
-            rec["cancel"] = True
+    def shutdown(self, tid: str, ident=None) -> tuple[int, dict]:
+        if not self.engine.tasks.cancel(tid, ident):
+            return self._not_found(tid)
         self.scheduler.cancel(tid)
         return 200, {"task": tid}
 
-    def shutdown_datasource(self, ds: str) -> tuple[int, dict]:
-        with self._lock:
-            tids = [t for t, r in self._tasks.items()
-                    if r["dataSource"] == ds
-                    and r["state"] not in self._TERMINAL]
+    def shutdown_datasource(self, ds: str, ident=None) -> tuple[int, dict]:
+        tids = [r["task_id"] for r in self.engine.tasks.records(ident)
+                if r["datasource"] == ds and r["status"] not in TERMINAL]
         for t in tids:
-            self.shutdown(t)
+            self.shutdown(t, ident)
         return 200, {"numChangedTasks": len(tids)}
 
     # ------------------------------------------------------ supervisors
@@ -1136,6 +1039,18 @@ class _Overlord:
 
 
 # --------------------------------------------------------------- handler
+def _owner_checked(method):
+    """Answer 403 when a route looks up a task (an SQL statement)
+    that another identity owns — the task registry's lookup raises
+    TaskForbidden, before any response is written."""
+    def wrapped(self):
+        try:
+            method(self)
+        except TaskForbidden as e:
+            self._send_err(403, "Forbidden", str(e))
+    return wrapped
+
+
 class _Handler(BaseHTTPRequestHandler):
     protocol_version = "HTTP/1.1"
 
@@ -1226,25 +1141,29 @@ class _Handler(BaseHTTPRequestHandler):
                          "minTime": starts[0] if starts else None,
                          "maxTime": ends[-1] if ends else None}}}
 
-    def _sec_404(self, msg: str) -> None:
-        self._send_json(404, {"error": "Not found", "errorMessage": msg,
-                              "errorClass": None, "host": None})
+    def _send_err(self, status: int, error: str, msg: str) -> None:
+        """Send the reference's error JSON with no exception class."""
+        self._send_json(status, {"error": error, "errorMessage": msg,
+                                 "errorClass": None, "host": None})
+
+    def _send_404(self, msg: str) -> None:
+        self._send_err(404, "Not found", msg)
 
     def _security_get(self, path: str) -> None:
         m = self._SEC_RE.match(path)
         if not m:
-            return self._sec_404(path)
+            return self._send_404(path)
         kind, rest = m.group(1), (m.group(2) or "").strip("/")
         be = self._sec_backend(kind)
         if be is None:
-            return self._sec_404(f"no administrable {kind} backend")
+            return self._send_404(f"no administrable {kind} backend")
         parts = rest.split("/") if rest else []
         if kind == "authentication":
             if parts == ["users"]:
                 return self._send_json(200, be.user_names())
             if len(parts) == 2 and parts[0] == "users":
                 if parts[1] not in be.users:
-                    return self._sec_404(parts[1])
+                    return self._send_404(parts[1])
                 return self._send_json(200, {
                     "username": parts[1],
                     "credentials": (
@@ -1258,19 +1177,19 @@ class _Handler(BaseHTTPRequestHandler):
                 out = (be.get_user(parts[1]) if parts[0] == "users"
                        else be.get_role(parts[1]))
                 if out is None:
-                    return self._sec_404(parts[1])
+                    return self._send_404(parts[1])
                 return self._send_json(200, out)
-        self._sec_404(path)
+        self._send_404(path)
 
     def _security_mutate(self, path: str, body, ident,
                          method: str) -> None:
         m = self._SEC_RE.match(path)
         if not m:
-            return self._sec_404(path)
+            return self._send_404(path)
         kind, rest = m.group(1), (m.group(2) or "").strip("/")
         be = self._sec_backend(kind)
         if be is None:
-            return self._sec_404(f"no administrable {kind} backend")
+            return self._send_404(f"no administrable {kind} backend")
         parts = rest.split("/") if rest else []
 
         def done(ok: bool, action: str, status: int = 200,
@@ -1284,9 +1203,7 @@ class _Handler(BaseHTTPRequestHandler):
                     author=ident, ip=self.client_address[0])
                 self._send_json(status, {})
             else:
-                self._send_json(fail, {
-                    "error": "Invalid request", "errorMessage": rest,
-                    "errorClass": None, "host": None})
+                self._send_err(fail, "Invalid request", rest)
 
         if kind == "authentication":
             if len(parts) == 2 and parts[0] == "users":
@@ -1298,10 +1215,8 @@ class _Handler(BaseHTTPRequestHandler):
                     parts[2] == "credentials" and method == "POST":
                 pw = (body or {}).get("password")
                 if not isinstance(pw, str):
-                    return self._send_json(400, {
-                        "error": "Invalid request",
-                        "errorMessage": "missing password",
-                        "errorClass": None, "host": None})
+                    return self._send_err(400, "Invalid request",
+                                          "missing password")
                 return done(be.set_credentials(parts[1], pw),
                             "updateCredentials")
         else:
@@ -1325,19 +1240,14 @@ class _Handler(BaseHTTPRequestHandler):
             if len(parts) == 3 and parts[0] == "roles" and \
                     parts[2] == "permissions" and method == "POST":
                 if not isinstance(body, list):
-                    return self._send_json(400, {
-                        "error": "Invalid request",
-                        "errorMessage": "expected a permission list",
-                        "errorClass": None, "host": None})
+                    return self._send_err(400, "Invalid request",
+                                          "expected a permission list")
                 try:
                     return done(be.set_permissions(parts[1], body),
                                 "setPermissions")
                 except ValueError as e:
-                    return self._send_json(400, {
-                        "error": "Invalid request",
-                        "errorMessage": str(e),
-                        "errorClass": None, "host": None})
-        self._sec_404(path)
+                    return self._send_err(400, "Invalid request", str(e))
+        self._send_404(path)
 
     def _timed(self, fn, kind: str, detail: str) -> None:
         """Run a query handler under the request logger (RequestLogger
@@ -1464,6 +1374,7 @@ class _Handler(BaseHTTPRequestHandler):
             self.close_connection = True
             self._last_error = type(e).__name__
 
+    @_owner_checked
     def do_GET(self):  # noqa: N802
         from urllib.parse import parse_qs, urlparse
         u = urlparse(self.path)
@@ -1545,9 +1456,7 @@ class _Handler(BaseHTTPRequestHandler):
             duty = self.server.compaction  # type: ignore[attr-defined]
             cfg = duty.configs.get(m.group(1))
             if cfg is None:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": m.group(1),
-                                      "errorClass": None, "host": None})
+                self._send_404(m.group(1))
             else:
                 self._send_json(200, cfg)
         elif path == "/druid/indexer/v1/compaction/config/cluster":
@@ -1592,18 +1501,14 @@ class _Handler(BaseHTTPRequestHandler):
                 if role in roles:
                     self._send_json(200, roles[role])
                 else:
-                    self._send_json(400, {
-                        "error": "Invalid nodeRole",
-                        "errorMessage": m.group(1),
-                        "errorClass": None, "host": None})
+                    self._send_err(400, "Invalid nodeRole", m.group(1))
         elif path == "/druid/indexer/v1/workers":
             # OverlordResource.getWorkers:701 — one in-process worker
             # sized by the scheduler's slot pool
             host, port = self.server.server_address[:2]
             sched = self.server.scheduler  # type: ignore[attr-defined]
-            ov = self.server.overlord  # type: ignore[attr-defined]
-            running = [t for t, r in ov._tasks.items()
-                       if r["state"] == "RUNNING"]
+            running = [t["task_id"] for t in self.engine.tasks
+                       if t["status"] == "RUNNING"]
             cap = sched._total_cap or (os.cpu_count() or 1)
             self._send_json(200, [{
                 "worker": {"scheme": "http", "host": f"{host}:{port}",
@@ -1620,9 +1525,8 @@ class _Handler(BaseHTTPRequestHandler):
             # OverlordResource.getTotalWorkerCapacity:439 — the
             # console's capacity gauge
             sched = self.server.scheduler  # type: ignore[attr-defined]
-            ov = self.server.overlord  # type: ignore[attr-defined]
-            running = sum(1 for r in ov._tasks.values()
-                          if r["state"] == "RUNNING")
+            running = sum(1 for t in self.engine.tasks
+                          if t["status"] == "RUNNING")
             cap = sched._total_cap or (os.cpu_count() or 1)
             self._send_json(200, {
                 "currentClusterCapacity": cap,
@@ -1663,9 +1567,7 @@ class _Handler(BaseHTTPRequestHandler):
             # DatasourcesResource.getDataSource
             name = m.group(1)
             if name not in self.engine.catalog.tables():
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": name,
-                                      "errorClass": None, "host": None})
+                self._send_404(name)
             else:
                 self._send_json(200, self._ds_summary(name))
         elif path == "/druid/coordinator/v1/metadata/datasources":
@@ -1703,9 +1605,7 @@ class _Handler(BaseHTTPRequestHandler):
                             r"([^/]+)$", path)):
             tier = self.engine.catalog.tier_lookups(m.group(1))
             if tier is None:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": m.group(1),
-                                      "errorClass": None, "host": None})
+                self._send_404(m.group(1))
             else:
                 self._send_json(200, sorted(tier))
         elif (m := re.match(r"^/druid/coordinator/v1/lookups/config/"
@@ -1714,9 +1614,7 @@ class _Handler(BaseHTTPRequestHandler):
             mapping = (self.engine.catalog.tier_lookups(tier)
                        or {}).get(name)
             if mapping is None:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": name,
-                                      "errorClass": None, "host": None})
+                self._send_404(name)
             else:
                 self._send_json(200, {
                     "version": str(self.engine.catalog.version),
@@ -1743,9 +1641,7 @@ class _Handler(BaseHTTPRequestHandler):
             # size/count rollups
             name = m.group(1)
             if name not in self.engine.catalog.tables():
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": name,
-                                      "errorClass": None, "host": None})
+                self._send_404(name)
                 return
             per: dict[str, dict] = {}
             for ds, _p, sz, nr, start, end, _pn, _v \
@@ -1788,9 +1684,7 @@ class _Handler(BaseHTTPRequestHandler):
                         for ds, p, sz, nr in self.engine.catalog.segments()
                         if ds == name]
             if not segs and name not in self.engine.catalog.tables():
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": name,
-                                      "errorClass": None, "host": None})
+                self._send_404(name)
                 return
             self._send_json(200, segs)
         elif path.startswith("/druid/v2/datasources/"):
@@ -1828,17 +1722,21 @@ class _Handler(BaseHTTPRequestHandler):
                      "completeTasks": "complete",
                      "waitingTasks": "waiting",
                      "pendingTasks": "pending"}[m.group(1)]
-            self._send_json(200, self.server.overlord.tasks(state))  # type: ignore
+            self._send_json(200, self.server.overlord.tasks(  # type: ignore
+                state, ident))
         elif (m := re.match(
                 r"^/druid/indexer/v1/task/([^/]+)/status$", path)):
-            status, out = self.server.overlord.status(m.group(1))  # type: ignore
+            status, out = self.server.overlord.status(  # type: ignore
+                m.group(1), ident)
             self._send_json(status, out)
         elif (m := re.match(
                 r"^/druid/indexer/v1/task/([^/]+)/reports$", path)):
-            status, out = self.server.overlord.reports(m.group(1))  # type: ignore
+            status, out = self.server.overlord.reports(  # type: ignore
+                m.group(1), ident)
             self._send_json(status, out)
         elif (m := re.match(r"^/druid/indexer/v1/task/([^/]+)$", path)):
-            status, out = self.server.overlord.payload(m.group(1))  # type: ignore
+            status, out = self.server.overlord.payload(  # type: ignore
+                m.group(1), ident)
             self._send_json(status, out)
         elif path == "/druid/indexer/v1/supervisor":
             # SupervisorResource.specGetAll: plain → ids, ?full → specs,
@@ -1867,17 +1765,6 @@ class _Handler(BaseHTTPRequestHandler):
         elif path.startswith("/druid/v2/sql/statements/"):
             parts = path.split("/")
             st = self.server.statements  # type: ignore[attr-defined]
-            qid = parts[-2] if parts[-1] == "results" else parts[-1]
-            # owner check (SqlStatementResource: status/results are
-            # owner-scoped — another authenticated identity may not
-            # read a statement's results given only its queryId)
-            if st.owner_mismatch(qid, ident):
-                self._send_json(403, {
-                    "error": "Forbidden",
-                    "errorMessage": f"statement {qid} belongs to "
-                                    f"another identity",
-                    "errorClass": None, "host": None})
-                return
             if parts[-1] == "results":
                 q = parse_qs(u.query)
                 try:
@@ -1885,26 +1772,20 @@ class _Handler(BaseHTTPRequestHandler):
                     if page < 0:
                         raise ValueError(page)
                 except ValueError:
-                    self._send_json(400, {
-                        "error": "Invalid page",
-                        "errorMessage": str(q.get("page")),
-                        "errorClass": None, "host": None})
+                    self._send_err(400, "Invalid page", str(q.get("page")))
                     return
-                code, body = st.results(parts[-2], page=page)
+                code, body = st.results(parts[-2], page=page, ident=ident)
                 self._send_json(code, body)
             else:
-                out = st.status(parts[-1])
+                out = st.status(parts[-1], ident)
                 if out is None:
-                    self._send_json(404, {"error": "Not found",
-                                          "errorMessage": parts[-1],
-                                          "errorClass": None, "host": None})
+                    self._send_404(parts[-1])
                 else:
                     self._send_json(200, out)
         else:
-            self._send_json(404, {"error": "Not found",
-                                  "errorMessage": self.path,
-                                  "errorClass": None, "host": None})
+            self._send_404(self.path)
 
+    @_owner_checked
     def do_DELETE(self):  # noqa: N802
         path = self.path.rstrip("/")
         res = []
@@ -1933,9 +1814,7 @@ class _Handler(BaseHTTPRequestHandler):
                     ip=self.client_address[0])
                 self._send_json(202, {})
             else:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": m.group(2),
-                                      "errorClass": None, "host": None})
+                self._send_404(m.group(2))
             return
         if (m := re.match(
                 r"^/druid/coordinator/v1/config/compaction/([^/]+)$",
@@ -1948,9 +1827,7 @@ class _Handler(BaseHTTPRequestHandler):
                     ip=self.client_address[0])
                 self._send_json(200, {})
             else:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": m.group(1),
-                                      "errorClass": None, "host": None})
+                self._send_404(m.group(1))
             return
         if (m := re.match(
                 r"^/druid/coordinator/v1/datasources/([^/]+)$", path)):
@@ -1960,27 +1837,15 @@ class _Handler(BaseHTTPRequestHandler):
             if self.engine.catalog.drop_table(m.group(1)):
                 self._send_json(200, {})
             else:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": m.group(1),
-                                      "errorClass": None, "host": None})
+                self._send_404(m.group(1))
             return
         if path.startswith("/druid/v2/sql/statements/"):
             qid = path.split("/")[-1]
-            st = self.server.statements  # type: ignore[attr-defined]
-            if st.owner_mismatch(qid, ident):
-                self._send_json(403, {
-                    "error": "Forbidden",
-                    "errorMessage": f"statement {qid} belongs to "
-                                    f"another identity",
-                    "errorClass": None, "host": None})
-                return
-            ok = self.server.statements.cancel(qid)  # type: ignore
+            ok = self.server.statements.cancel(qid, ident)  # type: ignore
             if ok:
                 self._send(202, b"")
             else:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": qid,
-                                      "errorClass": None, "host": None})
+                self._send_404(qid)
         elif path.startswith("/druid/v2/sql/") or path.startswith("/druid/v2/"):
             # DELETE /druid/v2/{queryId} (QueryResource.cancelQuery) and
             # DELETE /druid/v2/sql/{sqlQueryId} (SqlResource.cancelQuery):
@@ -1990,14 +1855,11 @@ class _Handler(BaseHTTPRequestHandler):
             if sched.cancel(qid):
                 self._send(202, b"")
             else:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": qid,
-                                      "errorClass": None, "host": None})
+                self._send_404(qid)
         else:
-            self._send_json(404, {"error": "Not found",
-                                  "errorMessage": self.path,
-                                  "errorClass": None, "host": None})
+            self._send_404(self.path)
 
+    @_owner_checked
     def do_POST(self):  # noqa: N802
         try:
             n = int(self.headers.get("Content-Length", 0))
@@ -2026,13 +1888,14 @@ class _Handler(BaseHTTPRequestHandler):
             self._send_json(status, out)
         elif (m := re.match(
                 r"^/druid/indexer/v1/task/([^/]+)/shutdown$", path)):
-            status, out = self.server.overlord.shutdown(m.group(1))  # type: ignore
+            status, out = self.server.overlord.shutdown(  # type: ignore
+                m.group(1), ident)
             self._send_json(status, out)
         elif (m := re.match(
                 r"^/druid/indexer/v1/datasources/([^/]+)"
                 r"/shutdownAllTasks$", path)):
             status, out = self.server.overlord.shutdown_datasource(  # type: ignore
-                m.group(1))
+                m.group(1), ident)
             self._send_json(status, out)
         elif path == "/druid/indexer/v1/supervisor":
             status, out = self.server.overlord.supervisor_submit(body)  # type: ignore
@@ -2060,9 +1923,7 @@ class _Handler(BaseHTTPRequestHandler):
                 body.setdefault("dataSource", m.group(1))
             ds = body.get("dataSource")
             if not ds:
-                self._send_json(400, {"error": "Invalid config",
-                                      "errorMessage": "missing dataSource",
-                                      "errorClass": None, "host": None})
+                self._send_err(400, "Invalid config", "missing dataSource")
                 return
             duty = self.server.compaction  # type: ignore[attr-defined]
             duty.set_config(
@@ -2078,9 +1939,7 @@ class _Handler(BaseHTTPRequestHandler):
                             path)):
             # RulesResource.setDatasourceRules
             if not isinstance(body, list):
-                self._send_json(400, {"error": "Invalid rules",
-                                      "errorMessage": "expected a list",
-                                      "errorClass": None, "host": None})
+                self._send_err(400, "Invalid rules", "expected a list")
                 return
             self.server.retention.set_rules(m.group(1), body)  # type: ignore
             self.server.audit.record(  # type: ignore[attr-defined]
@@ -2105,9 +1964,7 @@ class _Handler(BaseHTTPRequestHandler):
                     ip=self.client_address[0])
                 self._send_json(200, {"numChangedSegments": segs})
             else:
-                self._send_json(404, {"error": "Not found",
-                                      "errorMessage": m.group(1),
-                                      "errorClass": None, "host": None})
+                self._send_404(m.group(1))
         elif path == "/druid/indexer/v1/worker":
             # OverlordResource.setWorkerConfig
             self.server.overlord.worker_config = body  # type: ignore
@@ -2120,9 +1977,7 @@ class _Handler(BaseHTTPRequestHandler):
             # dynamic config (unknown keys accepted like the reference's
             # lenient deserialization), audit-recorded
             if not isinstance(body, dict):
-                self._send_json(400, {"error": "Invalid config",
-                                      "errorMessage": "expected object",
-                                      "errorClass": None, "host": None})
+                self._send_err(400, "Invalid config", "expected object")
                 return
             self.server.dynamic_config.update(body)  # type: ignore
             self.server.audit.record(  # type: ignore[attr-defined]
@@ -2131,9 +1986,7 @@ class _Handler(BaseHTTPRequestHandler):
             self._send_json(200, {})
         elif path == "/druid/coordinator/v1/broker/config":
             if not isinstance(body, dict):
-                self._send_json(400, {"error": "Invalid config",
-                                      "errorMessage": "expected object",
-                                      "errorClass": None, "host": None})
+                self._send_err(400, "Invalid config", "expected object")
                 return
             self.server.broker_config = body  # type: ignore
             self.server.audit.record(  # type: ignore[attr-defined]
@@ -2194,10 +2047,7 @@ class _Handler(BaseHTTPRequestHandler):
             # ingestion writer like any engine.sql() call.
             text = body.get("query")
             if not text:
-                self._send_json(
-                    400, {"error": "SQL parse failed",
-                          "errorMessage": "missing 'query'",
-                          "errorClass": None, "host": None})
+                self._send_err(400, "SQL parse failed", "missing 'query'")
                 return
             out = self.server.statements.submit(  # type: ignore
                 text, body.get("parameters"),
@@ -2206,9 +2056,7 @@ class _Handler(BaseHTTPRequestHandler):
                 out = {"taskId": out["queryId"], "state": out["state"]}
             self._send_json(202, out)
         else:
-            self._send_json(404, {"error": "Not found",
-                                  "errorMessage": self.path,
-                                  "errorClass": None, "host": None})
+            self._send_404(self.path)
 
     def _post_resources(self, path: str, body) -> list:
         """Resources a POST touches — native queries walk the

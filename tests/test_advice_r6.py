@@ -157,6 +157,37 @@ def test_statements_owner_scoped(secured):
     assert code == 200 and rows == [{"n": 5}]
 
 
+def test_statements_owner_scoped_on_overlord_routes(secured):
+    """A statement is one task of the registry, so the overlord task
+    routes serve it too — but only to its owner: bob (full admin)
+    cannot read its status or payload, shut it down, or see it listed
+    through /druid/indexer/v1."""
+    code, sub = _req(secured, "/druid/v2/sql/statements",
+                     {"query": "SELECT COUNT(*) AS n FROM nation"},
+                     user="alice", pw="secret")
+    assert code == 202
+    qid = sub["queryId"]
+    for path in (f"/druid/indexer/v1/task/{qid}/status",
+                 f"/druid/indexer/v1/task/{qid}",
+                 f"/druid/indexer/v1/task/{qid}/reports"):
+        code, body = _req(secured, path, user="bob", pw="hunter2")
+        assert code == 403 and "another identity" in body["errorMessage"]
+    code, _ = _req(secured, f"/druid/indexer/v1/task/{qid}/shutdown", {},
+                   user="bob", pw="hunter2")
+    assert code == 403
+    code, listed = _req(secured, "/druid/indexer/v1/tasks",
+                        user="bob", pw="hunter2")
+    assert code == 200 and qid not in [t["id"] for t in listed]
+    # bob's shutdown attempt left alice's statement running to SUCCESS
+    for _ in range(100):
+        code, st = _req(secured, f"/druid/v2/sql/statements/{qid}",
+                        user="alice", pw="secret")
+        if st.get("state") in ("SUCCESS", "FAILED", "CANCELED"):
+            break
+        time.sleep(0.1)
+    assert code == 200 and st["state"] == "SUCCESS"
+
+
 def test_spill_failure_raises_not_collects(engine, monkeypatch):
     """_SpilledResult only falls back to driver memory for
     schema-unsupported results; infrastructure spill failures re-raise

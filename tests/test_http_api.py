@@ -196,8 +196,9 @@ def test_statements_registry_bounded(server):
     result rows don't accumulate in driver memory forever."""
     import time
     st = server._httpd.statements
-    old_max = st.MAX_DONE
-    st.MAX_DONE = 3
+    reg = server.engine.tasks  # the cap lives on the task registry
+    old_max = reg.MAX_DONE
+    reg.MAX_DONE = 3
     try:
         ids = []
         for i in range(5):
@@ -214,7 +215,7 @@ def test_statements_registry_bounded(server):
         assert len(live) <= 4  # 3 retained terminal + the in-flight one
         assert ids[-1] in live  # newest survives
     finally:
-        st.MAX_DONE = old_max
+        reg.MAX_DONE = old_max
 
 
 def test_error_shapes(server):
@@ -564,7 +565,7 @@ def test_statements_spill_paged_no_driver_collect(server):
     assert status == 200 and len(rows) == 50000
     assert rows[0] == {"x": 200000} and rows[-1] == {"x": 249999}
     # the record holds a file-backed spill, not a row list
-    rec = server._httpd.statements._st[qid]
+    rec = server.engine.tasks.get(qid)
     assert rec["spill"]._mem is None and rec["spill"].files
     # eviction deletes the spill directory
     import os
