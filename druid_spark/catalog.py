@@ -52,6 +52,11 @@ DEFAULT_TIME_COLUMNS = {
 # range); re-registering a table drops its entries.
 SCAN_CACHE_ENTRIES = 64
 
+# A scan whose files are all local and total less than this many bytes
+# is read as one partition (see _sized). Every dashboard and ingest
+# input of perfbench is under 14 MB.
+ONE_TASK_SCAN_BYTES = 32 << 20
+
 _EPOCH = _dt.datetime(1970, 1, 1)
 _US = _dt.timedelta(microseconds=1)
 # time ranges are half-open [start, end) pairs of epoch microseconds;
@@ -110,6 +115,21 @@ def _part_ranges(part, ranges) -> list[tuple[str | None, str | None]]:
         return us
 
     return [(fmt_us(bucket_start(a)), fmt_us(b - 1)) for a, b in ranges]
+
+
+def local_sizes(files) -> list[int] | None:
+    """Byte sizes of Spark input `files`; None when one is not a local
+    (`file:`) file or cannot be sized, and the caller must then assume
+    the input is large."""
+    out = []
+    for f in files:
+        if not f.startswith("file:"):
+            return None
+        try:
+            out.append(os.path.getsize(unquote(urlparse(f).path)))
+        except OSError:
+            return None
+    return out
 
 
 def _utc_session(spark: SparkSession) -> bool:
@@ -200,10 +220,11 @@ class _Table(NamedTuple):
     whether it is `used` (not dropped), source `path`, `time_column`,
     partitioning `part` (set_partitioning), JSON hints and, once a
     path-backed table is read, its time timeline — the files `df` reads
-    (recorded once, with inputFiles()), each file's footer time bounds
-    when known (see _footer_bounds) and a reader giving `df` over a
-    subset of the files. Scans are cut from one _Table, so everything
-    they use belongs to the same registration."""
+    (recorded once, with inputFiles()), each file's size when all are
+    local (local_sizes), each file's footer time bounds when known (see
+    _footer_bounds) and a reader giving `df` over a subset of the
+    files. Scans are cut from one _Table, so everything they use
+    belongs to the same registration."""
     reg: int
     df: DataFrame | None = None
     path: str | None = None
@@ -211,6 +232,7 @@ class _Table(NamedTuple):
     part: tuple[str, str, str | None] | None = None
     json: dict[str, str] | None = None
     files: tuple[str, ...] | None = None
+    sizes: dict[str, int] | None = None
     bounds: tuple | None = None
     read: Callable[[list[str]], DataFrame] | None = None
     used: bool = True
@@ -295,6 +317,21 @@ def _time_source(columns: list[str], df: DataFrame,
             df.schema["__time"].dataType, T.TimestampType):
         return None
     return "__time" if "__time" in columns else time_column
+
+
+def _sized(t: _Table, files, df: DataFrame) -> DataFrame:
+    """`df`, a scan of record `t` over `files`, as one partition when
+    those files are local and total less than ONE_TASK_SCAN_BYTES. A
+    one-partition child satisfies every aggregate and sort
+    distribution, so a short query plans no exchange and runs as one
+    Spark task, where AQE would run each exchange as its own job
+    (DataFusion leaves inputs under repartition_file_min_size
+    unpartitioned for the same reason). Larger scans, and files that
+    are not local, keep the distributed plan."""
+    if t.sizes is None or sum(t.sizes[f] for f in files) \
+            >= ONE_TASK_SCAN_BYTES:
+        return df
+    return df.coalesce(1)
 
 
 def _overlapping(t: _Table, part, ranges) -> tuple | None:
@@ -452,17 +489,20 @@ class Catalog:
         caller still applies its exact time predicate. A partitioned
         table gets a partition-column range predicate, which Spark's
         partition pruning applies; a footer-bounded table is re-read
-        over the overlapping files only, with the registered schema; a
-        table without a timeline, or whose files all overlap, is the
-        registered DataFrame itself, as is every table outside a UTC
-        session (_utc_session)."""
+        over the overlapping files only, with the registered schema.
+        A table without a timeline is the registered DataFrame itself.
+        Any other scan (pruned, or whole when its files all overlap or
+        outside a UTC session, see _utc_session) is one partition when
+        its files are few local bytes (_sized)."""
         t = self._table(name)
         entry = self._pruned(name, t, ranges)
-        return t.df if entry is None else entry.df
+        if entry is not None:
+            return entry.df
+        return _sized(t, t.files, t.df) if t.part or t.bounds else t.df
 
     def _pruned(self, name: str, t: _Table, ranges) -> _Scan | None:
         """The scan-cache entry of scanning record `t` of `name` over
-        `ranges`; None when that is the registered DataFrame."""
+        `ranges`; None when that reads the whole table."""
         if ranges is None or not _utc_session(self.spark):
             return None
         ranges = [(a, b) for a, b in ranges if a < b]
@@ -472,7 +512,9 @@ class Catalog:
                 return None  # an unbounded range covers every partition
             return self._scans.get_or_build(
                 (name, t.reg, tuple(pr)),
-                lambda: _Scan(t.df.where(_part_predicate(t.part[0], pr))))
+                lambda: _Scan(_sized(
+                    t, _overlapping(t, t.part, ranges),
+                    t.df.where(_part_predicate(t.part[0], pr)))))
         files = _overlapping(t, None, ranges)
         if files is None or len(files) == len(t.files):
             return None
@@ -484,8 +526,10 @@ class Catalog:
         if not files:
             return t.df.where(F.lit(False))
         out = t.read(list(files))
-        # the registered DataFrame if the re-read differs in any way
-        return out if out.schema == t.df.schema else t.df
+        if out.schema != t.df.schema:
+            # the whole table if the re-read differs in any way
+            files, out = t.files, t.df
+        return _sized(t, files, out)
 
     @contextlib.contextmanager
     def scan_views(self):
@@ -542,9 +586,11 @@ class Catalog:
         known = (dict(zip(old.files, old.bounds))
                  if old is not None and old.bounds else {})
         files = tuple(sorted(df.inputFiles()))
+        sizes = local_sizes(files)
         column = _time_source(raw.columns, df, t.time_column) if bare else None
         return t._replace(
             df=df, files=files,
+            sizes=None if sizes is None else dict(zip(files, sizes)),
             bounds=_footer_bounds(files, column, known,
                                   _utc_session(self.spark)),
             read=lambda fs: _normalize(

@@ -21,6 +21,7 @@ versions/overshadowing.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import os
 import shutil
@@ -59,16 +60,15 @@ def _partition_dirs(path: str) -> list[tuple[str, int]]:
     return out
 
 
-def drop_chunks(catalog, ds: str,
-                drop: Callable[[dt.datetime, dt.datetime], bool]
-                ) -> list[tuple[str, dt.datetime]]:
-    """Delete the time chunks of table `ds` whose [start, end)
-    (chunk_interval) `drop` accepts, then commit the table: the step
-    retention rules and the kill task share. A chunk goes whole, the
-    unit Druid retires. Returns each dropped chunk's (dirname, start)."""
+def chunks_to_drop(catalog, ds: str,
+                   drop: Callable[[dt.datetime, dt.datetime], bool]
+                   ) -> list[tuple[str, dt.datetime]]:
+    """(dirname, start) of each time chunk of table `ds` whose
+    [start, end) (chunk_interval) `drop` accepts. A chunk goes whole,
+    the unit Druid retires."""
     path = _table_dir(catalog, ds)
     col, fmt, grain = catalog.partitioning(ds) or ("__dt", None, None)
-    dropped = []
+    out = []
     for d, _n in _partition_dirs(path):
         if not d.startswith(col + "="):
             continue
@@ -77,11 +77,19 @@ def drop_chunks(catalog, ds: str,
         except ValueError:
             continue
         if drop(start, end):
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-            dropped.append((d, start))
-    if dropped:
-        catalog.commit(ds, path)
-    return dropped
+            out.append((d, start))
+    return out
+
+
+def delete_chunks(catalog, ds: str, chunks) -> None:
+    """Delete `chunks` (chunks_to_drop) of table `ds`, then commit it:
+    the step retention rules and the kill task share."""
+    if not chunks:
+        return
+    path = _table_dir(catalog, ds)
+    for d, _start in chunks:
+        shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+    catalog.commit(ds, path)
 
 
 def drop_interval(catalog, ds: str, interval: str) -> list[str]:
@@ -90,8 +98,9 @@ def drop_interval(catalog, ds: str, interval: str) -> list[str]:
     stays, as with IntervalDropRule. Returns the dropped partition
     values."""
     a, b = _iso_interval(interval)
-    return [d.split("=", 1)[1] for d, _start in
-            drop_chunks(catalog, ds, lambda s, e: a <= s and e <= b)]
+    chunks = chunks_to_drop(catalog, ds, lambda s, e: a <= s and e <= b)
+    delete_chunks(catalog, ds, chunks)
+    return [d.split("=", 1)[1] for d, _start in chunks]
 
 
 def _compact_partition(catalog, ds: str, part: str, target: int) -> None:
@@ -163,7 +172,7 @@ class RetentionDuty(_Duty):
     for the HTTP surface). Rules per datasource are evaluated in order,
     FIRST MATCH WINS; a partition matched by a load rule is retained,
     by a drop rule deleted (the markAsUnused + kill analog:
-    drop_chunks removes its files and commits the table). No matching
+    delete_chunks removes its files and commits the table). No matching
     rule = retained (the cluster default rule is loadForever).
 
     Supported rule types: loadForever, dropForever,
@@ -231,25 +240,43 @@ class RetentionDuty(_Duty):
         return "load"  # cluster default rule: loadForever
 
     def run_once(self) -> list[dict[str, Any]]:
-        """One rule pass: drop every partition whose first matching
-        rule is a drop rule (drop_chunks commits each touched table);
-        record kill tasks in sys.tasks."""
+        """One rule pass: drop every chunk whose first matching rule is
+        a drop rule, datasource by datasource. Each dropped chunk is one
+        kill task of the engine's task registry, running from the
+        delete to the table's commit. A datasource whose drop fails
+        ends in FAILED kill tasks with the error (one, if its rules
+        failed before any chunk was chosen), and the pass goes on."""
         now = self._now or dt.datetime.now(dt.timezone.utc).replace(
             tzinfo=None)
         dropped = []
-        cat = self.engine.catalog
+        cat, tasks = self.engine.catalog, self.engine.tasks
+
+        def tid(ds, value):
+            return f"kill_{ds}_{value}_{uuid.uuid4().hex[:6]}"
+
         with self._lock:
             for ds, rules in self.rules.items():
                 if not os.path.isdir(cat.source_path(ds) or ""):
                     continue
-                for d, start in drop_chunks(
+                try:
+                    chunks = chunks_to_drop(
                         cat, ds, lambda s, e: self._decide(rules, s, e, now)
-                        == "drop"):
-                    tid = (f"kill_{ds}_{d.split('=', 1)[1]}_"
-                           f"{uuid.uuid4().hex[:6]}")
-                    self.engine.record_task(tid, "kill", ds, "SUCCESS")
-                    dropped.append({"dataSource": ds, "partition": d,
-                                    "start": start.isoformat()})
+                        == "drop")
+                except Exception as e:
+                    tasks.record(tid(ds, "rules"), "kill", ds, "FAILED",
+                                 error_msg=str(e))
+                    continue
+                try:
+                    with contextlib.ExitStack() as kills:
+                        for d, _start in chunks:
+                            kills.enter_context(tasks.track(
+                                tid(ds, d.split("=", 1)[1]), "kill", ds))
+                        delete_chunks(cat, ds, chunks)
+                except Exception:
+                    continue  # each kill recorded FAILED with the error
+                dropped += [{"dataSource": ds, "partition": d,
+                             "start": start.isoformat()}
+                            for d, start in chunks]
         return dropped
 
 

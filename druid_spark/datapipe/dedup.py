@@ -24,6 +24,8 @@ import weakref
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from druid_spark.catalog import local_sizes
+
 
 def normalize(text: Column) -> Column:
     return F.lower(F.regexp_replace(F.trim(text), r"\s+", " "))
@@ -92,29 +94,20 @@ def _spread(df: DataFrame) -> DataFrame:
         files = df.inputFiles()
     except Exception:
         files = []
-    if files and all(f.startswith("file:") for f in files):
-        import os
-        from urllib.parse import unquote, urlparse
-        total = 0
-        for f in files:
-            try:
-                total += os.path.getsize(unquote(urlparse(f).path))
-            except OSError:
-                total = -1
-                break
-        if total >= 0:
-            try:
-                mpb = _parse_bytes(
-                    spark.conf.get("spark.sql.files.maxPartitionBytes"),
-                    128 * 1024 * 1024)
-            except Exception:
-                mpb = 128 * 1024 * 1024
-            est = total // max(mpb, 1) + 1
-            if not all(f.lower().endswith(_SPLITTABLE_EXT) for f in files):
-                est = min(est, len(files))
-            if est >= target:
-                return df
-            return df.repartition(target)
+    sizes = local_sizes(files) if files else None
+    if sizes is not None:
+        try:
+            mpb = _parse_bytes(
+                spark.conf.get("spark.sql.files.maxPartitionBytes"),
+                128 * 1024 * 1024)
+        except Exception:
+            mpb = 128 * 1024 * 1024
+        est = sum(sizes) // max(mpb, 1) + 1
+        if not all(f.lower().endswith(_SPLITTABLE_EXT) for f in files):
+            est = min(est, len(files))
+        if est >= target:
+            return df
+        return df.repartition(target)
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
@@ -202,20 +195,10 @@ def _input_bytes(df: DataFrame) -> int | None:
     feeds it (in-memory data), None when some input is not a local file
     or cannot be sized (then the caller must assume large)."""
     try:
-        files = df.inputFiles()
+        sizes = local_sizes(df.inputFiles())
     except Exception:
         return None
-    import os
-    from urllib.parse import unquote, urlparse
-    total = 0
-    for f in files:
-        if not f.startswith("file:"):
-            return None
-        try:
-            total += os.path.getsize(unquote(urlparse(f).path))
-        except OSError:
-            return None
-    return total
+    return None if sizes is None else sum(sizes)
 
 
 def _ordered_pairs(df: DataFrame, *cols: str) -> DataFrame:

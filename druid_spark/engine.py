@@ -540,12 +540,13 @@ class DruidSparkEngine:
             if _SQL_VIEWS_STAMP.get(self.spark) != stamp:
                 for name in self.catalog.tables():
                     try:
-                        df = self.catalog.table(name)
+                        # the whole-table scan: one partition when small
+                        df = self.catalog.scan(name)
                     except Exception:
                         # a bad registration (missing/corrupt path) must
                         # not take down SQL over every OTHER datasource;
                         # querying the bad table itself still surfaces the
-                        # real error via catalog.table()
+                        # real error via catalog.scan()
                         continue
                     if _IDENT_RE.fullmatch(name):
                         df.createOrReplaceTempView(name)

@@ -231,8 +231,10 @@ def _floor_millis(ts: Column, width_ms: int, origin: str | None = None) -> Colum
 def spine(spark, granularity: Any, t0, t1):
     """Generate the complete bucket spine [t0, t1) for zero-filled
     timeseries (reference: TimeseriesQueryQueryToolChest zero-filling).
-    Uses `sequence()` — a single-task generated relation, negligible cost
-    vs the scan it left-joins against."""
+    Uses `sequence()`, generated in the JVM: a relation built from a
+    Python list plans as a Scan ExistingRDD and costs far more. The
+    spine is not free: joined to an aggregate it costs three Spark
+    jobs, so the timeseries fill unions it in one partition."""
     from pyspark.sql import functions as F  # noqa: F811
 
     if isinstance(granularity, str) and granularity.lower() in _TRUNC_UNIT:

@@ -6,9 +6,13 @@ filter(time range) → groupBy(date_trunc(__time)) → agg — a partial/final
 HashAggregate pair with the time filter pushed to the Parquet scan.
 
 Zero-filling of empty buckets (the toolchest's behavior unless
-context.skipEmptyBuckets) is a left join against a generated `sequence()`
-spine — negligible cost (single-task generated relation) vs the scan.
-Empty buckets get count-like aggregators coalesced to 0, others null.
+context.skipEmptyBuckets) unions the aggregate with a generated
+`sequence()` spine of null rows in one partition and keeps, per
+bucket, the first non-null value of each aggregator, so the fill and
+the final sort run in the aggregate's last stage. (A join to the
+spine costs three Spark jobs more: the join's exchanges and the range
+sort's sampling job.) Empty buckets get count-like aggregators
+coalesced to 0, others null.
 """
 
 from __future__ import annotations
@@ -117,14 +121,20 @@ def _zero_fill(engine, q, gran, out: DataFrame) -> DataFrame:
                         b.replace("T", " ").rstrip("Z"))
     except ValueError:
         return out
-    joined = spine.join(out, "__time", "left")
+    # one row per bucket: the aggregate's, else the spine's null row;
+    # in one partition the grouping and the final sort need no exchange
+    schema = out.schema
+    aggs = [f.name for f in schema.fields if f.name != "__time"]
+    nulls = spine.select("__time", *[
+        F.lit(None).cast(schema[c].dataType).alias(c) for c in aggs])
     # count-ish aggregators are 0 on empty buckets, others stay null
-    fills = {}
-    for agg in q.get("aggregations") or []:
-        if agg["type"] in ("count", "longSum", "hyperUnique", "cardinality"):
-            name = agg.get("name", agg["type"])
-            fills[name] = F.coalesce(F.col("`" + name + "`"), F.lit(0)).alias(name)
-    if fills:
-        joined = joined.select(
-            *[fills.get(c, F.col("`" + c + "`")).alias(c) for c in joined.columns])
-    return joined
+    zero = {agg.get("name", agg["type"])
+            for agg in q.get("aggregations") or []
+            if agg["type"] in ("count", "longSum", "hyperUnique",
+                               "cardinality")}
+    firsts = []
+    for c in aggs:
+        v = F.first(F.col("`" + c + "`"), ignorenulls=True)
+        firsts.append((F.coalesce(v, F.lit(0)) if c in zero else v).alias(c))
+    return (out.unionByName(nulls).coalesce(1)
+            .groupBy("__time").agg(*firsts))

@@ -157,18 +157,27 @@ class TaskRegistry:
         """Record task `task_id` ACCEPTED with the surface's own
         `fields`, then run `body(record)` on a daemon thread inside
         `track` and under the scheduler's job group `task_id`; `done`
-        gets the record once the task has ended. KeyError if the id is
-        taken."""
+        gets the record once the task has ended. A cancel that lands
+        before the job group is set skips the body. KeyError if the id
+        is taken."""
         with self._lock:
             if task_id in self._recs:
                 raise KeyError(task_id)
             rec = self._upsert(task_id, task_type, datasource, "ACCEPTED",
                                **fields)
 
+        def guarded():
+            # runs in the scheduler's worker once the job group is set:
+            # a cancel flags the record before it cancels the group, so
+            # one that landed before the group existed stops the body here
+            if rec["cancel"]:
+                raise QueryCanceledError(task_id)
+            return body(rec)
+
         def run():
             try:
                 with self.track(task_id, task_type, datasource):
-                    scheduler.submit(task_id, lambda: body(rec))
+                    scheduler.submit(task_id, guarded)
             except Exception:
                 pass  # track recorded how the task ended
             if done is not None:

@@ -356,3 +356,49 @@ def test_streaming_handoff_then_compaction(eng, spark, tmp_path):
     assert ing.view().count() == total_before
     assert eng.sql("SELECT COUNT(*) AS n FROM sc_ds").first()["n"] \
         == total_before
+
+
+def test_retention_failed_drop_recorded_and_pass_goes_on(eng, monkeypatch):
+    """A datasource whose drop fails — its rules raise, or its commit
+    does — ends as one FAILED kill task with the error, and the pass
+    still drops the next datasource's chunks as SUCCESS kills."""
+    import datetime as dt
+    from druid_spark.coordinator import RetentionDuty
+    for name in ("ev_bad", "ev_ok"):
+        eng.sql(f"REPLACE INTO {name} OVERWRITE ALL "
+                "SELECT ts AS __time, value FROM events PARTITIONED BY DAY")
+    day1 = [{"type": "dropByInterval", "interval": "2024-01-01/2024-01-02"}]
+    day2 = [{"type": "dropByInterval", "interval": "2024-01-02/2024-01-03"}]
+
+    def kills(ds):
+        return [r for r in eng.tasks
+                if r["type"] == "kill" and r["datasource"] == ds]
+
+    duty = RetentionDuty(eng, now=dt.datetime(2024, 2, 1))
+    # a period rule without its period
+    duty.set_rules("ev_bad", [{"type": "dropBeforeByPeriod"}])
+    duty.set_rules("ev_ok", day1)
+    dropped = duty.run_once()
+    assert [(d["dataSource"], d["partition"]) for d in dropped] == [
+        ("ev_ok", "__dt=2024-01-01")]
+    [bad] = kills("ev_bad")
+    assert bad["status"] == "FAILED" and "period" in bad["error_msg"]
+    [ok] = kills("ev_ok")
+    assert ok["status"] == "SUCCESS"
+
+    commit = eng.catalog.commit
+
+    def failing_commit(name, *a, **kw):
+        if name == "ev_bad":
+            raise OSError("commit failed")
+        return commit(name, *a, **kw)
+
+    monkeypatch.setattr(eng.catalog, "commit", failing_commit)
+    duty.set_rules("ev_bad", day1)
+    duty.set_rules("ev_ok", day2)
+    dropped = duty.run_once()
+    assert [d["dataSource"] for d in dropped] == ["ev_ok"]
+    failed = [r for r in kills("ev_bad") if r["task_id"] != bad["task_id"]]
+    assert len(failed) == 1 and failed[0]["status"] == "FAILED"
+    assert failed[0]["error_msg"] == "commit failed"
+    assert [r["status"] for r in kills("ev_ok")] == ["SUCCESS"] * 2

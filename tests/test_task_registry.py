@@ -155,3 +155,42 @@ def test_registry_concurrent_writers_keep_invariants():
     assert sorted(r["task_id"] for r in recs if r["status"] == "RUNNING") \
         == sorted(f"run-{w}" for w in range(8))
     assert not any(r["status"] == "ACCEPTED" for r in recs)
+
+
+def test_cancel_before_job_group_skips_body(spark):
+    """A cancel that lands after the task reads RUNNING but before the
+    scheduler's worker sets the job group (here: while a wrapped submit
+    waits) stops the body before it runs a Spark job."""
+    import threading
+    from druid_spark.scheduler import QueryScheduler
+    from druid_spark.tasks import TaskRegistry
+
+    reg, sched = TaskRegistry(), QueryScheduler(spark)
+    submit, waiting, go = sched.submit, threading.Event(), threading.Event()
+
+    def slow_submit(qid, fn, **kw):
+        waiting.set()
+        assert go.wait(30)
+        return submit(qid, fn, **kw)
+
+    sched.submit = slow_submit
+    ran, done = [], threading.Event()
+
+    def body(_rec):
+        ran.append(True)
+        return spark.range(100).count()
+
+    reg.run_async("early-cancel", "query", None, body, sched,
+                  done=lambda _rec: done.set())
+    assert waiting.wait(30)
+    assert reg.get("early-cancel")["status"] == "RUNNING"
+    # the server's order: flag the record, then cancel the job group
+    assert reg.cancel("early-cancel")
+    sched.cancel("early-cancel")
+    go.set()
+    assert done.wait(60)
+    assert ran == []
+    assert reg.get("early-cancel")["status"] == "CANCELED"
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert list(sc.statusTracker().getJobIdsForGroup("early-cancel")) == []

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -49,6 +50,21 @@ def file_pruning_failure(engine, query: dict, want: list[str]) -> str | None:
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def jobs_of(spark, df) -> int:
+    """Spark jobs that streaming df's rows (toLocalIterator, as the
+    HTTP server does) runs."""
+    sc = spark.sparkContext
+    group = f"plans-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "check_plans")
+    try:
+        for _row in df.toLocalIterator():
+            pass
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def formatted(df) -> str:
@@ -430,6 +446,43 @@ def main():
     df = pack_shards(docs, "ntok", budget=100_000)
     check("shard_pack_distributed", df, ["Window"],
           ["Exchange SinglePartition", "CartesianProduct"])
+
+    # 25. a scan whose local files total under ONE_TASK_SCAN_BYTES is
+    # one partition: an aggregate over it, native or SQL, plans no
+    # exchange and streams in one Spark job
+    from druid_spark import catalog as cat_mod
+    one_task = {
+        "queryType": "groupBy", "dataSource": "lineitem",
+        "granularity": "all", "dimensions": ["l_returnflag"],
+        "aggregations": [{"type": "count", "name": "n"}]}
+    bad = []
+    for kind, df in (("native", engine.query(one_task)),
+                     ("sql", engine.sql(
+                         "SELECT l_returnflag, COUNT(*) AS n FROM lineitem "
+                         "GROUP BY l_returnflag ORDER BY n"))):
+        jobs = jobs_of(spark, df)
+        if "Exchange" in plan_of(df) or jobs != 1:
+            bad.append(f"{kind}: {jobs} jobs")
+    if not bad:
+        print("PASS small_scan_one_task")
+    else:
+        failures.append("small_scan_one_task")
+        print(f"FAIL small_scan_one_task: {bad}")
+
+    # 26. above the constant (here: a constant of 0 bytes) the same
+    # aggregate keeps its distributed plan, with its exchange
+    small = cat_mod.ONE_TASK_SCAN_BYTES
+    cat_mod.ONE_TASK_SCAN_BYTES = 0
+    try:
+        engine.catalog.register_table(
+            "plans_big", os.path.join(sf_dir, "lineitem.parquet"),
+            time_column="l_shipdate")
+        check("large_scan_distributed",
+              engine.query({**one_task, "dataSource": "plans_big"}),
+              ["Exchange"])
+        engine.catalog.drop_table("plans_big")
+    finally:
+        cat_mod.ONE_TASK_SCAN_BYTES = small
 
     print(f"\n{'ALL PLAN CHECKS PASS' if not failures else failures}")
     return 1 if failures else 0
