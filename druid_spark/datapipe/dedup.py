@@ -13,13 +13,17 @@ Scale design (100 TB):
   verified with exact Jaccard to kill false positives.
 - SimHash buckets on signature chunks (pigeonhole: hamming ≤ k pairs
   share at least one of k+1 chunks) → equi-join, verify with bit_count.
-All stages are built-in Column expressions; no Python in the data path.
+Shingles and hashes are built-in Column expressions. Signature folds
+run in Arrow-batched numpy UDFs, and MinHash-LSH over local files
+under _MINHASH_DRIVER_MAX_BYTES (a shard, not a corpus) collects its
+hashes once and bands, buckets and verifies in numpy on the driver.
 """
 
 from __future__ import annotations
 
 import threading
 import weakref
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -189,6 +193,23 @@ _ORDERED_PAIRS_INPUT_MAX_BYTES = 256 << 20
 # big for the driver propagates labels on the executors.
 _CC_DRIVER_MAX_EDGES = 1 << 20
 
+# minhash_lsh_pairs bands and verifies on the driver when its input is
+# local files totalling under this many bytes. The driver path shingles
+# and hashes in one task, so it wins only while the distributed plan's
+# fixed cost outweighs its parallelism: on 4 cores, perfbench-like
+# parquet of 0.7 and 1.07 MB ran 652 vs 1019 and 728 vs 846 ms (driver
+# vs distributed, median of 5), 1.4 MB ran even and 2 MB 1152 vs 937 ...
+_MINHASH_DRIVER_MAX_BYTES = 1 << 20
+# ... and its buckets hold at most this many candidate pairs (the sum
+# of m(m-1)/2 over every band's buckets of m documents, 32 MB of pair
+# codes), so a duplicate-heavy input cannot expand O(m^2) on the driver.
+# The guard bounds memory, not time: near it the driver path is still
+# the faster one. 4,000 one-word edits of 20 texts (3.6M counted, 398k
+# distinct pairs) ran 4.7 s against 17.4 s distributed, and 12 groups
+# of 1,000 texts sharing 60 of 90 words (5.3M counted, no pair over
+# 0.8) 7.3 s against 59.6 s
+_MINHASH_DRIVER_MAX_CANDIDATES = 1 << 22
+
 
 def _input_bytes(df: DataFrame) -> int | None:
     """Total size of the local files feeding df's scan: 0 when no file
@@ -253,8 +274,24 @@ def _nonblank(text_col: str) -> Column:
     return F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
 
 
+def _documents(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, text_col) of df's nonblank documents."""
+    return (df.select(F.col(id_col).alias("id"), F.col(text_col))
+            .where(_nonblank(text_col)))
+
+
+def _shingled(docs: DataFrame, text_col: str, k: int) -> DataFrame:
+    """(id, sh): each document's distinct word k-shingles. The token
+    array is staged as its own column, so the tokenizing split runs
+    once per row rather than once per reference in the shingle CASE
+    (the signature-build stage measured 6.7 s -> 3.4 s at 50k docs,
+    identical output)."""
+    return (docs.selectExpr("id", _tokens_sql(f"`{text_col}`") + " AS __toks")
+            .selectExpr("id", _shingles_sql("__toks", k) + " AS sh"))
+
+
 # session -> {key: pinned frame}; the lock makes _persist_scoped's
-# read-modify-write atomic against the prewarm thread and server threads
+# read-modify-write atomic against concurrent server threads
 _SIG_CACHE_REGISTRY = weakref.WeakKeyDictionary()
 _SIG_CACHE_LOCK = threading.Lock()
 
@@ -304,10 +341,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     as ONE partition (inputs > 256 MB switch to a distributed range
     sort — see _ordered_pairs).
     """
-    docs = (_spread(df.select(F.col(id_col).alias("id"), F.col(text_col))
-                    .where(_nonblank(text_col)))
-            .selectExpr("id", _tokens_sql(f"`{text_col}`") + " AS __toks")
-            .selectExpr("id", _shingles_sql("__toks", k) + " AS sh")
+    docs = (_shingled(_spread(_documents(df, text_col, id_col)), text_col, k)
             .select("id", "sh", F.size("sh").alias("n_sh")))
     # both inverted-index join sides derive from this frame — without
     # the persist the tokenize+shingle chain executes once PER SIDE
@@ -352,6 +386,20 @@ def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
         F.transform(pairs, lambda p: p.h1 + i * p.h2)))
 
 
+def _km_min_fold(h1, h2, starts, num_hashes: int):
+    """(len(starts), num_hashes) int64 signatures: row r is the min over
+    its shingles of h1 + i*h2, where row r's shingles are the slice of
+    the concatenated h1/h2 from starts[r] to the next start. Every row
+    must be non-empty. numpy's int64 arithmetic wraps like Java long."""
+    import numpy as np
+    col = h1.copy()
+    sig = np.empty((len(starts), num_hashes), dtype=np.int64)
+    for i in range(num_hashes):
+        sig[:, i] = np.minimum.reduceat(col, starts)
+        col += h2
+    return sig
+
+
 def _km_fold_udf(num_hashes: int):
     """Arrow-batched Kirsch-Mitzenmacher min fold:
     sig[i] = min over shingles of (h1 + i*h2), int64 wraparound.
@@ -390,12 +438,7 @@ def _km_fold_udf(num_hashes: int):
                                  for a in h2s[nz]])
             starts = np.zeros(int(nz.sum()), dtype=np.int64)
             np.cumsum(lens[nz][:-1], out=starts[1:])
-            col = H1.copy()
-            sub = np.empty((int(nz.sum()), num_hashes), dtype=np.int64)
-            for i in range(num_hashes):
-                sub[:, i] = np.minimum.reduceat(col, starts)
-                col += H2
-            out[nz] = sub
+            out[nz] = _km_min_fold(H1, H2, starts, num_hashes)
         res = pd.Series(list(out))
         if (~nz).any():
             # minhash_signature: array_min over an empty array is NULL
@@ -425,33 +468,48 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     """Near-dup pairs via MinHash banding, verified with exact Jaccard.
 
     bands=16 × rows=4 at threshold 0.8 → candidate-capture probability
-    1-(1-t^4)^16 ≈ 0.986 at t=0.8, ≈0.9996 at t=0.9. Join key is
-    (band, band_hash) → pure equi-join shuffle, sub-quadratic.
+    1-(1-t^4)^16 ≈ 0.986 at t=0.8, ≈0.9996 at t=0.9. A candidate is a
+    pair of documents that share one band's signature slice.
 
-    Scale shape: signatures are computed ONCE and persisted (the
-    self-join would otherwise recompute them per side); the band join
-    carries only (id, band, bh) — shingle arrays are re-attached only to
-    the few surviving candidate pairs for verification.
+    Two paths return the same rows, order and schema:
+    - Driver: df's input is local files totalling under
+      _MINHASH_DRIVER_MAX_BYTES (1 MiB; a 2,000-document shard is
+      0.7 MB). One Spark job collects (id, shingles, h1, h2) as Arrow;
+      the signature fold, banding, bucketing and exact Jaccard run in
+      numpy (see _minhash_on_driver), and the result is a one-partition
+      local relation. The distributed plan runs ~10 jobs whatever the
+      input size, which cost a shard more than its computation. The
+      path steps aside (to the distributed plan) when the buckets hold
+      more than _MINHASH_DRIVER_MAX_CANDIDATES pairs, counted before any
+      is expanded, when an id repeats, or when ids are neither integral
+      nor plain strings.
+    - Distributed: every other input, including in-memory frames and
+      files that are not local (their size reads 0 or None).
+      Signatures are computed ONCE and persisted (the self-join would
+      otherwise recompute them per side); candidates come from one
+      groupBy on (band, slice) (see _bucket_pairs), and shingle arrays
+      are re-attached only to the surviving candidate pairs for
+      verification. Small pair lists arrive as ONE partition (inputs
+      > 256 MB switch to a distributed range sort — see
+      _ordered_pairs).
 
-    Output is totally ordered by (id_a, id_b); small pair lists arrive
-    as ONE partition (inputs > 256 MB switch to a distributed range
-    sort — see _ordered_pairs).
+    Output is totally ordered by (id_a, id_b).
     """
+    docs = _documents(df, text_col, id_col)
+    size = _input_bytes(df)
+    if size and size < _MINHASH_DRIVER_MAX_BYTES:
+        pairs = _minhash_on_driver(docs, text_col, k, num_hashes, bands,
+                                   threshold)
+        if pairs is not None:
+            return pairs
     rows_per_band = num_hashes // bands
-    # cheap scan-pushable nonblank filter + staged token column (r13):
-    # the old `where(size(sh) > 0)` was pushed below the repartition and
-    # re-evaluated the whole shingle tree on the raw scan; the staged
-    # `__toks` column makes the tokenizing split run once per row
-    # instead of once per CASE-branch reference (the signature-build
-    # stage measured 6.7 s -> 3.4 s at 50k docs, identical output)
-    # staging via parsed SQL fragments (see _tokens_sql) with the
-    # Arrow min fold of minhash_signature_fast inlined on the staged
-    # (h1, h2) transforms — same expressions, ~60 ms less driver-side
-    # build per query
-    sigs = (_spread(df.select(F.col(id_col).alias("id"), F.col(text_col))
-                    .where(_nonblank(text_col)))
-            .selectExpr("id", _tokens_sql(f"`{text_col}`") + " AS __toks")
-            .selectExpr("id", _shingles_sql("__toks", k) + " AS sh")
+    # cheap scan-pushable nonblank filter (r13): the old
+    # `where(size(sh) > 0)` was pushed below the repartition and
+    # re-evaluated the whole shingle tree on the raw scan. Staging via
+    # parsed SQL fragments (see _tokens_sql) with the Arrow min fold of
+    # minhash_signature_fast inlined on the staged (h1, h2) transforms
+    # — same expressions, ~60 ms less driver-side build per query
+    sigs = (_shingled(_spread(docs), text_col, k)
             .selectExpr("id", "sh",
                         "transform(sh, s -> xxhash64(s)) AS __h1",
                         "transform(sh, s -> xxhash64(s, 1)) AS __h2")
@@ -571,6 +629,146 @@ def _bucket_pairs(banded: DataFrame) -> DataFrame:
     return (pairs.select("p.id_a", "p.id_b")
             .repartition("id_a")
             .dropDuplicates(["id_a", "id_b"]))
+
+
+_JACCARD_PLACES = Decimal("0.0001")
+
+
+def _minhash_on_driver(docs: DataFrame, text_col: str, k: int,
+                       num_hashes: int, bands: int,
+                       threshold: float) -> DataFrame | None:
+    """Driver half of minhash_lsh_pairs over the (id, text) frame docs,
+    or None when the input must take the distributed path instead.
+
+    One Arrow collect of (id, sh, h1, h2) from the distributed path's
+    own shingle and xxhash64 expressions, then in numpy: the
+    Kirsch-Mitzenmacher fold (_km_min_fold), one np.unique per band
+    over the raw signature slices (documents without shingles never
+    band), the guard on Σ m(m-1)/2, pair expansion, and the exact
+    Jaccard of every distinct candidate. Jaccard is rounded half up
+    from the shortest decimal form of the double, as Spark's
+    round(x, 4) does (Python's round() goes half to even: 25/32 =
+    0.78125 must read 0.7813)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import (DoubleType, IntegralType, StringType,
+                                   StructField, StructType)
+
+    id_type = docs.schema["id"].dataType
+    rows = num_hashes // bands
+    if rows == 0 or not (isinstance(id_type, IntegralType)
+                         or id_type == StringType()):
+        return None
+    tbl = (_shingled(docs.where(F.col("id").isNotNull()), text_col, k)
+           .selectExpr("id", "sh",
+                       "transform(sh, s -> xxhash64(s)) AS h1",
+                       "transform(sh, s -> xxhash64(s, 1)) AS h2")
+           .toArrow())
+    if pc.count_distinct(tbl["id"]).as_py() != tbl.num_rows:
+        return None  # the verify join pairs every copy of a repeated id
+    # row order = id order, so a pair of rows i < j is (id_a, id_b)
+    ids, sh, h1, h2 = (c.combine_chunks() for c in
+                       tbl.take(pc.sort_indices(tbl["id"])).columns)
+    lens = pc.list_value_length(sh).to_numpy().astype(np.int64)
+    off = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=off[1:])
+    has = np.flatnonzero(lens)
+    a = b = np.zeros(0, dtype=np.int64)
+    if len(has):
+        sig = _km_min_fold(pc.list_flatten(h1).to_numpy(),
+                           pc.list_flatten(h2).to_numpy(),
+                           off[has], num_hashes)
+        buckets = []
+        for band in range(bands):
+            key = np.ascontiguousarray(sig[:, band * rows:(band + 1) * rows])
+            _, inv, cnt = np.unique(key.view(f"V{8 * rows}").ravel(),
+                                    return_inverse=True, return_counts=True)
+            buckets.append((inv, cnt))
+        if sum(int((c * (c - 1) // 2).sum())
+               for _, c in buckets) > _MINHASH_DRIVER_MAX_CANDIDATES:
+            return None
+        a, b = np.divmod(np.unique(np.concatenate(
+            [_pairs_in_buckets(inv, cnt) for inv, cnt in buckets])),
+            len(has))
+        a, b = has[a], has[b]
+    inter = _intersections(
+        pc.dictionary_encode(pc.list_flatten(sh)).indices.to_numpy(),
+        off, a, b)
+    jac = inter / (lens[a] + lens[b] - inter)
+    # rounding moves a value by at most 5e-5, so only these can pass
+    near = np.flatnonzero(jac >= threshold - 1e-4)
+    rounded = np.array(
+        [float(Decimal(repr(x)).quantize(_JACCARD_PLACES, ROUND_HALF_UP))
+         for x in jac[near].tolist()], dtype=np.float64)
+    keep = rounded >= threshold
+    sel = near[keep]
+    out = pa.table({"id_a": ids.take(a[sel]), "id_b": ids.take(b[sel]),
+                    "jaccard": pa.array(rounded[keep], pa.float64())})
+    schema = StructType([StructField("id_a", id_type, False),
+                         StructField("id_b", id_type, False),
+                         StructField("jaccard", DoubleType())])
+    return docs.sparkSession.createDataFrame(out, schema).coalesce(1)
+
+
+def _pairs_in_buckets(inv, cnt):
+    """i * n + j for every pair of rows i < j that share a bucket, given
+    each of the n rows' bucket (inv) and each bucket's size (cnt), as
+    np.unique returns them."""
+    import numpy as np
+    members = np.argsort(inv, kind="stable")  # bucket by bucket, i < j
+    pos = np.arange(len(members))
+    # members after each one in its bucket: it pairs with each of them
+    later = (np.cumsum(cnt) - 1)[inv[members]] - pos
+    step = (np.arange(int(later.sum()))
+            - np.repeat(np.cumsum(later) - later, later))
+    second = members[np.repeat(pos + 1, later) + step]
+    return np.repeat(members, later) * len(inv) + second
+
+
+# codes of b rows gathered per round of _intersections (32 MB of indices)
+_INTERSECT_ROUND_CODES = 1 << 22
+
+
+def _intersections(codes, off, a, b):
+    """|S_a ∩ S_b| for each row pair (a[p], b[p]), where row r's set is
+    codes[off[r]:off[r + 1]] (non-empty, no code twice), with the pairs
+    sorted by a. A round takes the pairs of up to 64 a rows: bit s of
+    marks[c] says the round's s-th a row holds code c, so one gather of
+    marks over the b rows' codes counts every pair's shared codes."""
+    import numpy as np
+    inter = np.zeros(len(a), dtype=np.int64)
+    marks = np.zeros(int(codes.max(initial=0)) + 1, dtype=np.uint64)
+    lens = np.diff(off)
+    run = np.flatnonzero(np.diff(a, prepend=-1))  # each a's first pair
+    cum = np.cumsum(lens[b])
+    lo = 0
+    while lo < len(a):
+        k = int(np.searchsorted(run, lo, "right")) + 63
+        hi = min(int(run[k]) if k < len(run) else len(a),
+                 max(lo + 1, int(np.searchsorted(
+                     cum, (cum[lo - 1] if lo else 0)
+                     + _INTERSECT_ROUND_CODES, "right"))))
+        rows, slot = np.unique(a[lo:hi], return_inverse=True)
+        own = codes[_ranges(off[rows], lens[rows])]
+        np.bitwise_or.at(marks, own, np.repeat(
+            np.left_shift(np.uint64(1), np.arange(len(rows),
+                                                  dtype=np.uint64)),
+            lens[rows]))
+        seg = lens[b[lo:hi]]
+        hit = (marks[codes[_ranges(off[b[lo:hi]], seg)]]
+               >> np.repeat(slot.astype(np.uint64), seg)) & np.uint64(1)
+        inter[lo:hi] = np.add.reduceat(hit, np.cumsum(seg) - seg)
+        marks[own] = 0
+        lo = hi
+    return inter
+
+
+def _ranges(starts, lens):
+    """The concatenated index ranges starts[i] .. starts[i] + lens[i]."""
+    import numpy as np
+    return (np.repeat(starts - (np.cumsum(lens) - lens), lens)
+            + np.arange(int(lens.sum())))
 
 
 # ---------------------------------------------------------------- SimHash
@@ -1004,61 +1202,12 @@ def remove_boilerplate_lines(df: DataFrame, text_col: str = "text",
                     F.coalesce("clean_text", F.lit("")).alias("clean_text")))
 
 
-_PREWARM_LOCK = None
-_PREWARM_STAMP = None
-
-
-def prewarm_datapipe(spark) -> None:
-    """Kick off a once-per-session background warm of the dedup hot
-    path (VERDICT r13 #4): the first real minhash query on a cold JVM
-    paid ~5-6 s for Python-UDF worker spawn + Arrow serializer init +
-    codegen of the large shingle/band/fold expressions. A 6-row
-    pipeline on a daemon thread compiles the same generated classes
-    and spawns the same reusable Python workers while the engine is
-    still registering tables, so the first interactive dedup query
-    lands warm. Same pattern as functions.register's prewarm: a
-    session-scoped stamp + lock make it idempotent; results are
-    discarded (nothing is cached for any real input — _persist_scoped
-    evicts the 6-row signature cache on the first real call)."""
-    global _PREWARM_LOCK, _PREWARM_STAMP
-    import threading as _threading
-    import weakref as _weakref
-    if _PREWARM_LOCK is None:
-        _PREWARM_LOCK = _threading.Lock()
-        _PREWARM_STAMP = _weakref.WeakKeyDictionary()
-    with _PREWARM_LOCK:
-        if _PREWARM_STAMP.get(spark) is not None:
-            return
-        _PREWARM_STAMP[spark] = False  # reserved; thread set below
-
-    def _warm():
-        try:
-            docs = spark.createDataFrame(
-                [(i, "alpha beta gamma delta epsilon zeta eta theta "
-                     f"iota kappa warm{i}") for i in range(6)],
-                "doc_id long, text string")
-            minhash_lsh_pairs(docs, threshold=0.99).collect()
-        except Exception:
-            pass  # warm-up is best-effort; real queries are unaffected
-
-    t = _threading.Thread(target=_warm, name="druid-datapipe-prewarm",
-                          daemon=True)
-    with _PREWARM_LOCK:
-        _PREWARM_STAMP[spark] = t
-    t.start()
-
-
 def join_datapipe_prewarm(spark, timeout: float | None = 60.0) -> None:
-    """Block until the background datapipe prewarm (if any) finishes.
-    Benchmarks call this before their first timed section so the
-    prewarm's task load cannot contend with measured queries; regular
-    engines never need to."""
-    if _PREWARM_STAMP is None:
-        return
-    with _PREWARM_LOCK:
-        t = _PREWARM_STAMP.get(spark)
-    if t not in (None, False):
-        t.join(timeout)
+    """No-op that returns at once. The engine no longer warms the dedup
+    path at start-up: a shard-sized minhash_lsh_pairs runs no Python
+    UDF, so a warm-up thread bought nothing and cost set-up seconds.
+    Kept for benchmark scripts that join the warm-up before timing."""
+    return None
 
 
 def canonicalize(df: DataFrame, cluster_col: str, quality_col: str,

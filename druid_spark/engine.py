@@ -260,11 +260,6 @@ class DruidSparkEngine:
         # no-op for every later engine on the same session.
         from druid_spark.functions.register import prewarm_druid_functions
         prewarm_druid_functions(self.spark)
-        # same overlap trick for the datapipe hot path: Python-UDF
-        # worker spawn + Arrow init + the large dedup codegen used to
-        # land on the first interactive minhash query (~5-6 s cold)
-        from druid_spark.datapipe.dedup import prewarm_datapipe
-        prewarm_datapipe(self.spark)
 
     # -------------------------------------------------------- public API
     def query(self, q: dict[str, Any]) -> DataFrame:

@@ -30,6 +30,7 @@ MiniKafkaBroker speaking the real protocol.
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Any
 
@@ -188,12 +189,35 @@ class StreamingIngest:
         (exactly-once = checkpoint offsets + idempotent write; the
         analog of Druid's transactional segment publish with offsets,
         SegmentTransactionalInsertAction.java:56). Plain parquet dirs —
-        no sink commit log — so handoff can move files freely."""
-        tail = self.tail
+        no sink commit log — so handoff can move files freely.
+
+        A replay of a batch whose write completed (its dir, in the tail
+        or in history, still holds every file its _FILES manifest names,
+        and the manifest was written by the same streaming query) writes
+        nothing: the replay carries the same offsets, so its rows are
+        already there, and an overwrite would delete files that a
+        concurrent view() has listed. A batch missing files is
+        rewritten. The query is told apart by the id Spark keeps in
+        <checkpoint>/metadata: a supervisor reset deletes the
+        checkpoint, and the new query numbers its batches from 0 again,
+        so a batch=<id> dir left by the old query holds other rows."""
+        tail, history, checkpoint = self.tail, self.history, self.checkpoint
 
         def write_batch(batch_df, batch_id):
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(tail, f"batch={batch_id}"))
+            name = f"batch={batch_id}"
+            run = _query_id(checkpoint)
+            if run is not None and any(
+                    _batch_complete(os.path.join(d, name), run)
+                    for d in (tail, history)):
+                return
+            out = os.path.join(tail, name)
+            batch_df.write.mode("overwrite").parquet(out)
+            # written after the data, so a manifest whose files all
+            # exist marks a whole batch
+            with open(os.path.join(out, _MANIFEST), "w") as fh:
+                fh.write("\n".join([run or ""] + [
+                    f for f in os.listdir(out)
+                    if not f.startswith(("_", "."))]))
 
         return write_batch
 
@@ -277,6 +301,36 @@ class StreamingIngest:
                 if os.path.exists(dest):
                     shutil.rmtree(dest)
                 shutil.move(os.path.join(self.tail, fn), dest)
+
+
+# names the streaming query and the data files of a completed
+# batch=<id> write; the leading _ hides it from Spark's reads and from
+# _has_committed
+_MANIFEST = "_FILES"
+
+
+def _query_id(checkpoint: str) -> str | None:
+    """The id of the streaming query that owns `checkpoint` (Spark
+    writes {"id": ...} to its metadata file when the query first
+    starts, and a restart on the same checkpoint keeps it), or None
+    when it cannot be read."""
+    try:
+        with open(os.path.join(checkpoint, "metadata")) as fh:
+            return json.loads(fh.readline())["id"]
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
+
+
+def _batch_complete(path: str, run: str) -> bool:
+    """True iff the batch dir `path` has a manifest written by the
+    streaming query `run` and every file it names."""
+    try:
+        with open(os.path.join(path, _MANIFEST)) as fh:
+            owner, *names = fh.read().split("\n")
+    except OSError:
+        return False
+    return owner == run and all(
+        os.path.exists(os.path.join(path, n)) for n in names if n)
 
 
 def _with_trigger(writer, trigger: dict | None):

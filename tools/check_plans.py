@@ -52,19 +52,23 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def jobs_of(spark, df) -> int:
-    """Spark jobs that streaming df's rows (toLocalIterator, as the
-    HTTP server does) runs."""
+def jobs_in(spark, run) -> int:
+    """Spark jobs that calling run() runs."""
     sc = spark.sparkContext
     group = f"plans-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "check_plans")
     try:
-        for _row in df.toLocalIterator():
-            pass
+        run()
         sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
         return len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def jobs_of(spark, df) -> int:
+    """Spark jobs that streaming df's rows (toLocalIterator, as the
+    HTTP server does) runs."""
+    return jobs_in(spark, lambda: list(df.toLocalIterator()))
 
 
 def formatted(df) -> str:
@@ -241,12 +245,35 @@ def main():
     check("kmv_bounded_build", df, ["Window"], ["collect_set"])
 
     # 11. MinHash LSH banding joins are equi-joins (hash-partitioned on
-    # (band, signature) — sub-quadratic at corpus scale)
-    from druid_spark.datapipe.dedup import minhash_lsh_pairs
+    # (band, signature) — sub-quadratic at corpus scale). The documents
+    # table is shard-sized, so a size constant of 0 forces this plan.
+    from druid_spark.datapipe import dedup
     docs = engine.catalog.table("documents")
-    df = minhash_lsh_pairs(docs)
-    check("minhash_equijoin", df, [],
-          ["CartesianProduct", "BroadcastNestedLoopJoin"])
+    small = dedup._MINHASH_DRIVER_MAX_BYTES
+    dedup._MINHASH_DRIVER_MAX_BYTES = 0
+    try:
+        check("minhash_equijoin", dedup.minhash_lsh_pairs(docs),
+              ["ShuffledHashJoin"],
+              ["CartesianProduct", "BroadcastNestedLoopJoin"])
+    finally:
+        dedup._MINHASH_DRIVER_MAX_BYTES = small
+
+    # 11b. under the constant, MinHash runs on the driver: the call's
+    # Arrow collect plus the result's collect run at most 2 Spark jobs,
+    # and the result is one partition
+    out = {}
+
+    def driver_pass():
+        out["df"] = dedup.minhash_lsh_pairs(docs)
+        out["rows"] = out["df"].collect()
+
+    jobs = jobs_in(spark, driver_pass)
+    parts = out["df"].rdd.getNumPartitions()
+    if jobs <= 2 and parts == 1:
+        print(f"PASS minhash_driver ({jobs} jobs, {len(out['rows'])} pairs)")
+    else:
+        failures.append("minhash_driver")
+        print(f"FAIL minhash_driver: {jobs} jobs, {parts} partitions")
 
     # 12. as-of join compiles to union + window (single shuffle), never
     # a nested-loop/cartesian product (queries/asof.py design)
