@@ -36,6 +36,7 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from druid_spark.cache import LockedLRU
 from druid_spark.granularity import (chunk_format, chunk_interval,
@@ -53,8 +54,9 @@ DEFAULT_TIME_COLUMNS = {
 SCAN_CACHE_ENTRIES = 64
 
 # A scan whose files are all local and total less than this many bytes
-# is read as one partition (see _sized). Every dashboard and ingest
-# input of perfbench is under 14 MB.
+# is read as one partition (see _sized), and such an input is written by
+# one task (TableService.write). Every dashboard and ingest input of
+# perfbench is under 14 MB.
 ONE_TASK_SCAN_BYTES = 32 << 20
 
 _EPOCH = _dt.datetime(1970, 1, 1)
@@ -222,7 +224,8 @@ class _Table(NamedTuple):
     path-backed table is read, its time timeline — the files `df` reads
     (recorded once, with inputFiles()), each file's size when all are
     local (local_sizes), each file's footer time bounds when known (see
-    _footer_bounds) and a reader giving `df` over a subset of the
+    _footer_bounds), the schema of a bare Parquet read (directory
+    columns included) and a reader giving `df` over a subset of the
     files. Scans are cut from one _Table, so everything they use
     belongs to the same registration."""
     reg: int
@@ -234,6 +237,7 @@ class _Table(NamedTuple):
     files: tuple[str, ...] | None = None
     sizes: dict[str, int] | None = None
     bounds: tuple | None = None
+    schema: StructType | None = None
     read: Callable[[list[str]], DataFrame] | None = None
     used: bool = True
 
@@ -364,6 +368,52 @@ def _part_predicate(column: str, pr) -> str:
                          + [f"{col} <= '{hi}'"] * (hi is not None))
             for lo, hi in pr]
     return " OR ".join(f"({a})" for a in arms) or "false"
+
+
+_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _dirs(root: str, path: str) -> list[tuple[str, str]]:
+    """The (column, value) directories between table directory `root`
+    and the file at local `path`, values with each digit as 0: a
+    value's shape decides the type Spark infers for its column."""
+    return [(c, re.sub(r"\d", "0", v)) for c, _eq, v in
+            (d.partition("=") for d in
+             os.path.relpath(path, root).split(os.sep)[:-1])]
+
+
+def _keeps_schema(old: _Table, path: str, files) -> bool:
+    """Whether a re-read of table directory `path` whose listing is
+    `files` (input-file URIs) may keep record `old`'s schema instead of
+    inferring it again: `old` read the same path, every file it read is
+    still listed, and every other file is a local one that Spark wrote
+    (its row metadata) with the stored data columns, by name and type in
+    order (nullability aside), under directories of the same columns and
+    value shapes. Inference could then not come out different."""
+    import pyarrow.parquet as pq
+    if (old.path != path or not old.files
+            or not all(f.startswith("file:") for f in files)):
+        return False
+    listed = {unquote(urlparse(f).path) for f in files}
+    known = {unquote(urlparse(f).path) for f in old.files}
+    if not known <= listed:
+        return False
+    root = os.path.abspath(path)
+    layout = _dirs(root, min(known))
+    keys = {c for c, _v in layout}
+    want = [(f.name, f.dataType.simpleString())
+            for f in old.schema.fields if f.name not in keys]
+    for f in listed - known:
+        if _dirs(root, f) != layout:
+            return False
+        try:
+            row = pq.read_metadata(f).metadata.get(_ROW_METADATA)
+            got = StructType.fromJson(json.loads(row))
+        except Exception:
+            return False  # not Spark's, or unreadable
+        if [(c.name, c.dataType.simpleString()) for c in got] != want:
+            return False
+    return True
 
 
 def _parquet_files(path: str):
@@ -588,13 +638,15 @@ class Catalog:
         files = tuple(sorted(df.inputFiles()))
         sizes = local_sizes(files)
         column = _time_source(raw.columns, df, t.time_column) if bare else None
+        schema = raw.schema
         return t._replace(
             df=df, files=files,
             sizes=None if sizes is None else dict(zip(files, sizes)),
             bounds=_footer_bounds(files, column, known,
                                   _utc_session(self.spark)),
+            schema=schema if bare else None,
             read=lambda fs: _normalize(
-                self.spark.read.schema(raw.schema).parquet(*fs),
+                self.spark.read.schema(schema).parquet(*fs),
                 t.time_column, nanos_path))
 
     def register_dir(self, data_dir: str,
@@ -637,17 +689,28 @@ class Catalog:
                granularity: str | None = None) -> None:
         """Publish the warehouse directory `path` as table `name`: the
         step every writer ends with, as Druid's all publish through
-        SegmentTransactionalInsertAction. `path` is read again and
-        published in one step with its partitioning: the `__dt` chunks
-        of the segment `granularity` (chunk_format; ALL has none), or,
-        for None, the table's registered partitioning. With no Parquet
-        file left the table is unregistered (drop_table)."""
+        SegmentTransactionalInsertAction. `path` is listed again (on
+        the driver, see session.RUNTIME_CONFS) and published in one step
+        with its partitioning: the `__dt` chunks of the segment
+        `granularity` (chunk_format; ALL has none), or, for None, the
+        table's registered partitioning. The read keeps the current
+        record's schema when the listing shows only added files of that
+        schema (_keeps_schema), so an append runs no Spark job; any
+        other change infers the schema again, as a fresh read would.
+        With no Parquet file left the table is unregistered
+        (drop_table)."""
         if next(_parquet_files(path), None) is None:
             self.drop_table(name)
             return
+        old = self._state.tables.get(name)
+        raw = None
+        if old is not None and old.used and old.schema is not None:
+            raw = self.spark.read.schema(old.schema).parquet(path)
+            if not _keeps_schema(old, path, raw.inputFiles()):
+                raw = None
         t = self._with_timeline(
             name, _Table(next(_REG_SERIALS), path=path),
-            self.spark.read.parquet(path))
+            self.spark.read.parquet(path) if raw is None else raw)
         fmt = granularity and chunk_format(granularity)
         part = ("__dt", fmt, granularity.lower()) if fmt else None
         self._publish(name, lambda old: t._replace(

@@ -55,6 +55,8 @@ _IDENT_RE = _re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 _LOOKUP_DOT_RE = _re.compile(r"\blookup\.([A-Za-z_]\w*)", _re.IGNORECASE)
 _CURRENT_TS_RE = _re.compile(r"\bCURRENT_TIMESTAMP\b", _re.IGNORECASE)
 _CURRENT_DATE_RE = _re.compile(r"\bCURRENT_DATE\b", _re.IGNORECASE)
+# a statement's view over a TABLE(EXTERN(...)) source (rewrite_extern)
+_EXTERN_VIEW_RE = _re.compile(r"\b__extern_\d+\b")
 _SQL_VIEWS_STAMP: "_weakref.WeakKeyDictionary[SparkSession, tuple[int, int]]" \
     = _weakref.WeakKeyDictionary()
 _SQL_LOOKUPS_STAMP: \
@@ -434,12 +436,8 @@ class DruidSparkEngine:
         steps 2-8 are Catalyst built-ins). INSERT INTO / REPLACE INTO ...
         PARTITIONED BY statements route to the ingestion writer
         (DruidSqlInsert/DruidSqlReplace — SURVEY §3.3)."""
-        from druid_spark.functions.register import register_druid_functions
-        from druid_spark.functions.sqlshim import rewrite_druid_sql
-        from druid_spark.ingest.sql_ingest import (parse_ingest_sql,
-                                                   rewrite_extern,
-                                                   run_export_sql,
-                                                   run_ingest_sql)
+        from druid_spark.ingest.sql_ingest import (rewrite_extern,
+                                                   run_export_sql)
         # Multi-statement SET context (SqlStatementFactory /
         # testMultiStatementSetsContext): leading `SET k = v;`
         # statements become query context for the trailing SELECT.
@@ -509,11 +507,26 @@ class DruidSparkEngine:
         m = _EXPLAIN_RE.match(text)
         if m:
             return self._explain(m.group("q"))
+        views: list[str] = []
         if "EXTERN" in text.upper():
             exported = run_export_sql(self, text)
             if exported is not None:
                 return exported
-            text = rewrite_extern(self, text)
+            text, views = rewrite_extern(self, text)
+        try:
+            return self._statement(text, set_ctx, task_id)
+        finally:
+            for view in views:
+                self.spark.catalog.dropTempView(view)
+
+    def _statement(self, text: str, set_ctx: dict[str, str],
+                   task_id: str | None) -> DataFrame:
+        """sql() of one statement, its context and EXTERN sources
+        resolved: an INSERT/REPLACE runs, a query is analyzed."""
+        from druid_spark.functions.register import register_druid_functions
+        from druid_spark.functions.sqlshim import rewrite_druid_sql
+        from druid_spark.ingest.sql_ingest import (parse_ingest_sql,
+                                                   run_ingest_sql)
         stmt = parse_ingest_sql(text)
         if stmt is not None:
             return run_ingest_sql(self, stmt, task_id=task_id)
@@ -649,6 +662,9 @@ class DruidSparkEngine:
             declared_json_cols={
                 c for cols in _jc_by_table.values()
                 for c, ty in cols.items() if ty == "COMPLEX<json>"})
+        # an EXTERN view lives for one statement: its plan never repeats
+        if _EXTERN_VIEW_RE.search(final):
+            return self._run_sql(final)
         # `SET useResultCache = true;` — the SQL spelling of the
         # result-level cache (ResultLevelCachingQueryRunner serves SQL
         # too), keyed on the rewritten statement + whole-table

@@ -28,6 +28,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from druid_spark import catalog
 from druid_spark import granularity as G
 from druid_spark.aggregations import AggCompiler
 from druid_spark.expr import compile_expr
@@ -287,9 +288,15 @@ class TableService:
             return
         out = df.withColumn("__dt", F.date_format(
             G.bucket(F.col("__time"), segment_granularity), fmt))
-        # shuffle rows to their partition so each time chunk is written
-        # by few tasks (avoids small-file explosion at scale)
-        out = out.repartition(F.col("__dt"))
+        sizes = catalog.local_sizes(df.inputFiles())
+        if sizes and sum(sizes) < catalog.ONE_TASK_SCAN_BYTES:
+            # a small local input is written by one task, still one file
+            # per chunk: the shuffle below would run as its own AQE job
+            out = out.coalesce(1)
+        else:
+            # shuffle rows to their partition so each time chunk is
+            # written by few tasks (avoids small-file explosion at scale)
+            out = out.repartition(F.col("__dt"))
         if cluster_by:
             # CLUSTERED BY (range shard-spec analog): sort rows within
             # each time chunk so parquet min/max stats prune on these

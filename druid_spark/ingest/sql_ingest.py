@@ -17,6 +17,7 @@ shard-spec analog, giving per-file min/max pruning on those columns).
 
 from __future__ import annotations
 
+import itertools
 import re
 import shutil
 from dataclasses import dataclass
@@ -37,9 +38,17 @@ _DRUID_TO_SPARK_TYPE = {
 }
 
 
-def rewrite_extern(engine, text: str) -> str:
+# EXTERN view names, unique in the process as a view must be to its
+# statement: a reused name let a plan-cache key or a concurrent
+# statement read another statement's source
+_EXTERN_VIEWS = itertools.count(1)
+
+
+def rewrite_extern(engine, text: str) -> tuple[str, list[str]]:
     """TABLE(EXTERN('<inputSource>', '<inputFormat>'[, '<signature>']))
-    → a temp view over the batch reader.
+    → a temp view over the batch reader; returns the rewritten text and
+    the views, which the caller drops once the statement has been
+    analyzed or written.
 
     Reference: sql/calcite/external/ExternalOperatorConversion.java +
     DruidExternTableMacro.java — MSQ's SQL-side external input. The
@@ -55,8 +64,8 @@ def rewrite_extern(engine, text: str) -> str:
 
     from druid_spark.ingest.batch import read_input
 
-    out = text
-    for i, m in enumerate(_EXTERN_RE.finditer(text)):
+    frames = []  # every input is read before any view exists
+    for m in _EXTERN_RE.finditer(text):
         src = json.loads(m.group("src").replace("''", "'"))
         fmt = json.loads(m.group("fmt").replace("''", "'"))
         df = read_input(engine.spark,
@@ -67,10 +76,13 @@ def rewrite_extern(engine, text: str) -> str:
                 F.col(c["name"]).cast(
                     _DRUID_TO_SPARK_TYPE.get(c["type"].lower(), "string"))
                 .alias(c["name"]) for c in cols])
-        view = f"__extern_{i}"
-        df.createOrReplaceTempView(view)
-        out = out.replace(m.group(0), view)
-    return out
+        frames.append((m.group(0), df))
+    out, views = text, []
+    for extern, df in frames:
+        views.append(f"__extern_{next(_EXTERN_VIEWS)}")
+        df.createOrReplaceTempView(views[-1])
+        out = out.replace(extern, views[-1])
+    return out, views
 
 
 _EXPORT_RE = re.compile(

@@ -8,6 +8,7 @@ Usage: python tools/check_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import uuid
@@ -510,6 +511,61 @@ def main():
         engine.catalog.drop_table("plans_big")
     finally:
         cat_mod.ONE_TASK_SCAN_BYTES = small
+
+    # 27. a small local INSERT writes in one Spark job with no exchange;
+    # above the constant (here: 0 bytes) the write keeps its shuffle by
+    # time chunk
+    def write_of(sql: str) -> tuple[int, str]:
+        """(jobs, physical plan) of the Parquet write running sql runs."""
+        store = spark._jsparkSession.sharedState().statusStore()
+
+        def last() -> int:
+            execs = store.executionsList()
+            return execs.apply(execs.size() - 1).executionId() \
+                if execs.size() else -1
+
+        seen = last()
+        engine.sql(sql)
+        execs = store.executionsList()
+        for i in range(execs.size()):
+            e = execs.apply(i)
+            plan = e.physicalPlanDescription()
+            if (e.executionId() > seen
+                    and "InsertIntoHadoopFsRelationCommand" in plan):
+                return e.jobs().size(), plan
+        return 0, ""
+
+    src = tempfile.mkdtemp(prefix="planswr_")
+    wh = tempfile.mkdtemp(prefix="planswh_")
+    try:
+        write_day_files(src)
+        engine.warehouse_dir = wh
+        source = json.dumps({"type": "local", "files": sorted(
+            os.path.join(src, f) for f in os.listdir(src))})
+
+        def insert(table: str) -> str:
+            return (f"INSERT INTO {table} SELECT ts AS __time, k, v FROM "
+                    f"TABLE(EXTERN('{source}', '{{\"type\": \"parquet\"}}')) "
+                    "PARTITIONED BY HOUR")
+
+        jobs, plan = write_of(insert("plans_wr_small"))
+        if jobs == 1 and "Exchange" not in plan:
+            print("PASS append_write_one_task")
+        else:
+            failures.append("append_write_one_task")
+            print(f"FAIL append_write_one_task: {jobs} jobs, "
+                  f"exchange {'Exchange' in plan}")
+        cat_mod.ONE_TASK_SCAN_BYTES = 0
+        jobs, plan = write_of(insert("plans_wr_big"))
+        if "Exchange" in plan and "hashpartitioning(__dt" in plan:
+            print("PASS append_write_large_shuffles")
+        else:
+            failures.append("append_write_large_shuffles")
+            print(f"FAIL append_write_large_shuffles: {jobs} jobs")
+    finally:
+        cat_mod.ONE_TASK_SCAN_BYTES = small
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(wh, ignore_errors=True)
 
     print(f"\n{'ALL PLAN CHECKS PASS' if not failures else failures}")
     return 1 if failures else 0
